@@ -4,7 +4,9 @@ one command.
 Reference shape (SURVEY.md section 3 EP1): 4 CSV re-reads -> 11 Airflow
 TaskGroups -> per-row transforms -> one INSERT per row into MSSQL,
 JSON/XCom at every edge. Here: one cached scan -> 15 lazy builders ->
-15 parquet writes; the only materializations are the sinks.
+15 parquet writes, one action per table. Each table's row count is
+observed on its write (``DataFrame.observe``), so nothing is read back,
+and the 15 writes run concurrently off the shared cached scan.
 
     python -m formula1_etl_analytics_project_spark.etl --input wide.csv --out /data/star
 
@@ -19,15 +21,19 @@ from __future__ import annotations
 
 import argparse
 import sys
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from formula1_etl_analytics_project_spark.plans.star import BUILDERS
 from formula1_etl_analytics_project_spark.session import get_spark
 from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
 from formula1_etl_analytics_project_spark.sources.sinks import write_parquet
 
-# Reference load order (FK-safe: dims -> hub -> facts), CompleteETL.py:1034-1042.
+# Report and CLI order: the reference's FK-safe load order (dims -> hub ->
+# facts, CompleteETL.py:1034-1042). The writes themselves run concurrently.
 LOAD_ORDER = [
     "date_dim",
     "location_dim",
@@ -54,20 +60,50 @@ def run_etl(
     register: bool = True,
 ) -> dict[str, int]:
     """Wide CSV -> 15 star-schema parquet tables. Returns row counts
-    per table (the write is the only action per table). With
-    ``register`` the written tables are exposed as temp views so
-    ``spark.sql`` works immediately (EP3 surface)."""
+    per table in ``LOAD_ORDER`` order.
+
+    One action per table: each builder's DataFrame carries an
+    ``Observation`` that counts the rows its parquet write emits. The
+    15 writes run concurrently from a thread pool off one cached scan;
+    each worker inherits the caller's job group and local properties
+    and describes its jobs as ``run_etl: write <table>``. The cache is
+    released on every exit. If a table fails, its error is re-raised and
+    no counts are returned. With ``register`` the written tables are
+    exposed as temp views once every write has finished, so ``spark.sql``
+    works immediately (EP3 surface)."""
+    sc = spark.sparkContext
     wide = read_wide_csv(spark, input_csv).cache()
-    counts: dict[str, int] = {}
-    for name in LOAD_ORDER:
-        df = BUILDERS[name](wide)
-        path = f"{out_dir}/{name}"
-        write_parquet(df, path, mode="overwrite")
-        loaded = spark.read.parquet(path)
-        counts[name] = loaded.count()
-        if register:
-            loaded.createOrReplaceTempView(name)
-    wide.unpersist()
+
+    def load(name: str) -> int:
+        sc.setJobDescription(f"run_etl: write {name}")
+        obs = Observation(name)
+        write_parquet(
+            BUILDERS[name](wide).observe(obs, F.count(F.lit(1)).alias("rows")),
+            f"{out_dir}/{name}",
+            mode="overwrite",
+        )
+        return obs.get["rows"]
+
+    try:
+        with ThreadPoolExecutor(min(len(LOAD_ORDER), sc.defaultParallelism)) as pool:
+            # Wrapped per task: each task gets its own copy of the caller's
+            # local properties, which its setJobDescription then edits.
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(load), name)
+                for name in LOAD_ORDER
+            ]
+            wait(futures, return_when=FIRST_EXCEPTION)
+            # On a failure, drop the writes not yet started. They queue after
+            # every started one, so result() below meets the failure before
+            # any CancelledError.
+            for f in futures:
+                f.cancel()
+            counts = {name: f.result() for name, f in zip(LOAD_ORDER, futures)}
+    finally:
+        wide.unpersist()
+    if register:
+        for name in LOAD_ORDER:
+            spark.read.parquet(f"{out_dir}/{name}").createOrReplaceTempView(name)
     return counts
 
 

@@ -9,6 +9,7 @@ Usage: python scripts/check_new.py entry1 entry2 ... [--sf=SF_DIR]
 """
 
 import sys
+import tempfile
 
 sys.path.insert(0, "/root/repo")
 
@@ -34,6 +35,8 @@ def main():
     for prep in _ORACLE_PREP:
         prep()
     con = duckdb.connect()
+    # spill to a private temp dir, not ./.tmp of the working directory
+    con.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_spill_')}'")
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 

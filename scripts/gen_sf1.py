@@ -32,6 +32,7 @@ Usage: python scripts/gen_sf1.py [--src=/root/testdata/sf0.1]
 
 import pathlib
 import sys
+import tempfile
 
 import duckdb
 
@@ -49,6 +50,8 @@ def main() -> None:
     out = pathlib.Path(OUT)
     out.mkdir(parents=True, exist_ok=True)
     con = duckdb.connect()
+    # spill to a private temp dir, not ./.tmp of the working directory
+    con.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_spill_')}'")
     for t in (
         "region",
         "nation",

@@ -14,6 +14,7 @@ Usage: python scripts/refresh_parity.py [--sf=/root/testdata/sf0.1]
 
 import json
 import sys
+import tempfile
 
 sys.path.insert(0, "/root/repo")
 
@@ -39,6 +40,8 @@ def main():
 
     spark = get_spark()
     con = duckdb.connect()
+    # spill to a private temp dir, not ./.tmp of the working directory
+    con.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_spill_')}'")
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     qs, osql = e.queries(), e.oracle_sql()

@@ -35,6 +35,7 @@ Usage:
 
 import json
 import sys
+import tempfile
 import threading
 
 sys.path.insert(0, "/root/repo")
@@ -71,6 +72,8 @@ def main():
 
     spark = get_spark()
     con = duckdb.connect()
+    # spill to a private temp dir, not ./.tmp of the working directory
+    con.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_spill_')}'")
     con.execute("SET memory_limit='24GB'")
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

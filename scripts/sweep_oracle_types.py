@@ -27,6 +27,7 @@ Prints one line per offending (entry, column) and exits non-zero if any.
 """
 
 import sys
+import tempfile
 
 sys.path.insert(0, "/root/repo")
 
@@ -104,6 +105,8 @@ def main():
     for prep in _ORACLE_PREP:
         prep()
     con = duckdb.connect()
+    # spill to a private temp dir, not ./.tmp of the working directory
+    con.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_spill_')}'")
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     bad = sweep(con, CATALOG)

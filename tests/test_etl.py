@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
-import pytest
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
 
-from formula1_etl_analytics_project_spark.etl import LOAD_ORDER, run_etl
+import pytest
+from pyspark.sql import functions as F
+
+from formula1_etl_analytics_project_spark.etl import BUILDERS, LOAD_ORDER, run_etl
+from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
 from tests.f1_fixture import write_csv
 
 
@@ -13,13 +18,58 @@ def etl_out(spark, tmp_path_factory):
     csv_path = write_csv(str(tmp_path_factory.mktemp("wide") / "wide.csv"))
     out = str(tmp_path_factory.mktemp("star_out"))
     counts = run_etl(spark, csv_path, out)
-    return out, counts
+    return out, counts, csv_path
 
 
 def test_all_tables_written_nonempty(spark, etl_out):
-    out, counts = etl_out
-    assert set(counts) == set(LOAD_ORDER)
+    out, counts, _ = etl_out
+    assert list(counts) == LOAD_ORDER
     assert all(n > 0 for n in counts.values()), counts
+
+
+def test_counts_and_content_match_serial_builders(spark, etl_out):
+    """Each observed count is the row count of the table on disk, and a
+    star table must not depend on run concurrency: every table the
+    concurrent load wrote equals its builder run alone over a fresh,
+    uncached scan."""
+    out, counts, csv_path = etl_out
+    wide = read_wide_csv(spark, csv_path)
+    for name in LOAD_ORDER:
+        written = spark.read.parquet(f"{out}/{name}")
+        serial = BUILDERS[name](wide)
+        assert written.columns == serial.columns, name
+        rows = written.collect()
+        assert counts[name] == len(rows), name
+        assert Counter(rows) == Counter(serial.collect()), name
+
+
+@pytest.mark.parametrize("where", ["builder", "job"])
+def test_failed_write_is_reraised_and_releases_the_cache(
+    spark, etl_out, tmp_path_factory, monkeypatch, where
+):
+    """One table failing, either while its plan is built on the driver
+    or inside its Spark job, fails the whole load loudly: the error is
+    re-raised (no partial counts), nothing hangs, and the cached scan is
+    released."""
+    _, _, csv_path = etl_out
+    laps = BUILDERS["laps"]
+
+    def broken(wide):
+        if where == "builder":
+            raise RuntimeError("boom: laps builder")
+        return laps(wide).withColumn("boom", F.raise_error(F.lit("boom: laps job")))
+
+    monkeypatch.setitem(BUILDERS, "laps", broken)
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    pool = ThreadPoolExecutor(1)
+    try:
+        load = pool.submit(run_etl, spark, csv_path, str(tmp_path_factory.mktemp("broken")))
+        with pytest.raises(Exception, match=f"boom: laps {where}"):
+            load.result(timeout=300)
+    finally:
+        pool.shutdown(wait=False)
+    assert jsc.getPersistentRDDs().size() == persisted
 
 
 def test_sql_surface_over_loaded_star(spark, etl_out):
@@ -27,14 +77,14 @@ def test_sql_surface_over_loaded_star(spark, etl_out):
     n = spark.sql(
         "SELECT COUNT(*) AS n FROM results JOIN race ON results.raceId = race.race_id"
     ).collect()[0]["n"]
-    _, counts = etl_out
+    _, counts, _ = etl_out
     assert n == counts["results"]
 
 
 def test_rerun_is_idempotent(spark, etl_out, tmp_path_factory):
     """Overwrite-mode reload (the reference's S6 DELETE-reset) yields
     identical counts on rerun."""
-    out, counts = etl_out
+    out, counts, _ = etl_out
     csv_path = write_csv(str(tmp_path_factory.mktemp("wide2") / "wide.csv"))
     counts2 = run_etl(spark, csv_path, out)
     assert counts2 == counts
@@ -73,7 +123,7 @@ def test_star_loads_into_jdbc_database(spark, etl_out, tmp_path_factory):
     MSSQL FK constraints (DDL Final.sql)."""
     from formula1_etl_analytics_project_spark.sources.sinks import write_jdbc
 
-    out, counts = etl_out
+    out, counts, _ = etl_out
     url = f"jdbc:derby:{tmp_path_factory.mktemp('derby_star')}/stardb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     for t in ("race", "driver", "results"):  # dims -> fact, FK order
