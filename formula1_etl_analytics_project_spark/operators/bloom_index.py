@@ -51,6 +51,8 @@ import posixpath as _pp
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from formula1_etl_analytics_project_spark.sources.sinks import in_partitions
+
 BLOOM_DIR = "_key_blooms"
 META_DIR = "_key_blooms_meta"
 
@@ -189,9 +191,10 @@ def build_key_bloom_index(
 def update_key_bloom_index(
     spark, path: str, merged: DataFrame, keys: list[str], partition_col: str
 ) -> None:
-    """Refresh the touched partitions' filters from the merge result —
-    same dynamic partition overwrite as the data write, so the sidecar
-    stays consistent partition-by-partition."""
+    """Refresh the touched partitions' filters from ``merged`` (the
+    touched partitions' rows) — same per-write dynamic partition
+    overwrite as the data write, so the sidecar stays consistent
+    partition-by-partition and the session conf is never changed."""
     meta = read_meta(spark, path)
     if meta is None:
         raise FileNotFoundError(
@@ -199,14 +202,12 @@ def update_key_bloom_index(
         )
     nbits, nhashes = meta
     words = bloom_words(merged, keys, partition_col, nbits, nhashes)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        words.write.mode("overwrite").partitionBy(partition_col).parquet(
-            _bloom_path(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        words.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(_bloom_path(path))
+    )
 
 
 def _all_bits_present(
@@ -220,8 +221,15 @@ def _all_bits_present(
     (a missing word row means the whole 64-bit word is zero — a miss)
     and keep groups where every position hit. Robust to two hashes
     landing on the same position: both probe rows just hit the same
-    bit."""
-    joined = probes.join(words, on=join_cols, how="left")
+    bit. The join is null-safe: the null partition is a partition."""
+    words = words.select(
+        *[F.col(c).alias(f"__w_{c}") for c in join_cols], "word"
+    )
+    joined = probes.join(
+        words,
+        on=[F.col(c).eqNullSafe(F.col(f"__w_{c}")) for c in join_cols],
+        how="left",
+    )
     hit = F.when(
         F.col("word").isNotNull()
         & (F.col("mask").bitwiseAND(F.col("word")) == F.col("mask")),
@@ -265,7 +273,7 @@ def probe_moved_keys(
     ikeys = incoming.select(*keys, partition_col).distinct()
     probes = _position_rows(ikeys, keys, nbits, nhashes)
     other_words = spark.read.parquet(_bloom_path(path)).filter(
-        ~F.col(partition_col).isin(parts)
+        ~in_partitions(partition_col, parts)
     )
     # stage 2: one merged "anywhere-else" filter (distributed OR)
     merged_words = other_words.groupBy("word_idx").agg(
@@ -308,9 +316,10 @@ def probe_moved_keys(
         )
     confirmed = (
         spark.read.parquet(path)
-        .filter(F.col(partition_col).isin(suspect_parts))
-        .select(*keys, F.col(partition_col).alias("__old_part"))
-        .join(suspect, on=[*keys, "__old_part"], how="inner")
+        .filter(in_partitions(partition_col, suspect_parts))
+        .select(*keys, F.col(partition_col).alias("__found_part"))
+        .join(suspect, on=keys, how="inner")
+        .filter(F.col("__found_part").eqNullSafe(F.col("__old_part")))
     )
     return confirmed.select(
         *keys,

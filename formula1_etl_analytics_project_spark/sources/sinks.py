@@ -20,7 +20,7 @@ the merge key turns that into a shuffle-free join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def write_parquet(
@@ -141,9 +141,7 @@ def upsert(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    survivors = existing.join(
-        incoming.select(*keys).distinct(), on=keys, how="left_anti"
-    )
+    survivors = existing.join(incoming.select(*keys), on=keys, how="left_anti")
     return survivors.unionByName(incoming)
 
 
@@ -539,17 +537,25 @@ def upsert_parquet_partitioned(
     with a partition-PRUNED exact scan of just the suspect partitions.
     The index must exist (build_key_bloom_index, a one-time full-key
     scan); this function keeps it fresh by rebuilding the touched
-    partitions' filters from the merge result after the data write.
+    partitions' filters from those partitions, read back after the
+    data write.
 
-    Mechanics: the affected-partition list comes from the incoming
-    batch (one tiny distinct - cardinality = touched partitions, e.g.
-    days, NOT rows); the existing side is read WITH that partition
-    filter (partition pruning - the scan never touches other
-    directories); the merge result is localCheckpoint-materialized,
-    then written with dynamic partition overwrite, which replaces
-    exactly the partitions present in the result. Commit is per
-    partition directory, so the non-atomicity window of
-    ``upsert_parquet`` shrinks to the touched partitions.
+    Mechanics: the path is read once, for both the pruned existing
+    side and the moved-key scan; the table is new only when the path
+    does not exist, so an unreadable snapshot fails the merge. One
+    aggregate of the batch names the touched partitions (null-safe;
+    cardinality = partitions, e.g. days, NOT rows) and the exact check
+    is one collected join. The result is repartitioned by
+    ``partition_col`` - one file per touched partition - and written
+    with a per-write dynamic partition overwrite (the session conf is
+    left alone). No checkpoint: the write stages its files and swaps
+    each touched partition directory in only at job commit, after all
+    reads of the old files, so even a batch derived from the table is
+    safe. An existing-table merge runs about 8 Spark jobs: schema
+    inference, the partition aggregate, and the moved-key join and the
+    write with their shuffle stages. Commit is per partition
+    directory, so the non-atomicity window of ``upsert_parquet``
+    shrinks to the touched partitions.
 
     ``evolve_schema`` (Delta ``mergeSchema``-on-MERGE twin): the
     incoming batch may carry columns the snapshot lacks (and vice
@@ -561,7 +567,9 @@ def upsert_parquet_partitioned(
     pattern). Off by default: schema drift in a strict pipeline
     should fail loudly.
     """
-    if check_moved_keys == "bloom" and partition_col not in keys:
+    if partition_col in keys:
+        check_moved_keys = False
+    if check_moved_keys == "bloom":
         from formula1_etl_analytics_project_spark.operators import (
             bloom_index as _bi,
         )
@@ -573,10 +581,10 @@ def upsert_parquet_partitioned(
                 f"partition_col, expected_keys_per_partition) once "
                 f"(for a brand-new table, after the first upsert)"
             )
-    parts = [
-        r[0] for r in incoming.select(partition_col).distinct().collect()
-    ]
-    try:
+    merged = incoming
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(Path(path)):
         # Under evolve_schema the lake may already be mixed-schema
         # from a PRIOR evolving merge (only touched partitions carry
         # new columns). A plain read picks its schema from an
@@ -585,80 +593,75 @@ def upsert_parquet_partitioned(
         # would rewrite its partitions with the stored values
         # NULLed out - silent data loss. mergeSchema unifies the
         # footers so previously-evolved columns always survive.
-        existing = (
-            spark.read.option("mergeSchema", evolve_schema)
-            .parquet(path)
-            .filter(F.col(partition_col).isin(parts))
+        snapshot = spark.read.option("mergeSchema", evolve_schema).parquet(
+            path
         )
-        existing.head(1)
-    except Exception:
-        existing = None
-    if (
-        check_moved_keys
-        and existing is not None
-        and partition_col not in keys
-    ):
-        incoming_keys = incoming.select(*keys, partition_col).distinct()
-        if check_moved_keys == "bloom":
-            from formula1_etl_analytics_project_spark.operators import (
-                bloom_index as _bi,
-            )
-
-            # within the partitions this merge already scans, check
-            # exactly (no extra IO); everywhere else, via the index
-            snapshot_keys = existing.select(*keys, partition_col)
-            moved_outside = _bi.probe_moved_keys(
-                spark, path, incoming, keys, partition_col
-            ).withColumnRenamed("suspect_partition", "__old_part")
-        else:
-            snapshot_keys = spark.read.parquet(path).select(
-                *keys, partition_col
-            )
-            moved_outside = None
-        moved = (
-            snapshot_keys.withColumnRenamed(partition_col, "__old_part")
-            .join(incoming_keys, on=keys, how="inner")
-            .filter(F.col("__old_part") != F.col(partition_col))
-            .select(*keys, "__old_part", partition_col)
+        # collect_set drops nulls, so the null partition is flagged apart
+        parts, has_null = incoming.agg(
+            F.collect_set(partition_col), F.bool_or(F.isnull(partition_col))
+        ).head()
+        touched = in_partitions(
+            partition_col, [*parts, None] if has_null else parts
         )
-        if moved_outside is not None:
-            moved = moved.unionByName(
-                moved_outside.select(*keys, "__old_part", partition_col)
+        existing = snapshot.filter(touched)
+        if check_moved_keys:
+            if check_moved_keys == "bloom":
+                # within the partitions this merge already scans, check
+                # exactly (no extra IO); everywhere else, via the index
+                snapshot_keys = existing.select(*keys, partition_col)
+            else:
+                snapshot_keys = snapshot.select(*keys, partition_col)
+            moved = (
+                snapshot_keys.withColumnRenamed(partition_col, "__old_part")
+                .join(incoming.select(*keys, partition_col), on=keys)
+                .filter(~F.col("__old_part").eqNullSafe(F.col(partition_col)))
+                .select(*keys, "__old_part", partition_col)
             )
-        n_moved = moved.limit(1).count()
-        if n_moved:
-            sample = moved.head(5)
-            raise ValueError(
-                "upsert_parquet_partitioned: incoming batch moves key(s) "
-                f"across partitions (e.g. {sample}); dynamic overwrite "
-                "would duplicate them. Delete/migrate the old rows first "
-                "or include the partition column in the merge keys."
-            )
-    merged = (
-        incoming
-        if existing is None
-        else upsert(
+            if check_moved_keys == "bloom":
+                moved = moved.unionByName(
+                    _bi.probe_moved_keys(
+                        spark, path, incoming, keys, partition_col
+                    )
+                    .withColumnRenamed("suspect_partition", "__old_part")
+                    .select(*keys, "__old_part", partition_col)
+                )
+            moved_rows = moved.collect()
+            if moved_rows:
+                raise ValueError(
+                    "upsert_parquet_partitioned: incoming batch moves key(s) "
+                    f"across partitions (e.g. {moved_rows[:5]}); dynamic "
+                    "overwrite would duplicate them. Delete/migrate the old "
+                    "rows first or include the partition column in the merge "
+                    "keys."
+                )
+        merged = upsert(
             existing,
             incoming,
             keys,
             order_col=order_col,
             evolve_schema=evolve_schema,
         )
+    (
+        merged.repartition(partition_col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
     )
-    # materialize before overwriting the files the plan reads
-    merged = merged.localCheckpoint()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if check_moved_keys == "bloom" and partition_col not in keys:
-        from formula1_etl_analytics_project_spark.operators import (
-            bloom_index as _bi,
-        )
+    if check_moved_keys == "bloom":
+        # `merged` would now re-read the files the write just swapped
+        # in, so the index is fed from the touched partitions on disk
+        written = spark.read.parquet(path).filter(touched)
+        _bi.update_key_bloom_index(spark, path, written, keys, partition_col)
 
-        _bi.update_key_bloom_index(spark, path, merged, keys, partition_col)
+
+def in_partitions(partition_col: str, values: list) -> Column:
+    """Null-safe ``partition_col IN values``: a None in ``values``
+    matches the null partition, which a plain ``isin`` never does, and
+    the result is never null, so its negation is null-safe too."""
+    col = F.col(partition_col)
+    cond = col.isin([v for v in values if v is not None])
+    return cond | col.isNull() if None in values else cond & col.isNotNull()
 
 
 def compact_parquet(

@@ -276,3 +276,209 @@ def test_partitioned_upsert_second_evolving_merge_preserves_values(
         for r in merged.filter(F.col("k").isin(10, 11, 60)).collect()
     }
     assert got == {10: "x", 11: "y", 60: None}
+
+
+# ---------------------------------------------------------------------------
+# Merge mechanics: file layout, self-derived batches, loud failures,
+# null partitions, and the session conf
+# ---------------------------------------------------------------------------
+
+
+def _parts(spark, rows, path):
+    """Write ``rows`` of (k, part, v) partitioned by ``part``, several
+    files per partition, and return the path."""
+    base = spark.createDataFrame(rows, "k long, part string, v double")
+    write_parquet(base.repartition(4), path, partition_by=["part"])
+    return path
+
+
+def _snapshot(spark, path):
+    return sorted(
+        (r["k"], r["part"], r["v"]) for r in spark.read.parquet(path).collect()
+    )
+
+
+def test_partitioned_upsert_writes_one_file_per_touched_partition(
+    spark, tmp_path
+):
+    path = _parts(
+        spark,
+        [(i, "ABC"[i % 3], float(i)) for i in range(90)],
+        str(tmp_path / "snap"),
+    )
+    assert len(_files(path, "part=A")) > 1
+    before_c = _files(path, "part=C")
+    incoming = spark.createDataFrame(
+        [(0, "A", -1.0), (1, "B", -1.0), (500, "B", 5.0)],
+        "k long, part string, v double",
+    )
+    upsert_parquet_partitioned(
+        spark, incoming, path, keys=["k"], partition_col="part"
+    )
+    for part in ("part=A", "part=B"):
+        names = [os.path.basename(f) for f in _files(path, part)]
+        assert len(names) == 1 and names[0].startswith("part-"), names
+    assert _files(path, "part=C") == before_c
+    assert spark.read.parquet(path).count() == 91
+
+
+def test_partitioned_upsert_batch_derived_from_the_table(spark, tmp_path):
+    """The batch reads the very files the merge overwrites: the write
+    swaps partitions in only at commit, after every read is done."""
+    path = _parts(
+        spark,
+        [(i, "AB"[i % 2], float(i)) for i in range(100)],
+        str(tmp_path / "snap"),
+    )
+    incoming = (
+        spark.read.parquet(path)
+        .filter(F.col("k") % 10 == 0)
+        .withColumn("v", F.col("v") + 1000.0)
+    )
+    upsert_parquet_partitioned(
+        spark, incoming, path, keys=["k"], partition_col="part"
+    )
+    after = spark.read.parquet(path)
+    assert after.count() == 100
+    assert after.agg(F.sum("v")).head()[0] == sum(range(100)) + 10 * 1000.0
+    assert {
+        r["k"]: r["v"] for r in after.filter(F.col("k") % 10 == 0).collect()
+    } == {k: k + 1000.0 for k in range(0, 100, 10)}
+
+
+def test_partitioned_upsert_unreadable_snapshot_raises_and_keeps_rows(
+    spark, tmp_path
+):
+    """A snapshot that exists but cannot be read is not a new table:
+    the merge must fail before its write commits, not overwrite the
+    touched partition with the batch alone."""
+    import pytest
+
+    path = str(tmp_path / "snap")
+    write_parquet(
+        spark.createDataFrame(
+            [(i, "A" if i < 50 else "B", float(i)) for i in range(100)],
+            "k long, part string, v double",
+        ),
+        path,
+        partition_by=["part"],
+    )
+    garbage = os.path.join(path, "part=A", "part-99999-garbage.parquet")
+    with open(garbage, "wb") as f:
+        f.write(os.urandom(200_000))
+    incoming = spark.createDataFrame(
+        [(1, "A", -1.0)], "k long, part string, v double"
+    )
+    for check in (True, False):
+        with pytest.raises(Exception):
+            upsert_parquet_partitioned(
+                spark, incoming, path, keys=["k"], partition_col="part",
+                check_moved_keys=check,
+            )
+    os.remove(garbage)
+    assert _snapshot(spark, path) == [
+        (i, "A" if i < 50 else "B", float(i)) for i in range(100)
+    ]
+
+
+def test_partitioned_upsert_null_partition(spark, tmp_path):
+    """Rows whose partition value is null live in one (default-named)
+    partition; a merge must match it like any other partition value."""
+    import pytest
+
+    path = _parts(
+        spark, [(1, "A", 1.0), (2, None, 2.0), (3, None, 3.0)],
+        str(tmp_path / "snap"),
+    )
+    update = spark.createDataFrame(
+        [(2, None, 20.0)], "k long, part string, v double"
+    )
+    upsert_parquet_partitioned(
+        spark, update, path, keys=["k"], partition_col="part"
+    )
+    assert _snapshot(spark, path) == [
+        (1, "A", 1.0), (2, None, 20.0), (3, None, 3.0)
+    ]
+    for k, part in ((3, "A"), (1, None)):  # out of / into the null partition
+        mover = spark.createDataFrame(
+            [(k, part, -1.0)], "k long, part string, v double"
+        )
+        with pytest.raises(ValueError, match="across partitions"):
+            upsert_parquet_partitioned(
+                spark, mover, path, keys=["k"], partition_col="part"
+            )
+    assert _snapshot(spark, path) == [
+        (1, "A", 1.0), (2, None, 20.0), (3, None, 3.0)
+    ]
+
+
+def test_bloom_mode_detects_moves_across_the_null_partition(spark, tmp_path):
+    import pytest
+
+    from formula1_etl_analytics_project_spark.operators import bloom_index as bi
+
+    path = _parts(
+        spark,
+        [(i, [None, "A", "B"][i % 3], float(i)) for i in range(30)],
+        str(tmp_path / "snap"),
+    )
+    bi.build_key_bloom_index(
+        spark, path, ["k"], "part", expected_keys_per_partition=10
+    )
+    # k=0 lives in the null partition, k=1 in A
+    for k, part in ((0, "B"), (1, None)):
+        mover = spark.createDataFrame(
+            [(k, part, -1.0)], "k long, part string, v double"
+        )
+        with pytest.raises(ValueError, match="moves key"):
+            upsert_parquet_partitioned(
+                spark, mover, path, keys=["k"], partition_col="part",
+                check_moved_keys="bloom",
+            )
+    assert spark.read.parquet(path).count() == 30
+
+
+def test_merges_leave_the_session_overwrite_mode_alone(
+    spark, tmp_path, monkeypatch
+):
+    """Both merge paths overwrite partitions dynamically through a
+    per-write option. Setting and restoring the session conf instead
+    would race with other threads planning a static overwrite."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from formula1_etl_analytics_project_spark.operators import bloom_index as bi
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        sets.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    try:
+        path = _parts(
+            spark,
+            [(i, "ABC"[i % 3], float(i)) for i in range(30)],
+            str(tmp_path / "snap"),
+        )
+        bi.build_key_bloom_index(
+            spark, path, ["k"], "part", expected_keys_per_partition=10
+        )
+        for mode in (True, "bloom"):
+            batch = spark.createDataFrame(
+                [(0, "A", -1.0)], "k long, part string, v double"
+            )
+            upsert_parquet_partitioned(
+                spark, batch, path, keys=["k"], partition_col="part",
+                check_moved_keys=mode,
+            )
+        assert key not in sets
+        assert spark.conf.get(key) == "static"
+        # the overwrites stayed dynamic: B and C survived
+        assert spark.read.parquet(path).count() == 30
+    finally:
+        spark.conf.set(key, prev)
