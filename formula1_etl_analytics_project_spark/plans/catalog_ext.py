@@ -2711,16 +2711,18 @@ GROUP BY o_orderstatus
     gate_priority=True,
 )
 def q_upsert_versioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crash-safe versioned snapshot store through a real two-batch
-    round-trip: base orders seed version 1, a batch bumping every 300th
-    order's price merges into version 2 (write-new-then-repoint - no
-    delete-before-write window, see sources.sinks.upsert_parquet_
-    versioned), and the final per-status totals read via read_snapshot
+    """The crash-safe commit-log snapshot store through a real
+    two-batch round-trip: base orders seed commit 1, a batch bumping
+    every 300th order's price merges into commit 2 (a new snapshot dir
+    published by an atomically linked commit file - no
+    delete-before-write window, see sources.sinks.commit_log_upsert),
+    and the final per-status totals read via read_committed_snapshot
     must equal the oracle's base-plus-updates restatement."""
     import shutil as _shutil
 
     from formula1_etl_analytics_project_spark.sources.sinks import (
-        upsert_parquet_versioned,
+        commit_log_upsert,
+        read_committed_snapshot,
     )
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -2730,11 +2732,12 @@ def q_upsert_versioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh store per call: the entry checks the two-batch merge, so the
     # starting state must be empty, not a previous run's snapshot
     _shutil.rmtree(store, ignore_errors=True)
-    upsert_parquet_versioned(spark, orders, store, keys=["o_orderkey"])
+    commit_log_upsert(spark, orders, store, keys=["o_orderkey"])
     incoming = orders.filter(F.col("o_orderkey") % 300 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 5000
     )
-    snap = upsert_parquet_versioned(spark, incoming, store, keys=["o_orderkey"])
+    commit_log_upsert(spark, incoming, store, keys=["o_orderkey"])
+    snap = read_committed_snapshot(spark, store)
     return snap.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         _dsum(F.col("o_totalprice"), "total_price"),
@@ -3181,17 +3184,19 @@ def q_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness gate: a base snapshot of every event arrives in early
     micro-batches, then an update wave (every 7th event with a doubled
     value) arrives in later ones; ``incremental_upsert_stream`` merges
-    each micro-batch into the crash-safe versioned snapshot store
-    (write-new-then-repoint, streaming/pipeline.py), and the final
-    snapshot read through ``read_snapshot`` must equal base-with-
-    updates-applied. File mtimes are pinned so the file source's
+    each micro-batch into the crash-safe commit-log snapshot store
+    (streaming/pipeline.py), and the final snapshot read through
+    ``read_committed_snapshot`` must equal base-with-updates-applied.
+    File mtimes are pinned so the file source's
     (modTime, path) ordering replays base strictly before updates -
     the merge itself needs no ordering hints because each wave is
     key-unique per file. Doubling a float is exact in binary, so the
     oracle is bit-identical."""
     import time as _time
 
-    from formula1_etl_analytics_project_spark.sources.sinks import read_snapshot
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        read_committed_snapshot,
+    )
     from formula1_etl_analytics_project_spark.streaming.pipeline import (
         incremental_upsert_stream,
     )
@@ -3242,7 +3247,7 @@ def q_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = os.path.join(stage, f"snap_{uuid.uuid4().hex[:8]}")
     q = incremental_upsert_stream(stream, snap, keys=["event_id"])
     q.awaitTermination()
-    return read_snapshot(spark, snap).select(
+    return read_committed_snapshot(spark, snap).select(
         "event_id", "event_type", F.col("value").alias("value_final")
     )
 

@@ -1087,11 +1087,11 @@ def q_stream_exactly_once_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 350th key), then epoch 1 is REPLAYED with corrupted contents
     (every price zeroed) - the crash-recovery scenario where the
     foreachBatch checkpoint lags the sink commit. merge_epoch_batch
-    must skip the replay (epoch already committed atomically with the
-    snapshot pointer), so the final totals equal base-plus-one-update
-    and the corrupted replay leaves NO trace. The oracle restates the
-    expected final state plus the applied/skipped ledger; any
-    double-apply or corruption flips the value hash.
+    must skip the replay (epoch already committed in the commit file
+    that published the snapshot), so the final totals equal
+    base-plus-one-update and the corrupted replay leaves NO trace. The
+    oracle restates the expected final state plus the applied/skipped
+    ledger; any double-apply or corruption flips the value hash.
     """
     import shutil as _shutil
 
@@ -1099,7 +1099,7 @@ def q_stream_exactly_once_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stage_dir,
     )
     from formula1_etl_analytics_project_spark.sources.sinks import (
-        read_snapshot,
+        read_committed_snapshot,
     )
     from formula1_etl_analytics_project_spark.streaming.pipeline import (
         merge_epoch_batch,
@@ -1122,7 +1122,7 @@ def q_stream_exactly_once_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied += was_applied
     skipped += not was_applied
 
-    snap = read_snapshot(spark, store)
+    snap = read_committed_snapshot(spark, store)
     return snap.agg(
         F.count("*").alias("n_rows"),
         F.sum(F.col("o_totalprice").cast("decimal(30,4)"))

@@ -4,10 +4,7 @@ from formula1_etl_analytics_project_spark.sources.readers import (
     read_wide_csv,
     register_views,
 )
-from formula1_etl_analytics_project_spark.sources.sinks import (
-    upsert_parquet,
-    write_parquet,
-)
+from formula1_etl_analytics_project_spark.sources.sinks import write_parquet
 
 __all__ = [
     "read_table",
@@ -15,5 +12,4 @@ __all__ = [
     "register_views",
     "load_all",
     "write_parquet",
-    "upsert_parquet",
 ]

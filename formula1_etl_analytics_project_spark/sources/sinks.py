@@ -12,6 +12,14 @@ Reference behavior being replaced (SURVEY.md section 2.1/2.4):
     parquet (no Delta in this image) the merge materializes a new
     snapshot; on Delta/Iceberg the same logical plan becomes MERGE.
 
+Two merge targets: a year-partitioned fact merges in place by dynamic
+partition overwrite (``upsert_parquet_partitioned``); every
+whole-table snapshot goes through the commit log
+(``commit_log_upsert`` / ``read_committed_snapshot``: immutable
+snapshot dirs, one atomically linked commit file each, time travel,
+no lost updates). A streaming merge's epoch is written into its
+commit file, which is what makes ``merge_epoch_batch`` exactly-once.
+
 Scale notes: ``partition_by`` should be a low-cardinality natural key
 (e.g. year) so 100 TB writes produce prunable directories; the upsert
 shuffles both sides by the key - at scale, bucketing the base table on
@@ -19,6 +27,8 @@ the merge key turns that into a shuffle-free join.
 """
 
 from __future__ import annotations
+
+import posixpath
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -132,17 +142,27 @@ def upsert(
                 incoming = incoming.withColumn(
                     c, F.lit(None).cast(existing.schema[c].dataType)
                 )
-    if order_col is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        incoming = (
-            incoming.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    incoming = _keep_last(incoming, keys, order_col)
     survivors = existing.join(incoming.select(*keys), on=keys, how="left_anti")
     return survivors.unionByName(incoming)
+
+
+def _keep_last(
+    incoming: DataFrame, keys: list[str], order_col: str | None
+) -> DataFrame:
+    """The highest-``order_col`` row per key, or ``incoming`` as is when
+    ``order_col`` is None. Every merge path applies it, including the
+    first batch into a new table."""
+    if order_col is None:
+        return incoming
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    return (
+        incoming.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def apply_changes(
@@ -284,212 +304,6 @@ def prepare_jdbc_write(
     return writer_df, props
 
 
-def upsert_parquet(
-    spark,
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str | None = None,
-) -> DataFrame:
-    """foreachBatch-compatible incremental load onto a parquet snapshot.
-
-    Durability: the merged snapshot is written to a STAGING directory
-    first, then swapped into place (delete old + rename staging) - a
-    crash mid-write leaves the previous snapshot intact; only the
-    narrow delete/rename window is exposed. Plain parquet has no
-    atomic commit, so this is at-least-once, not exactly-once; a table
-    format with a transactional MERGE (Delta/Iceberg) is the scale
-    answer, and this function is its drop-in logical twin.
-    """
-    import uuid as _uuid
-
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        existing = None
-    merged = (
-        incoming
-        if existing is None
-        else upsert(existing, incoming, keys, order_col=order_col)
-    )
-    staging = f"{path}__staging_{_uuid.uuid4().hex[:12]}"
-    write_parquet(merged, staging, mode="overwrite")
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(hconf)
-    fs.delete(Path(path), True)
-    fs.rename(Path(staging), Path(path))
-    return spark.read.parquet(path)
-
-
-# ---------------------------------------------------------------------------
-# Versioned snapshot store: write-new-then-repoint, never delete-before-write
-# ---------------------------------------------------------------------------
-
-_CURRENT = "_current"
-_VERSION_PREFIX = "_v"
-
-
-def _pointer_path(path: str) -> str:
-    import posixpath as _pp
-
-    return _pp.join(path, _CURRENT)
-
-
-def read_current_version(path: str) -> str | None:
-    """Name of the live snapshot version (e.g. ``_v00000003``), or None
-    for an empty store. The pointer line may carry an ``epoch=N``
-    suffix (see :func:`read_current_epoch`); only the first token is
-    the version."""
-    try:
-        with open(_pointer_path(path)) as f:
-            line = f.read().strip()
-            return line.split()[0] if line else None
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-
-
-def read_current_epoch(path: str) -> int | None:
-    """Streaming epoch committed WITH the live snapshot (the
-    ``epoch=N`` token of the pointer line), or None if the store is
-    empty / was never written by an epoch-tagged merge. Because the
-    pointer is replaced atomically, the epoch and the snapshot it
-    describes can never be observed out of sync - this is what makes
-    foreachBatch replay EXACTLY-once (see incremental_upsert_stream).
-    """
-    try:
-        with open(_pointer_path(path)) as f:
-            for tok in f.read().strip().split():
-                if tok.startswith("epoch="):
-                    return int(tok[len("epoch="):])
-    except (FileNotFoundError, NotADirectoryError, ValueError):
-        return None
-    return None
-
-
-def read_snapshot(spark, path: str) -> DataFrame:
-    """Read the live snapshot of a versioned store (see
-    :func:`upsert_parquet_versioned`). Raises ``FileNotFoundError`` on
-    an empty store."""
-    import posixpath as _pp
-
-    version = read_current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no current snapshot under {path}")
-    return spark.read.parquet(_pp.join(path, version))
-
-
-def _write_new_version(
-    spark, merged: DataFrame, path: str, current: str | None
-) -> str:
-    """Step 1 of the swap: materialize the merged snapshot under the
-    NEXT version directory. Crash-safe by construction - nothing
-    existing is touched; a crash here strands an underscore-prefixed
-    orphan dir that readers skip and the next upsert prunes."""
-    import posixpath as _pp
-
-    n = int(current[len(_VERSION_PREFIX):]) if current else 0
-    version = f"{_VERSION_PREFIX}{n + 1:08d}"
-    write_parquet(merged, _pp.join(path, version), mode="overwrite")
-    return version
-
-
-def _repoint(path: str, version: str, epoch_id: int | None = None) -> None:
-    """Step 2 of the swap: atomically flip the ``_current`` pointer.
-
-    Local/POSIX ``os.replace`` is an atomic overwrite, so a reader sees
-    either the old pointer or the new one, never a missing/partial
-    file. (HDFS equivalent: FileContext.rename(..., Options.Rename.
-    OVERWRITE); S3 has no atomic rename - there a table format's commit
-    log (Delta/Iceberg) is the real answer, and this store is its
-    plain-parquet logical twin.)"""
-    import os as _os
-    import uuid as _uuid
-
-    tmp = _pp_join_safe(path, f"._current_tmp_{_uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as f:
-        f.write(version + (f" epoch={epoch_id}" if epoch_id is not None else "") + "\n")
-        f.flush()
-        _os.fsync(f.fileno())
-    _os.replace(tmp, _pointer_path(path))
-
-
-def _pp_join_safe(*parts: str) -> str:
-    import posixpath as _pp
-
-    return _pp.join(*parts)
-
-
-def _prune_versions(path: str, keep: tuple[str, ...]) -> None:
-    """Drop version dirs other than ``keep`` (current + previous stay
-    so in-flight readers holding the old pointer can finish their
-    scan). Also removes orphans from crashed step-1 writes."""
-    import os as _os
-    import shutil as _shutil
-
-    try:
-        names = _os.listdir(path)
-    except FileNotFoundError:
-        return
-    for name in names:
-        if name.startswith(_VERSION_PREFIX) and name not in keep:
-            _shutil.rmtree(_pp_join_safe(path, name), ignore_errors=True)
-
-
-def upsert_parquet_versioned(
-    spark,
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str | None = None,
-    epoch_id: int | None = None,
-) -> DataFrame:
-    """Crash-safe merge-on-key onto a versioned parquet snapshot store.
-
-    Layout::
-
-        path/_current        <- tiny pointer file, atomically replaced
-        path/_v00000001/     <- immutable plain-parquet snapshots
-        path/_v00000002/
-
-    The swap is write-new-then-repoint: the merged snapshot is fully
-    written under the next ``_v...`` dir (step 1), THEN the pointer is
-    atomically flipped (step 2). There is no delete-before-write
-    anywhere, so a reader through :func:`read_snapshot` observes either
-    the previous complete snapshot or the new complete snapshot at
-    every instant - the delete/rename data-loss window of the in-place
-    :func:`upsert_parquet` does not exist. A crash in step 1 strands an
-    orphan version dir (underscore-prefixed - invisible to readers,
-    pruned by the next successful upsert); a crash before step 2 leaves
-    the old pointer live. The previous version is retained after the
-    flip so in-flight readers finish; older versions are pruned.
-
-    Each snapshot stays plain parquet - any engine can read
-    ``path/<version>`` directly after resolving the one-line pointer.
-
-    ``epoch_id`` (streaming callers) rides in the pointer line and
-    commits atomically with the flip; replayed micro-batches are then
-    detectable via :func:`read_current_epoch` BEFORE re-merging -
-    exactly-once for the single-writer streaming upsert even when the
-    merge itself is not idempotent.
-    """
-    current = read_current_version(path)
-    if current is None:
-        import os as _os
-
-        _os.makedirs(path, exist_ok=True)
-        merged = incoming
-    else:
-        existing = read_snapshot(spark, path)
-        merged = upsert(existing, incoming, keys, order_col=order_col)
-    version = _write_new_version(spark, merged, path, current)
-    _repoint(path, version, epoch_id)
-    keep = (version, current) if current else (version,)
-    _prune_versions(path, keep)
-    return read_snapshot(spark, path)
-
-
 def upsert_parquet_partitioned(
     spark,
     incoming: DataFrame,
@@ -553,9 +367,11 @@ def upsert_parquet_partitioned(
     reads of the old files, so even a batch derived from the table is
     safe. An existing-table merge runs about 8 Spark jobs: schema
     inference, the partition aggregate, and the moved-key join and the
-    write with their shuffle stages. Commit is per partition
-    directory, so the non-atomicity window of ``upsert_parquet``
-    shrinks to the touched partitions.
+    write with their shuffle stages. Job commit swaps one partition
+    directory at a time (delete, then rename), so a crash inside it
+    can leave a touched partition missing; untouched partitions are
+    never at risk. A first batch into a new path gets the same
+    ``order_col`` keep-last as a merge.
 
     ``evolve_schema`` (Delta ``mergeSchema``-on-MERGE twin): the
     incoming batch may carry columns the snapshot lacks (and vice
@@ -581,7 +397,7 @@ def upsert_parquet_partitioned(
                 f"partition_col, expected_keys_per_partition) once "
                 f"(for a brand-new table, after the first upsert)"
             )
-    merged = incoming
+    merged = _keep_last(incoming, keys, order_col)
     Path = spark._jvm.org.apache.hadoop.fs.Path
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(Path(path)):
@@ -676,8 +492,10 @@ def compact_parquet(
     compaction restores ~``target_file_bytes`` files (128 MB default,
     the usual HDFS/S3 sweet spot).
 
-    Uses the staging + swap pattern of :func:`upsert_parquet` so a
-    crash keeps the original directory. Returns the output file count.
+    Writes a staging directory, then deletes the original and renames
+    the staging dir into place: a crash during the write keeps the
+    original directory; only the short delete/rename step can lose
+    it. Returns the output file count.
     ``coalesce`` (not ``repartition``) avoids a shuffle - compaction is
     pure IO. Partitioned layouts should compact per partition directory
     (call this per partition path) so untouched partitions stay put.
@@ -731,25 +549,45 @@ _LOG_DIR = "_log"
 
 
 def _log_path(path: str) -> str:
-    return _pp_join_safe(path, _LOG_DIR)
+    return posixpath.join(path, _LOG_DIR)
 
 
-def read_committed(path: str) -> tuple[int, str] | None:
-    """Latest committed (commit number, snapshot dir name) from the
-    commit log, or None for an empty store. The log is the source of
-    truth: a data dir without a commit file does not exist."""
+def _commits(path: str) -> list[int]:
+    """Commit numbers in the log, ascending; empty for an empty store."""
     import os as _os
 
     try:
         names = _os.listdir(_log_path(path))
     except FileNotFoundError:
-        return None
-    commits = sorted(n for n in names if n.endswith(".commit"))
+        return []
+    return sorted(int(n.split(".")[0]) for n in names if n.endswith(".commit"))
+
+
+def _read_commit(path: str, n: int) -> tuple[str, int | None]:
+    """(snapshot dir name, streaming epoch or None) of commit ``n``.
+
+    A commit file holds one line, ``<snap_dir>`` or ``<snap_dir>
+    epoch=<N>``. Any other content raises ``ValueError``: a misread
+    epoch would make ``merge_epoch_batch`` re-apply a replayed batch
+    or drop a new one without a sign."""
+    name = posixpath.join(_log_path(path), f"{n:08d}.commit")
+    with open(name) as f:
+        line = f.read().strip()
+    snap_dir, sep, epoch = line.partition(" epoch=")
+    if not snap_dir or " " in snap_dir or (sep and not epoch.isdecimal()):
+        raise ValueError(f"malformed commit file {name}: {line!r}")
+    return snap_dir, int(epoch) if sep else None
+
+
+def read_committed(path: str) -> tuple[int, str, int | None] | None:
+    """Latest committed (commit number, snapshot dir name, streaming
+    epoch or None) from the commit log, or None for an empty store.
+    The log is the source of truth: a data dir without a commit file
+    does not exist."""
+    commits = _commits(path)
     if not commits:
         return None
-    latest = commits[-1]
-    with open(_pp_join_safe(_log_path(path), latest)) as f:
-        return int(latest.split(".")[0]), f.read().strip()
+    return (commits[-1], *_read_commit(path, commits[-1]))
 
 
 def read_committed_snapshot(
@@ -767,16 +605,14 @@ def read_committed_snapshot(
         committed = read_committed(path)
         if committed is None:
             raise FileNotFoundError(f"no committed snapshot under {path}")
-        return spark.read.parquet(_pp_join_safe(path, committed[1]))
-    claim = _pp_join_safe(_log_path(path), f"{version:08d}.commit")
+        return spark.read.parquet(posixpath.join(path, committed[1]))
     try:
-        with open(claim) as f:
-            snap_dir = f.read().strip()
+        snap_dir, _ = _read_commit(path, version)
     except FileNotFoundError:
         raise FileNotFoundError(
             f"commit {version} does not exist under {path}"
         ) from None
-    full = _pp_join_safe(path, snap_dir)
+    full = posixpath.join(path, snap_dir)
     if not _os.path.isdir(full):
         raise FileNotFoundError(
             f"commit {version} exists but its snapshot {snap_dir} was "
@@ -792,11 +628,11 @@ def commit_log_upsert(
     keys: list[str],
     order_col: str | None = None,
     max_retries: int = 8,
+    epoch_id: int | None = None,
 ) -> int:
-    """Merge-on-key with OPTIMISTIC CONCURRENCY - the multi-writer
-    upsert the pointer store (:func:`upsert_parquet_versioned`,
-    single-writer by contract) cannot provide, and the plain-parquet
-    logical twin of a Delta/Iceberg transactional MERGE:
+    """Merge-on-key with OPTIMISTIC CONCURRENCY - the package's one
+    whole-table snapshot store, and the plain-parquet logical twin of
+    a Delta/Iceberg transactional MERGE:
 
       1. read the latest commit N from ``path/_log/`` and merge
          against its snapshot;
@@ -814,8 +650,15 @@ def commit_log_upsert(
     Lost updates are impossible: a commit is only ever created against
     the snapshot it merged (the exclusive create fails if anyone
     committed in between) - proven by the genuinely-concurrent
-    two-writer test (tests/test_commit_log.py), which the pointer
-    store fails by design. Returns the commit number claimed.
+    two-writer test (tests/test_commit_log.py). Returns the commit
+    number claimed.
+
+    ``epoch_id`` (streaming callers) is written into the commit file
+    as ``<snap_dir> epoch=N``, so it publishes atomically with the
+    snapshot through the same link; ``merge_epoch_batch`` reads it
+    back with :func:`read_committed` to skip a replayed micro-batch
+    BEFORE re-merging - exactly-once even when the merge itself is
+    not idempotent.
 
     Durability/portability: link-into-place is atomic on POSIX; the
     HDFS equivalent is rename-without-overwrite, and on S3 it maps to
@@ -836,18 +679,16 @@ def commit_log_upsert(
         committed = read_committed(path)
         if committed is None:
             _os.makedirs(_log_path(path), exist_ok=True)
-            base_n, merged = 0, incoming
+            base_n, merged = 0, _keep_last(incoming, keys, order_col)
         else:
             base_n = committed[0]
-            existing = spark.read.parquet(
-                _pp_join_safe(path, committed[1])
-            )
+            existing = spark.read.parquet(posixpath.join(path, committed[1]))
             merged = upsert(existing, incoming, keys, order_col=order_col)
         next_n = base_n + 1
         snap_dir = f"_snap_{next_n:08d}_{_uuid.uuid4().hex[:8]}"
         try:
             write_parquet(
-                merged, _pp_join_safe(path, snap_dir), mode="overwrite"
+                merged, posixpath.join(path, snap_dir), mode="overwrite"
             )
         except Exception as exc:
             # A lagging writer can lose its base snapshot mid-scan when
@@ -855,7 +696,7 @@ def commit_log_upsert(
             # current + previous only). Treat ANY write failure as a
             # lost race: clean up and re-merge against the new head.
             last_err = exc
-            _shutil.rmtree(_pp_join_safe(path, snap_dir), ignore_errors=True)
+            _shutil.rmtree(posixpath.join(path, snap_dir), ignore_errors=True)
             continue
         # Claim commit next_n ATOMICALLY WITH ITS CONTENT: the payload
         # is written to a writer-private temp file first, then
@@ -865,12 +706,13 @@ def commit_log_upsert(
         # window where the claim exists empty (an O_EXCL-create-then-
         # write sequence would expose exactly that window to readers
         # and to crashes).
-        claim = _pp_join_safe(_log_path(path), f"{next_n:08d}.commit")
-        tmp_claim = _pp_join_safe(
+        claim = posixpath.join(_log_path(path), f"{next_n:08d}.commit")
+        tmp_claim = posixpath.join(
             _log_path(path), f".claim_tmp_{_uuid.uuid4().hex[:12]}"
         )
         with open(tmp_claim, "w") as f:
-            f.write(snap_dir + "\n")
+            epoch = "" if epoch_id is None else f" epoch={epoch_id}"
+            f.write(f"{snap_dir}{epoch}\n")
             f.flush()
             _os.fsync(f.fileno())
         try:
@@ -879,7 +721,7 @@ def commit_log_upsert(
             # lost the race: drop our snapshot, re-merge against winner
             _os.unlink(tmp_claim)
             _shutil.rmtree(
-                _pp_join_safe(path, snap_dir), ignore_errors=True
+                posixpath.join(path, snap_dir), ignore_errors=True
             )
             continue
         _os.unlink(tmp_claim)
@@ -897,7 +739,7 @@ def commit_log_upsert(
                 n_part = name.split("_")[2]
                 if n_part.isdigit() and int(n_part) < base_n:
                     _shutil.rmtree(
-                        _pp_join_safe(path, name), ignore_errors=True
+                        posixpath.join(path, name), ignore_errors=True
                     )
         return next_n
     raise RuntimeError(
@@ -938,25 +780,17 @@ def vacuum_commit_log(path: str, keep_last: int = 2) -> int:
 
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    committed = read_committed(path)
-    if committed is None:
+    commits = _commits(path)
+    if not commits:
         return 0
-    head_n = committed[0]
-    keep_dirs = set()
-    try:
-        names = _os.listdir(_log_path(path))
-    except FileNotFoundError:
-        return 0
-    commits = sorted(n for n in names if n.endswith(".commit"))
-    for name in commits[-keep_last:]:
-        with open(_pp_join_safe(_log_path(path), name)) as f:
-            keep_dirs.add(f.read().strip())
+    head_n = commits[-1]
+    keep_dirs = {_read_commit(path, n)[0] for n in commits[-keep_last:]}
     removed = 0
     for name in _os.listdir(path):
         if name.startswith("_snap_") and name not in keep_dirs:
             n_part = name.split("_")[2]
             if not n_part.isdigit() or int(n_part) > head_n:
                 continue  # in-flight (not-yet-claimed) writer snapshot
-            _shutil.rmtree(_pp_join_safe(path, name), ignore_errors=True)
+            _shutil.rmtree(posixpath.join(path, name), ignore_errors=True)
             removed += 1
     return removed

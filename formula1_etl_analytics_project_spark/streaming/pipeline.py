@@ -8,10 +8,11 @@ shapes are first-class:
     over an event stream (late data dropped past the watermark; state
     bounded).
   * ``incremental_upsert_stream`` - ``foreachBatch`` merge of each
-    micro-batch into a parquet snapshot via the same anti-join+union
-    upsert the batch layer uses (sources.sinks.upsert_parquet, staged
-    write + swap) - at-least-once per-key on plain parquet; the
-    exactly-once form is the same plan over a transactional format.
+    micro-batch into the commit-log snapshot store via the same
+    anti-join+union upsert the batch layer uses
+    (sources.sinks.commit_log_upsert). The micro-batch epoch is
+    written into the commit file with the snapshot it produced, so a
+    replayed batch is skipped: exactly-once on plain parquet.
 
 Scale notes: watermarks bound state store size (without one, a
 groupBy-window over an unbounded stream grows state forever). The
@@ -34,9 +35,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
 from formula1_etl_analytics_project_spark.sources.sinks import (
-    upsert_parquet,
-    upsert_parquet_versioned,
-    read_current_epoch,
+    commit_log_upsert,
+    read_committed,
 )
 
 
@@ -197,35 +197,28 @@ def incremental_upsert_stream(
     events: DataFrame,
     snapshot_path: str,
     keys: list[str] | None = None,
-    versioned: bool = True,
 ):
     """foreachBatch incremental load: merge each micro-batch into the
-    parquet snapshot (new keys insert, existing keys update). Returns
-    the StreamingQuery; caller awaits/stops it.
+    commit-log snapshot store at ``snapshot_path`` (new keys insert,
+    existing keys update). Returns the StreamingQuery; caller
+    awaits/stops it. Read the result with
+    ``sinks.read_committed_snapshot``.
 
-    Durability: with ``versioned`` (default) each merge goes through
-    ``sinks.upsert_parquet_versioned`` - write-new-then-repoint, atomic
-    pointer flip - so readers through ``sinks.read_snapshot`` NEVER see
-    a missing or partial snapshot, even if the job dies mid-batch; a
-    replayed interrupted batch is SKIPPED entirely: the micro-batch
-    epoch id commits atomically with the pointer flip, and
+    Durability: each merge goes through ``merge_epoch_batch`` and
+    ``sinks.commit_log_upsert`` - the merged snapshot is written to a
+    new dir and published by one atomically linked commit file - so a
+    reader NEVER sees a missing or partial snapshot, even if the job
+    dies mid-batch. A replayed interrupted batch is SKIPPED entirely:
+    the micro-batch epoch id is written into the commit file, and
     ``merge_epoch_batch`` compares the incoming epoch against the
     committed one before touching anything - EXACTLY-once for this
-    single-writer sink, even for non-idempotent merges (tested by
-    tests/test_streaming.py::test_replayed_epoch_is_skipped).
-    ``versioned=False`` keeps the legacy in-place layout (directly
-    ``spark.read``-able at ``snapshot_path``) at the cost of the
-    delete/rename window - per-key at-least-once. Concurrent
-    multi-writer commit still needs a transactional table format
-    (Delta/Iceberg MERGE); this store is its single-writer logical
-    twin."""
+    single-writer sink (one streaming query per store), even for
+    non-idempotent merges (tested by
+    tests/test_streaming.py::test_replayed_epoch_is_skipped)."""
     keys = keys or ["event_id"]
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if versioned:
-            merge_epoch_batch(batch, epoch_id, snapshot_path, keys)
-        else:
-            upsert_parquet(batch.sparkSession, batch, snapshot_path, keys)
+        merge_epoch_batch(batch, epoch_id, snapshot_path, keys)
 
     return (
         events.writeStream.outputMode("update")
@@ -245,8 +238,10 @@ def merge_epoch_batch(
     committed epoch (checkpoint replay after a crash BETWEEN the
     snapshot commit and the streaming checkpoint advance - the only
     epoch Structured Streaming ever re-delivers for one checkpoint),
-    else merge and commit the epoch atomically with the snapshot
-    pointer. Returns True when the batch was applied, False skipped.
+    else merge and write the epoch into the commit file that
+    publishes the merged snapshot. Returns True when the batch was
+    applied, False skipped. A head commit whose epoch token is
+    malformed raises ``ValueError`` before anything is merged.
 
     An epoch LOWER than the committed one is neither a replay nor
     progress - it means the query restarted against a DIFFERENT (or
@@ -255,7 +250,8 @@ def merge_epoch_batch(
     That is refused loudly: pair each store with one checkpoint for
     its lifetime, or start a fresh store for a fresh checkpoint.
     """
-    committed = read_current_epoch(snapshot_path)
+    head = read_committed(snapshot_path)
+    committed = head[2] if head else None
     if committed is not None:
         if epoch_id == committed:
             return False
@@ -267,7 +263,7 @@ def merge_epoch_batch(
                 "writing - refusing to silently drop batches. Use a "
                 "fresh snapshot store for a fresh checkpoint."
             )
-    upsert_parquet_versioned(
+    commit_log_upsert(
         batch.sparkSession, batch, snapshot_path, keys, epoch_id=epoch_id
     )
     return True

@@ -18,6 +18,12 @@ from formula1_etl_analytics_project_spark.sources.sinks import (
 )
 
 
+def _snap_dirs(path):
+    import os
+
+    return sorted(n for n in os.listdir(path) if n.startswith("_snap_"))
+
+
 def test_commit_log_basic_merge(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("clog") / "store")
     n1 = commit_log_upsert(
@@ -37,6 +43,72 @@ def test_commit_log_basic_merge(spark, tmp_path_factory):
     snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
     assert snap == {1: "a", 2: "b2", 3: "c"}
     assert read_committed(path)[0] == 2
+
+    # current + previous snapshot retained (in-flight readers), older pruned
+    previous = read_committed(path)[1]
+    commit_log_upsert(
+        spark, spark.createDataFrame([(4, "d")], "k long, v string"), path, ["k"]
+    )
+    assert _snap_dirs(path) == sorted([previous, read_committed(path)[1]])
+
+
+def test_commit_log_crash_windows_never_lose_the_snapshot(
+    spark, tmp_path_factory
+):
+    """Walk a commit step by step, crashing after each step, and prove
+    a reader ALWAYS gets a complete snapshot: a staged snapshot is
+    invisible until its claim is linked, the claim publishes it whole,
+    the previous snapshot stays readable, and the next commit prunes
+    only older dirs."""
+    import os
+
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        upsert,
+        write_parquet,
+    )
+
+    def rows(version=None):
+        df = read_committed_snapshot(spark, path, version=version)
+        return {r["k"]: r["v"] for r in df.collect()}
+
+    path = str(tmp_path_factory.mktemp("clog_crash") / "store")
+    commit_log_upsert(
+        spark, spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, v double"),
+        path, ["k"],
+    )
+    old = rows()
+
+    # CRASH after staging (merged snapshot fully written, no claim):
+    # the reader still sees commit 1, intact
+    staged = "_snap_00000002_deadbeef"
+    merged = upsert(
+        read_committed_snapshot(spark, path),
+        spark.createDataFrame([(2, 9.0)], "k long, v double"),
+        ["k"],
+    )
+    write_parquet(merged, f"{path}/{staged}")
+    assert read_committed(path)[0] == 1
+    assert rows() == old
+
+    # the claim is one atomic link of a fully written temp file:
+    # afterwards the reader sees the new rows, and commit 1's dir is
+    # still on disk for readers that resolved it before the link
+    tmp_claim = f"{path}/_log/.claim_tmp_cafebabe"
+    with open(tmp_claim, "w") as f:
+        f.write(staged + "\n")
+    os.link(tmp_claim, f"{path}/_log/00000002.commit")
+    os.unlink(tmp_claim)
+    assert rows() == {1: 1.0, 2: 9.0}
+    assert rows(version=1) == old
+
+    # the next commit keeps its base (commit 2) and prunes commit 1
+    n = commit_log_upsert(
+        spark, spark.createDataFrame([(5, 5.0)], "k long, v double"),
+        path, ["k"],
+    )
+    assert n == 3
+    assert rows() == {1: 1.0, 2: 9.0, 5: 5.0}
+    assert _snap_dirs(path) == sorted([staged, read_committed(path)[1]])
 
 
 def test_concurrent_writers_lose_no_updates(spark, tmp_path_factory):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from formula1_etl_analytics_project_spark.sources.sinks import (
@@ -99,85 +100,28 @@ def test_partitioned_upsert_keep_last_on_duplicate_incoming(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["v"] == 7.0
 
 
-# ---------------------------------------------------------------------------
-# Versioned snapshot store (VERDICT r02 task 7)
-# ---------------------------------------------------------------------------
-
-
-def _store_rows(spark, path):
-    from formula1_etl_analytics_project_spark.sources.sinks import read_snapshot
-
-    return {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
-
-
-def test_versioned_upsert_merges_and_prunes(spark, tmp_path):
-    from formula1_etl_analytics_project_spark.sources import sinks
-
-    path = str(tmp_path / "store")
-    base = spark.createDataFrame([(1, 1.0), (2, 2.0)], ["k", "v"])
-    sinks.upsert_parquet_versioned(spark, base, path, keys=["k"])
-    assert _store_rows(spark, path) == {1: 1.0, 2: 2.0}
-
-    inc = spark.createDataFrame([(2, 9.0), (3, 3.0)], ["k", "v"])
-    sinks.upsert_parquet_versioned(spark, inc, path, keys=["k"])
-    assert _store_rows(spark, path) == {1: 1.0, 2: 9.0, 3: 3.0}
-
-    # current + previous retained (in-flight readers), older pruned
-    import os
-
-    versions = sorted(n for n in os.listdir(path) if n.startswith("_v"))
-    assert versions == ["_v00000001", "_v00000002"]
-    sinks.upsert_parquet_versioned(
-        spark, spark.createDataFrame([(4, 4.0)], ["k", "v"]), path, keys=["k"]
+@pytest.mark.parametrize("store", ["commit_log", "partitioned"])
+def test_first_batch_keeps_last_per_key(spark, tmp_path, store):
+    """``order_col`` dedups the first batch into a new table too, not
+    only a merge into an existing one."""
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        commit_log_upsert,
+        read_committed_snapshot,
     )
-    versions = sorted(n for n in os.listdir(path) if n.startswith("_v"))
-    assert versions == ["_v00000002", "_v00000003"]
 
-
-def test_versioned_upsert_kill_windows_never_lose_the_snapshot(spark, tmp_path):
-    """Walk the swap step by step, crashing after each step, and prove
-    a reader ALWAYS gets a complete snapshot - the delete-before-write
-    window of the in-place upsert does not exist here."""
-    from formula1_etl_analytics_project_spark.sources import sinks
-
-    path = str(tmp_path / "store")
-    base = spark.createDataFrame([(1, 1.0), (2, 2.0)], ["k", "v"])
-    sinks.upsert_parquet_versioned(spark, base, path, keys=["k"])
-    old = _store_rows(spark, path)
-
-    incoming = spark.createDataFrame([(2, 9.0)], ["k", "v"])
-    current = sinks.read_current_version(path)
-    existing = sinks.read_snapshot(spark, path)
-    merged = sinks.upsert(existing, incoming, ["k"])
-
-    # CRASH after step 1 (new version fully written, pointer not
-    # flipped): reader still sees the old snapshot, intact
-    v2 = sinks._write_new_version(spark, merged, path, current)
-    assert _store_rows(spark, path) == old
-
-    # step 2 is a single atomic os.replace: afterwards the reader sees
-    # the new snapshot; the old version dir is STILL on disk for
-    # readers holding the stale pointer
-    sinks._repoint(path, v2)
-    assert _store_rows(spark, path) == {1: 1.0, 2: 9.0}
-    import os
-
-    assert os.path.isdir(os.path.join(path, current))
-    old_df = spark.read.parquet(os.path.join(path, current))
-    assert {r["k"]: r["v"] for r in old_df.collect()} == old
-
-    # a crashed step-1 orphan is invisible (pointer never referenced
-    # it); the next successful upsert overwrites the orphan dir as its
-    # own next version - the store converges, nothing is duplicated
-    orphan = sinks._write_new_version(spark, merged, path, v2)
-    assert _store_rows(spark, path) == {1: 1.0, 2: 9.0}
-    sinks.upsert_parquet_versioned(
-        spark, spark.createDataFrame([(5, 5.0)], ["k", "v"]), path, keys=["k"]
+    path = str(tmp_path / "new_table")
+    batch = spark.createDataFrame(
+        [(1, "A", 1), (1, "A", 2), (2, "A", 1)], "k long, part string, seq long"
     )
-    assert sinks.read_current_version(path) == orphan  # dir reused
-    assert _store_rows(spark, path) == {1: 1.0, 2: 9.0, 5: 5.0}
-    versions = sorted(n for n in os.listdir(path) if n.startswith("_v"))
-    assert versions == [v2, orphan]
+    if store == "commit_log":
+        commit_log_upsert(spark, batch, path, ["k"], order_col="seq")
+        table = read_committed_snapshot(spark, path)
+    else:
+        upsert_parquet_partitioned(
+            spark, batch, path, keys=["k"], partition_col="part", order_col="seq"
+        )
+        table = spark.read.parquet(path)
+    assert sorted((r["k"], r["seq"]) for r in table.collect()) == [(1, 2), (2, 1)]
 
 
 def test_partitioned_upsert_evolve_schema_mixed_lake(spark, tmp_path):

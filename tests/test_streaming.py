@@ -114,34 +114,25 @@ def test_stream_dedup_within_watermark(spark, event_dir, tmp_path_factory):
 
 
 def test_incremental_upsert_stream(spark, event_dir, tmp_path_factory):
-    """Default sink is the crash-safe versioned store: every micro-batch
-    merge lands via write-new-then-repoint and is read back through
-    read_snapshot."""
-    from formula1_etl_analytics_project_spark.sources.sinks import read_snapshot
+    """The sink is the commit-log store: every micro-batch merge lands
+    as one commit carrying its epoch and is read back through
+    read_committed_snapshot."""
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        read_committed,
+        read_committed_snapshot,
+    )
 
     snap = str(tmp_path_factory.mktemp("snap") / "events_snapshot")
     stream = read_event_stream(spark, event_dir)
     q = incremental_upsert_stream(stream, snap, keys=["event_id"])
     q.awaitTermination()
 
-    merged = read_snapshot(spark, snap)
+    n_commits, _, epoch = read_committed(snap)
+    assert epoch == n_commits - 1  # one commit per micro-batch, epochs from 0
+    merged = read_committed_snapshot(spark, snap)
     source = spark.read.parquet(event_dir)
     assert merged.count() == source.count()
     assert merged.select("event_id").distinct().count() == source.count()
-
-
-def test_incremental_upsert_stream_inplace_layout(
-    spark, event_dir, tmp_path_factory
-):
-    """versioned=False keeps the legacy directly-readable layout."""
-    snap = str(tmp_path_factory.mktemp("snap") / "events_snapshot_flat")
-    stream = read_event_stream(spark, event_dir)
-    q = incremental_upsert_stream(
-        stream, snap, keys=["event_id"], versioned=False
-    )
-    q.awaitTermination()
-    merged = spark.read.parquet(snap)
-    assert merged.count() == spark.read.parquet(event_dir).count()
 
 
 def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path_factory):
@@ -213,14 +204,14 @@ def test_watermark_drops_late_rows_in_append_mode(spark, tmp_path_factory):
 
 
 def test_replayed_epoch_is_skipped(spark, tmp_path_factory):
-    """Exactly-once contract of the versioned streaming upsert: a
-    micro-batch replayed with an already-committed epoch id (crash
-    between snapshot commit and checkpoint advance) must be a no-op,
-    even when its contents differ - the snapshot is the one the first
-    commit produced, and the epoch survives in the pointer."""
+    """Exactly-once contract of the streaming upsert: a micro-batch
+    replayed with an already-committed epoch id (crash between
+    snapshot commit and checkpoint advance) must be a no-op, even when
+    its contents differ - the snapshot is the one the first commit
+    produced, and the epoch survives in the commit file."""
     from formula1_etl_analytics_project_spark.sources.sinks import (
-        read_current_epoch,
-        read_snapshot,
+        read_committed,
+        read_committed_snapshot,
     )
     from formula1_etl_analytics_project_spark.streaming.pipeline import (
         merge_epoch_batch,
@@ -229,20 +220,20 @@ def test_replayed_epoch_is_skipped(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("eo_snap") / "store")
     b0 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     assert merge_epoch_batch(b0, 0, path, ["k"]) is True
-    assert read_current_epoch(path) == 0
+    assert read_committed(path)[2] == 0
 
     # replay of epoch 0 with MUTATED content (worst case) -> skipped
     b0_replay = spark.createDataFrame([(1, "CORRUPT")], "k long, v string")
     assert merge_epoch_batch(b0_replay, 0, path, ["k"]) is False
-    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
+    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
     assert snap == {1: "a", 2: "b"}
 
     # next epoch applies normally
     b1 = spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string")
     assert merge_epoch_batch(b1, 1, path, ["k"]) is True
-    snap = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
+    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
     assert snap == {1: "a", 2: "b2", 3: "c"}
-    assert read_current_epoch(path) == 1
+    assert read_committed(path)[2] == 1
 
     # epoch REGRESSION (restarted query, reset checkpoint counter) is
     # neither replay nor progress: refuse loudly, never drop silently
@@ -250,3 +241,39 @@ def test_replayed_epoch_is_skipped(spark, tmp_path_factory):
 
     with _pytest.raises(ValueError, match="epoch regression"):
         merge_epoch_batch(b0, 0, path, ["k"])
+
+
+def test_malformed_head_epoch_raises_and_keeps_the_store(spark, tmp_path_factory):
+    """A head commit whose epoch token does not parse must stop the
+    merge loudly: treating it as "no epoch" would re-apply a replayed
+    batch without a sign."""
+    import os
+
+    import pytest as _pytest
+
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        commit_log_upsert,
+    )
+    from formula1_etl_analytics_project_spark.streaming.pipeline import (
+        merge_epoch_batch,
+    )
+
+    path = str(tmp_path_factory.mktemp("eo_bad") / "store")
+    commit_log_upsert(
+        spark,
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+        path,
+        ["k"],
+    )
+    head = f"{path}/_log/00000001.commit"
+    with open(head) as f:
+        snap_dir = f.read().split()[0]
+    with open(head, "w") as f:
+        f.write(f"{snap_dir} epoch=x1\n")
+
+    replay = spark.createDataFrame([(1, "CORRUPT")], "k long, v string")
+    with _pytest.raises(ValueError, match="malformed commit file"):
+        merge_epoch_batch(replay, 1, path, ["k"])
+    assert sorted(os.listdir(f"{path}/_log")) == ["00000001.commit"]
+    kept = spark.read.parquet(f"{path}/{snap_dir}")
+    assert {r["k"]: r["v"] for r in kept.collect()} == {1: "a", 2: "b"}
