@@ -44,13 +44,6 @@ def test_commit_log_basic_merge(spark, tmp_path_factory):
     assert snap == {1: "a", 2: "b2", 3: "c"}
     assert read_committed(path)[0] == 2
 
-    # current + previous snapshot retained (in-flight readers), older pruned
-    previous = read_committed(path)[1]
-    commit_log_upsert(
-        spark, spark.createDataFrame([(4, "d")], "k long, v string"), path, ["k"]
-    )
-    assert _snap_dirs(path) == sorted([previous, read_committed(path)[1]])
-
 
 def test_commit_log_crash_windows_never_lose_the_snapshot(
     spark, tmp_path_factory

@@ -100,6 +100,42 @@ def test_partitioned_upsert_keep_last_on_duplicate_incoming(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["v"] == 7.0
 
 
+def test_versioned_upsert_merges_and_prunes(spark, tmp_path):
+    """The whole-table versioned store (the commit log) merges on key
+    and keeps the current and previous snapshot dirs, pruning older
+    ones, so an in-flight reader of the previous version still works."""
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        commit_log_upsert,
+        read_committed,
+        read_committed_snapshot,
+    )
+
+    def rows():
+        table = read_committed_snapshot(spark, path)
+        return {r["k"]: r["v"] for r in table.collect()}
+
+    def snap_dirs():
+        return sorted(n for n in os.listdir(path) if n.startswith("_snap_"))
+
+    path = str(tmp_path / "store")
+    base = spark.createDataFrame([(1, 1.0), (2, 2.0)], ["k", "v"])
+    commit_log_upsert(spark, base, path, keys=["k"])
+    assert rows() == {1: 1.0, 2: 2.0}
+    first = read_committed(path)[1]
+
+    inc = spark.createDataFrame([(2, 9.0), (3, 3.0)], ["k", "v"])
+    commit_log_upsert(spark, inc, path, keys=["k"])
+    assert rows() == {1: 1.0, 2: 9.0, 3: 3.0}
+    second = read_committed(path)[1]
+    assert snap_dirs() == sorted([first, second])
+
+    commit_log_upsert(
+        spark, spark.createDataFrame([(4, 4.0)], ["k", "v"]), path, keys=["k"]
+    )
+    assert rows() == {1: 1.0, 2: 9.0, 3: 3.0, 4: 4.0}
+    assert snap_dirs() == sorted([second, read_committed(path)[1]])
+
+
 @pytest.mark.parametrize("store", ["commit_log", "partitioned"])
 def test_first_batch_keeps_last_per_key(spark, tmp_path, store):
     """``order_col`` dedups the first batch into a new table too, not
