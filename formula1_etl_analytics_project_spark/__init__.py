@@ -19,7 +19,8 @@ Layout:
                race-gap times, text analysis, vector math)
   operators/ - relational + pipeline operators (keep-first dedup,
                minhash/simhash/jaccard dedup, similarity search,
-               star joins, integrity checks, multimodal plumbing)
+               size-gated broadcast, salted and as-of joins, the FK
+               anti-join, multimodal plumbing)
   plans/     - the query catalog: star-schema ETL builders, analytics
                queries, and the driver-facing (spark_fn, oracle_sql)
                registry

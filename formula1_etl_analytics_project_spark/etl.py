@@ -26,6 +26,7 @@ from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from pyspark import inheritable_thread_target
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from formula1_etl_analytics_project_spark.plans.star import BUILDERS
 from formula1_etl_analytics_project_spark.session import get_spark
@@ -70,19 +71,21 @@ def run_etl(
     released on every exit. If a table fails, its error is re-raised and
     no counts are returned. With ``register`` the written tables are
     exposed as temp views once every write has finished, so ``spark.sql``
-    works immediately (EP3 surface)."""
+    works immediately (EP3 surface); each view reads its table with the
+    schema its write used, so registering starts no Spark job."""
     sc = spark.sparkContext
     wide = read_wide_csv(spark, input_csv).cache()
 
-    def load(name: str) -> int:
+    def load(name: str) -> tuple[int, StructType]:
         sc.setJobDescription(f"run_etl: write {name}")
         obs = Observation(name)
+        table = BUILDERS[name](wide)
         write_parquet(
-            BUILDERS[name](wide).observe(obs, F.count(F.lit(1)).alias("rows")),
+            table.observe(obs, F.count(F.lit(1)).alias("rows")),
             f"{out_dir}/{name}",
             mode="overwrite",
         )
-        return obs.get["rows"]
+        return obs.get["rows"], table.schema
 
     try:
         with ThreadPoolExecutor(min(len(LOAD_ORDER), sc.defaultParallelism)) as pool:
@@ -98,13 +101,14 @@ def run_etl(
             # any CancelledError.
             for f in futures:
                 f.cancel()
-            counts = {name: f.result() for name, f in zip(LOAD_ORDER, futures)}
+            written = {name: f.result() for name, f in zip(LOAD_ORDER, futures)}
     finally:
         wide.unpersist()
     if register:
-        for name in LOAD_ORDER:
-            spark.read.parquet(f"{out_dir}/{name}").createOrReplaceTempView(name)
-    return counts
+        for name, (_, schema) in written.items():
+            view = spark.read.schema(schema).parquet(f"{out_dir}/{name}")
+            view.createOrReplaceTempView(name)
+    return {name: rows for name, (rows, _) in written.items()}
 
 
 def main(argv: list[str] | None = None) -> int:

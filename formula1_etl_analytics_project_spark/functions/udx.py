@@ -31,8 +31,6 @@ from functools import lru_cache
 
 import pandas as pd
 
-from pyspark.sql import functions as F
-
 
 class SentenceSplit:
     """UDTF kernel: explode text into (position, sentence) rows on '.'
@@ -68,10 +66,3 @@ def sentence_split_udtf():
     from pyspark.sql.functions import udtf
 
     return udtf(SentenceSplit, returnType="pos int, sentence string")
-
-
-def weighted_mean_native(x, w):
-    """The expression Catalyst can optimize - prefer in hot paths."""
-    x = F.col(x) if isinstance(x, str) else x
-    w = F.col(w) if isinstance(w, str) else w
-    return F.sum(x * w) / F.sum(w)

@@ -3,8 +3,8 @@
 The reference's signature operation - 13 instances of pandas
 ``drop_duplicates`` / manual first-seen sets (SURVEY.md section 2.5,
 D1-D4) - generalized into the dedup family a training-data pipeline
-needs: exact, keep-first-deterministic, minhash+LSH, simhash, and
-n-gram Jaccard.
+needs: keep-first-deterministic, minhash+LSH, simhash and n-gram
+Jaccard.
 
 Determinism note (SURVEY hard part): pandas ``drop_duplicates`` keeps
 the first row in *current frame order*; Spark's ``dropDuplicates``
@@ -26,12 +26,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from formula1_etl_analytics_project_spark.functions.text import shingles, word_tokens
-
-
-def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """D1: full-row (or key-set) distinct. Map-side partial dedup then a
-    shuffle on the key hash - Spark's hash-aggregate handles it."""
-    return df.distinct() if keys is None else df.dropDuplicates(keys)
 
 
 def dedup_keep_first(

@@ -90,32 +90,6 @@ def pagerank_fixed_point(
     return ranks
 
 
-def pagerank_fixed_point_local(
-    edge_list: list[tuple[int, int]],
-    iterations: int = 3,
-    init: int = PR_INIT,
-    base: int = PR_BASE,
-    damping_pct: int = 85,
-) -> dict[int, int]:
-    """Pure-Python reference fixpoint with IDENTICAL integer
-    arithmetic - the oracle for property tests: on any graph, the
-    distributed iteration must reproduce this exactly."""
-    edges = sorted(set(edge_list))
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    outdeg: dict[int, int] = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    ranks = {n: init for n in nodes}
-    for _ in range(iterations):
-        inc: dict[int, int] = {}
-        for s, d in edges:
-            inc[d] = inc.get(d, 0) + ranks[s] // outdeg[s]
-        ranks = {
-            n: base + (damping_pct * inc.get(n, 0)) // 100 for n in nodes
-        }
-    return ranks
-
-
 def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts via degree-oriented wedge closing.
 
@@ -136,10 +110,9 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     shuffle on the wedge apex / edge key; no driver state, no
     iteration.
 
-    Cross-checked two ways: ``triangle_counts_local`` (brute force)
-    under hypothesis in tests/test_graph_ops.py, and the DuckDB
-    ordered 3-way self-join oracle of the ``triangle_count`` catalog
-    entry (plans/catalog_r7.py).
+    Cross-checked two ways: a brute-force oracle under hypothesis in
+    tests/test_properties.py, and the DuckDB ordered 3-way self-join
+    oracle of the ``triangle_count`` catalog entry (plans/catalog_r7.py).
     """
     # Materialization boundaries: `und` feeds the degree union (2x)
     # plus the orientation join, and `oriented` feeds e1/e2/closing
@@ -191,21 +164,3 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .groupBy("node")
         .agg(F.count("*").alias("n_triangles"))
     )
-
-
-def triangle_counts_local(
-    edge_list: list[tuple[int, int]],
-) -> dict[int, int]:
-    """Brute-force per-node triangle counts - the property-test oracle."""
-    und = {(min(a, b), max(a, b)) for a, b in edge_list if a != b}
-    adj: dict[int, set[int]] = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    counts: dict[int, int] = {}
-    for a, b in und:
-        for c in adj[a] & adj[b]:
-            if c > b:  # a < b < c: each triangle found once
-                for n in (a, b, c):
-                    counts[n] = counts.get(n, 0) + 1
-    return counts

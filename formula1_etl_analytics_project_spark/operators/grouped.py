@@ -20,8 +20,6 @@ kernel must be a pure function of the group for determinism.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -57,15 +55,3 @@ def interpolate_gaps(
     return df.select(key, order, value).groupBy(key).applyInPandas(
         kernel, schema=schema
     )
-
-
-def grouped_apply(
-    df: DataFrame,
-    keys: list[str],
-    kernel: Callable[[pd.DataFrame], pd.DataFrame],
-    schema,
-) -> DataFrame:
-    """Generic grouped-map entry point: user kernel over each key
-    group. Thin by design - the operator surface a reference user
-    would reach for when porting bespoke per-group pandas logic."""
-    return df.groupBy(*keys).applyInPandas(kernel, schema=schema)

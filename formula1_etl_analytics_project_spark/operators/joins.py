@@ -84,25 +84,6 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return size
 
 
-def star_join(
-    fact: DataFrame,
-    dims: dict[str, tuple[DataFrame, str]],
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """J1: fact joined against each dimension.
-
-    ``dims`` maps a label to (dim_df, key). With ``broadcast_dims``
-    each dimension goes through the size gate (:func:`broadcast_if_small`)
-    - bounded dims get the pinned hint the 100 TB no-fact-shuffle plan
-    depends on; scale-growing dims fall through to AQE.
-    """
-    out = fact
-    for _, (dim, key) in dims.items():
-        d = broadcast_if_small(dim) if broadcast_dims else dim
-        out = out.join(d, on=key, how="inner")
-    return out
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,
@@ -164,15 +145,6 @@ def integrity_violations(
     (the reference's commented-out trigger, DDL Final.sql:140-162).
     Empty result == constraint holds."""
     return child.join(parent, on=on, how="left_anti")
-
-
-def integrity_keep(
-    child: DataFrame, parent: DataFrame, on: str | list[str]
-) -> DataFrame:
-    """Keep-side twin of J2: child rows that satisfy the FK (semi-join,
-    never duplicates child rows the way an inner join against a
-    non-unique parent would)."""
-    return child.join(parent, on=on, how="left_semi")
 
 
 def asof_join(

@@ -1,7 +1,7 @@
 """Multimodal column plumbing (SURVEY.md M6 extras).
 
 Images/audio/video are opaque ``binary`` columns with a typed metadata
-struct; decode / feature-extract / resize / frame-sample run as
+struct; decode / feature-extract / frame-sample run as
 Arrow-batched ``mapInPandas`` operators. PPM (P6) images decode for
 REAL via the pure-Python ``decode_ppm`` (no codec library needed, and
 ``media_decode_stats``' oracle verifies the decoded pixel values);
@@ -220,44 +220,6 @@ def extract_features(df: DataFrame, batch_hint: int = 256) -> DataFrame:
             )
 
     return df.mapInPandas(op, schema=out_schema)
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Image resize as an Arrow-batched mapInPandas operator: payload ->
-    resized payload + updated meta. The pixel kernel is a STUB (no PIL
-    in this container): it re-digests the bytes deterministically; a
-    real kernel is ``Image.open(...).resize((w, h)).tobytes()`` in the
-    same seam. Schema contract (payload stays binary, meta dims update)
-    is real and tested."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("width", T.IntegerType(), False),
-            T.StructField("height", T.IntegerType(), False),
-        ]
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                None
-                if p is None
-                else hashlib.sha256(bytes(p) + f"|{width}x{height}".encode()).digest()
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": resized,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.filter(F.col("media_type") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(op, schema=out_schema)
 
 
 def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:

@@ -60,17 +60,3 @@ def pareto_frontier_2d(
     return flagged.where(
         (F.col("_m1").isNull() | (F.col("_m1") < yc)) & (F.col("_m2") <= yc)
     ).drop("_bk", "_lower_best", "_m1", "_m2")
-
-
-def pareto_frontier_2d_local(
-    points: list[tuple[int, float]],
-) -> set[tuple[int, float]]:
-    """Brute-force O(n^2) dominance oracle for property tests."""
-    return {
-        (xi, yi)
-        for xi, yi in points
-        if not any(
-            (xj <= xi and yj >= yi and (xj < xi or yj > yi))
-            for xj, yj in points
-        )
-    }

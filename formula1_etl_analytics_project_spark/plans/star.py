@@ -321,12 +321,6 @@ BUILDERS = {
 }
 
 
-def build_star(wide: DataFrame) -> dict[str, DataFrame]:
-    """All 15 star tables off one scan. Caller should ``wide.cache()``
-    before fanning out (the reference re-read the CSV ~19x instead)."""
-    return {name: fn(wide) for name, fn in BUILDERS.items()}
-
-
 def reconstruct_wide(star: dict[str, DataFrame]) -> DataFrame:
     """J1: the 10-way FK join rebuilding the denormalized shape the
     reference's upstream materialized (SURVEY.md section 1.5 key

@@ -6,16 +6,6 @@ engine: AQE handles runtime re-planning (partition coalescing, skew-join
 splitting, broadcast demotion), the shuffle-partition count is sized to
 the machine instead of Spark's default 200, and the timezone is pinned
 to UTC so results are comparable against the DuckDB oracle.
-
-Scale notes (100 TB target):
-  * ``spark.sql.adaptive.enabled`` - on a real cluster AQE re-plans
-    joins after seeing actual shuffle sizes; essential when dimension
-    tables that look small at sf0.1 stay broadcastable at sf10000.
-  * ``spark.sql.files.maxPartitionBytes`` stays at the 128 MiB default:
-    at 100 TB that yields ~800k scan tasks, which a 1000-executor
-    cluster schedules fine and keeps per-task memory bounded.
-  * shuffle partitions: sized via env for local runs; on a cluster this
-    would be ~2-3x total cores, and AQE coalesces the excess.
 """
 
 from __future__ import annotations
@@ -25,51 +15,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def cluster_conf(
-    executors: int = 1000,
-    cores_per_executor: int = 4,
-    executor_mem_gb: int = 16,
-) -> dict[str, str]:
-    """The conf this engine would ship to a real 100 TB cluster - the
-    delta from ``get_spark``'s local profile. Returned as a dict so a
-    deployment wraps it into spark-submit/defaults; every value is
-    justified here rather than cargo-culted.
-
-    * shuffle partitions ~ 2x total cores: enough tasks to keep every
-      core busy through stragglers; AQE coalesces small ones back
-      together, so over-provisioning costs little.
-    * 128 MiB scan splits (default kept): 100 TB -> ~800k tasks, fine
-      for a driver with the memory below; smaller splits would explode
-      scheduler pressure.
-    * advisory partition size 128 MiB: AQE's target when coalescing
-      and when splitting skewed joins.
-    * executor memory overhead 25%: Arrow/pandas UDF workers live
-      OUTSIDE the JVM heap; the multimodal/grouped operators need the
-      headroom or YARN/K8s kills the container.
-    * shuffle compression + zstd: shuffle volume dominates network at
-      this scale; zstd trades a little CPU for ~30% smaller shuffles.
-    * broadcast threshold stays default (10 MB): dims in this schema
-      fit; raising it risks driver OOM on the 10-way star join.
-    """
-    total_cores = executors * cores_per_executor
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores_per_executor),
-        "spark.executor.memory": f"{executor_mem_gb}g",
-        "spark.executor.memoryOverheadFactor": "0.25",
-        "spark.driver.memory": "32g",
-        "spark.sql.shuffle.partitions": str(2 * total_cores),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-        "spark.sql.files.maxPartitionBytes": "134217728",
-        "spark.shuffle.compress": "true",
-        "spark.io.compression.codec": "zstd",
-        "spark.sql.session.timeZone": "UTC",
-    }
 
 
 def get_spark(

@@ -28,7 +28,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
     DoubleType,
@@ -96,83 +95,6 @@ class SyntheticEventsReader(DataSourceReader):
         for i in range(partition.start, partition.end):
             h = int.from_bytes(
                 hashlib.md5(f"{partition.seed}|{i}".encode()).digest()[:8], "big"
-            )
-            yield (
-                i,
-                h % 150,
-                _EVENT_TYPES[h % len(_EVENT_TYPES)],
-                base + datetime.timedelta(seconds=(h % 2_592_000)),
-                round((h % 1_000_000) / 1000.0, 3),
-            )
-
-
-# ---------------------------------------------------------------------------
-# Streaming variant: the same deterministic feed as an unbounded source
-# ---------------------------------------------------------------------------
-
-
-class SyntheticEventsStreamDataSource(DataSource):
-    """spark.readStream.format("synthetic_events_stream") - the
-    STREAMING form of the synthetic feed (Spark 4
-    SimpleDataSourceStreamReader API): offsets are plain row indices,
-    each micro-batch reads [start, min(start+batch_rows, max_rows)),
-    and row i is the same pure function of (seed, i) as the batch
-    source - so the stream is REPLAYABLE from any offset, which is
-    what lets Structured Streaming give exactly-once on top of it
-    (checkpointed offsets + deterministic re-read). ``max_rows``
-    bounds the feed so availableNow/processAllAvailable terminate in
-    tests; a real feed would return the ever-growing tail instead.
-
-    Demonstrates the full custom-source surface: batch
-    (SyntheticEventsDataSource), streaming (this), both sharing one
-    row function - the dual-mode layout a bespoke internal feed needs.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_events_stream"
-
-    def schema(self) -> StructType:
-        return SyntheticEventsDataSource.schema(self)  # same shape
-
-    def simpleStreamReader(self, schema: StructType):
-        return SyntheticEventsStreamReader(self.options)
-
-
-class SyntheticEventsStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side offset bookkeeping; each batch is returned as a
-    picklable list ITERATOR (see read()), and recovery re-reads any
-    committed [start, end) range deterministically."""
-
-    def __init__(self, options: dict):
-        self.max_rows = int(options.get("max_rows", 100))
-        self.batch_rows = int(options.get("batch_rows", 37))
-        self.seed = int(options.get("seed", 42))
-
-    def initialOffset(self) -> dict:
-        return {"index": 0}
-
-    def read(self, start: dict):
-        s = start["index"]
-        e = min(s + self.batch_rows, self.max_rows)
-        # iter(list): the engine requires an ITERATOR (it next()s the
-        # empty-batch case) that is also PICKLABLE (the prefetched
-        # batch ships to the JVM) - list iterators are both; a lazy
-        # generator fails pickling, a bare list fails next().
-        return iter(list(self._rows(s, e))), {"index": e}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # recovery path: deterministic re-read of a committed range
-        return iter(list(self._rows(start["index"], end["index"])))
-
-    def _rows(self, start: int, end: int):
-        import datetime
-        import hashlib
-
-        base = datetime.datetime(2024, 1, 1)
-        for i in range(start, end):
-            h = int.from_bytes(
-                hashlib.md5(f"{self.seed}|{i}".encode()).digest()[:8], "big"
             )
             yield (
                 i,

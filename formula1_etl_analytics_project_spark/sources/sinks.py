@@ -45,65 +45,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC twin of ``write_parquet`` - same columnar/pushdown properties
-    through Spark's native ORC source, for sinks that feed Hive/Trino
-    estates standardized on ORC."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_sharded(
-    df: DataFrame,
-    path: str,
-    order_col: str | list[str],
-    rows_per_file: int = 100_000,
-    num_shards: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Training-shard writer: globally ORDERED, size-BOUNDED output
-    files - the layout a data loader streams sequentially (e.g. the
-    epoch-shuffle key from `epoch_shuffle_docs` as ``order_col`` gives
-    resumable pseudorandom shards).
-
-    Mechanics: ``repartitionByRange(order_col)`` gives disjoint,
-    ordered key ranges per partition (sampled range bounds - one extra
-    sampling pass, no global sort); ``sortWithinPartitions`` orders
-    rows inside each; ``maxRecordsPerFile`` splits any oversized
-    partition into sequential files, so EVERY output file holds a
-    contiguous key range of at most ``rows_per_file`` rows. Verified
-    by tests/test_sharded_write.py (per-file caps + non-overlapping
-    per-file key ranges).
-
-    At 100 TB this is the answer to both small-files and
-    giant-file problems at once: AQE/range sampling sizes the
-    partitions, the record cap bounds the worst case, and no stage
-    ever funnels through a single task (contrast ``coalesce(1)`` or a
-    global ``orderBy`` + single writer).
-    """
-    if rows_per_file < 1:
-        raise ValueError(f"rows_per_file must be >= 1, got {rows_per_file}")
-    cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    out = (
-        df.repartitionByRange(num_shards, *cols)
-        if num_shards
-        else df.repartitionByRange(*cols)
-    )
-    (
-        out.sortWithinPartitions(*cols)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", rows_per_file)
-        .parquet(path)
-    )
-
-
 def upsert(
     existing: DataFrame,
     incoming: DataFrame,
@@ -658,7 +599,9 @@ def commit_log_upsert(
     snapshot through the same link; ``merge_epoch_batch`` reads it
     back with :func:`read_committed` to skip a replayed micro-batch
     BEFORE re-merging - exactly-once even when the merge itself is
-    not idempotent.
+    not idempotent. A commit without ``epoch_id`` carries the head's
+    epoch forward, so a plain merge into a streaming store does not
+    make the stream forget its committed epoch.
 
     Durability/portability: link-into-place is atomic on POSIX; the
     HDFS equivalent is rename-without-overwrite, and on S3 it maps to
@@ -710,9 +653,10 @@ def commit_log_upsert(
         tmp_claim = posixpath.join(
             _log_path(path), f".claim_tmp_{_uuid.uuid4().hex[:12]}"
         )
+        epoch = committed[2] if epoch_id is None and committed else epoch_id
         with open(tmp_claim, "w") as f:
-            epoch = "" if epoch_id is None else f" epoch={epoch_id}"
-            f.write(f"{snap_dir}{epoch}\n")
+            token = "" if epoch is None else f" epoch={epoch}"
+            f.write(f"{snap_dir}{token}\n")
             f.flush()
             _os.fsync(f.fileno())
         try:
@@ -725,17 +669,15 @@ def commit_log_upsert(
             )
             continue
         _os.unlink(tmp_claim)
-        # prune snapshots older than previous (keep winner + previous
-        # for in-flight readers), plus orphans from crashed losers
-        keep_dirs = {snap_dir}
-        if committed is not None:
-            keep_dirs.add(committed[1])
+        # prune snapshots numbered below the previous commit's (the
+        # new head and the previous stay for in-flight readers), plus
+        # orphans from crashed losers.
         # NB: stale ".claim_tmp_" files from crashed writers are left
         # in place deliberately - unlinking them here would race an
         # in-flight writer between its temp write and its link().
         # They are dot-prefixed (invisible to readers) and tiny.
         for name in _os.listdir(path):
-            if name.startswith("_snap_") and name not in keep_dirs:
+            if name.startswith("_snap_"):
                 n_part = name.split("_")[2]
                 if n_part.isdigit() and int(n_part) < base_n:
                     _shutil.rmtree(

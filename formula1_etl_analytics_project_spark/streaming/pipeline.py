@@ -134,65 +134,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` -
-    the Spark 4 arbitrary-stateful-processing API that supersedes
-    ``applyInPandasWithState`` (stateful_user_totals above keeps the
-    legacy form for comparison).
-
-    What the new API buys at scale: named state variables with
-    per-variable schemas (value/list/map state) instead of one opaque
-    tuple, native TTL on state values, timers for event-/processing-
-    time callbacks, and schema evolution of state across restarts.
-    Requires the RocksDB state store provider (callers set
-    ``spark.sql.streaming.stateStore.providerClass``; the catalog
-    entry scopes that to its own query).
-
-    The running sum is kept in integer CENTS (callers pre-compute a
-    ``cents`` long column): integer addition is associative, so the
-    final state is bit-identical however the stream is micro-batched -
-    the float-accumulation drift the legacy operator papers over with
-    ROUND is designed out.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("cents", LongType())]
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n, cents = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType="user_id long, n_events long, cents long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def incremental_upsert_stream(
     events: DataFrame,
     snapshot_path: str,

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from formula1_etl_analytics_project_spark.operators.dedup import (
-    dedup_exact,
     dedup_keep_first,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -54,12 +53,6 @@ def test_approx_sketches_within_bounds(spark):
     ).collect()[0]
     assert abs(row["approx_d"] - row["exact_d"]) / row["exact_d"] < 0.06
     assert abs(row["approx_p"] - row["exact_p"]) <= 1.0
-
-
-def test_dedup_exact(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "a"), (2, "b")], ["k", "v"])
-    assert dedup_exact(df).count() == 2
-    assert dedup_exact(df, ["k"]).count() == 2
 
 
 def test_dedup_keep_first_deterministic(spark):

@@ -81,6 +81,41 @@ def test_sql_surface_over_loaded_star(spark, etl_out):
     assert n == counts["results"]
 
 
+def test_registered_views_use_the_written_schema_and_start_no_job(
+    spark, etl_out, tmp_path_factory, monkeypatch
+):
+    """With ``register``, each view reads its table with the schema its
+    write used: the view has the schema a schema-inferring read finds,
+    and registering the 15 views starts no Spark job."""
+    from formula1_etl_analytics_project_spark import etl
+
+    _, _, csv_path = etl_out
+    sc = spark.sparkContext
+    write = etl.write_parquet
+
+    def write_in_own_group(*args, **kwargs):
+        # Runs in a pool thread, whose job group is its own copy: the
+        # write jobs leave the test's group, the registration stays in it.
+        sc.setJobGroup("run_etl-writes", "writes")
+        write(*args, **kwargs)
+
+    monkeypatch.setattr(etl, "write_parquet", write_in_own_group)
+    out = str(tmp_path_factory.mktemp("registered"))
+    sc.setJobGroup("run_etl-register", "registration")
+    try:
+        run_etl(spark, csv_path, out)
+    finally:
+        sc.setJobGroup("", "")
+    # The status store is fed through the listener bus: drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("run_etl-writes")
+    assert list(tracker.getJobIdsForGroup("run_etl-register")) == []
+    for name in LOAD_ORDER:
+        inferred = spark.read.parquet(f"{out}/{name}").schema
+        assert spark.table(name).schema == inferred, name
+
+
 def test_rerun_is_idempotent(spark, etl_out, tmp_path_factory):
     """Overwrite-mode reload (the reference's S6 DELETE-reset) yields
     identical counts on rerun."""

@@ -1,32 +1,13 @@
-"""Source/sink format breadth beyond parquet: ORC round-trip (Spark's
-second native columnar format) and line-oriented text reads. Complements
-the CSV sentinel and JSONL entries in the oracle gate."""
+"""Source/sink format breadth beyond parquet: JDBC write construction,
+line-oriented text reads, small-file compaction and observed write
+metrics. Complements the CSV sentinel and JSONL entries in the oracle
+gate."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from formula1_etl_analytics_project_spark.sources.readers import read_table
-from formula1_etl_analytics_project_spark.sources.sinks import write_orc
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_orc_round_trip_preserves_values(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("orc") / "supplier")
-    src = read_table(spark, SF, "supplier")
-    write_orc(src, path)
-    back = spark.read.orc(path)
-    assert back.schema == src.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
-
-
-def test_orc_filter_pushdown(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("orc") / "orders")
-    write_orc(read_table(spark, SF, "orders"), path)
-    df = spark.read.orc(path).filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    assert "PushedFilters" in plan and "o_orderstatus" in plan.split("PushedFilters")[1].splitlines()[0]
 
 
 def test_jdbc_write_construction(spark):

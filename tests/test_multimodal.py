@@ -10,7 +10,6 @@ from formula1_etl_analytics_project_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_features,
     frame_sample,
-    resize_images,
 )
 
 
@@ -49,14 +48,3 @@ def test_frame_sample_timing(media):
     assert {r["media_id"] for r in frames} == {4}
     assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
     assert [r["frame_idx"] for r in frames] == [0, 1, 2, 3]
-
-
-def test_resize_images_contract(media):
-    out = resize_images(media, width=32, height=32).collect()
-    by_id = {r["media_id"]: r for r in out}
-    # only image rows pass through; dims updated; payload transformed
-    assert set(by_id) == {1, 2, 3}
-    assert all(r["width"] == 32 and r["height"] == 32 for r in out)
-    assert by_id[1]["payload"] is not None
-    assert by_id[1]["payload"] != by_id[2]["payload"]
-    assert by_id[3]["payload"] is None  # null payload survives as null

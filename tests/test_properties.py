@@ -15,6 +15,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from formula1_etl_analytics_project_spark.operators.dedup import dedup_keep_first
+from formula1_etl_analytics_project_spark.operators.graph import PR_BASE, PR_INIT
 from formula1_etl_analytics_project_spark.sources.sinks import upsert
 
 SETTINGS = settings(max_examples=20, deadline=None)
@@ -147,6 +148,32 @@ edges_strategy = st.lists(
 )
 
 
+def pagerank_fixed_point_local(
+    edge_list: list[tuple[int, int]],
+    iterations: int = 3,
+    init: int = PR_INIT,
+    base: int = PR_BASE,
+    damping_pct: int = 85,
+) -> dict[int, int]:
+    """Pure-Python reference fixpoint with IDENTICAL integer
+    arithmetic - the oracle for property tests: on any graph, the
+    distributed iteration must reproduce this exactly."""
+    edges = sorted(set(edge_list))
+    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
+    outdeg: dict[int, int] = {}
+    for s, _ in edges:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    ranks = {n: init for n in nodes}
+    for _ in range(iterations):
+        inc: dict[int, int] = {}
+        for s, d in edges:
+            inc[d] = inc.get(d, 0) + ranks[s] // outdeg[s]
+        ranks = {
+            n: base + (damping_pct * inc.get(n, 0)) // 100 for n in nodes
+        }
+    return ranks
+
+
 @given(edge_list=edges_strategy)
 @SETTINGS
 def test_pagerank_matches_pure_python_fixpoint(spark, edge_list):
@@ -155,10 +182,7 @@ def test_pagerank_matches_pure_python_fixpoint(spark, edge_list):
     nodes, isolated sources, cycles): integer arithmetic means there
     is no tolerance - a single-unit drift is a bug in the iteration
     structure, not rounding."""
-    from formula1_etl_analytics_project_spark.operators.graph import (
-        pagerank_fixed_point,
-        pagerank_fixed_point_local,
-    )
+    from formula1_etl_analytics_project_spark.operators.graph import pagerank_fixed_point
 
     distinct_edges = sorted(set(edge_list))
     edges = spark.createDataFrame(distinct_edges, ["src", "dst"])
@@ -275,6 +299,24 @@ undirected_edges_strategy = st.lists(
 ).map(lambda es: [(a, b) for a, b in es if a != b])
 
 
+def triangle_counts_local(
+    edge_list: list[tuple[int, int]],
+) -> dict[int, int]:
+    """Brute-force per-node triangle counts - the property-test oracle."""
+    und = {(min(a, b), max(a, b)) for a, b in edge_list if a != b}
+    adj: dict[int, set[int]] = {}
+    for a, b in und:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    counts: dict[int, int] = {}
+    for a, b in und:
+        for c in adj[a] & adj[b]:
+            if c > b:  # a < b < c: each triangle found once
+                for n in (a, b, c):
+                    counts[n] = counts.get(n, 0) + 1
+    return counts
+
+
 @given(edge_list=undirected_edges_strategy)
 @SETTINGS
 def test_triangle_counts_match_brute_force(spark, edge_list):
@@ -283,10 +325,7 @@ def test_triangle_counts_match_brute_force(spark, edge_list):
     graph — duplicate orientations and degree ties included (the
     orientation's (deg, id) tiebreak is the part a subtle bug would
     break)."""
-    from formula1_etl_analytics_project_spark.operators.graph import (
-        triangle_counts,
-        triangle_counts_local,
-    )
+    from formula1_etl_analytics_project_spark.operators.graph import triangle_counts
 
     distinct = sorted({(min(a, b), max(a, b)) for a, b in edge_list})
     if not distinct:
@@ -308,6 +347,20 @@ points_strategy = st.lists(
 )
 
 
+def pareto_frontier_2d_local(
+    points: list[tuple[int, float]],
+) -> set[tuple[int, float]]:
+    """Brute-force O(n^2) dominance oracle for property tests."""
+    return {
+        (xi, yi)
+        for xi, yi in points
+        if not any(
+            (xj <= xi and yj >= yi and (xj < xi or yj > yi))
+            for xj, yj in points
+        )
+    }
+
+
 @given(points=points_strategy)
 @SETTINGS
 def test_pareto_frontier_matches_brute_force(spark, points):
@@ -315,10 +368,7 @@ def test_pareto_frontier_matches_brute_force(spark, points):
     dominance oracle's frontier on any point set — coordinate ties,
     duplicate points, and bucket-boundary cases included (the prune's
     losslessness is the property under test)."""
-    from formula1_etl_analytics_project_spark.operators.skyline import (
-        pareto_frontier_2d,
-        pareto_frontier_2d_local,
-    )
+    from formula1_etl_analytics_project_spark.operators.skyline import pareto_frontier_2d
 
     distinct = sorted(set(points))
     df = spark.createDataFrame(distinct, "x int, y int")

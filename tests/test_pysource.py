@@ -50,43 +50,3 @@ def test_composes_with_engine_ops(spark):
     agg = df.groupBy("event_type").agg(F.count("*").alias("n")).collect()
     assert sum(r["n"] for r in agg) == 400
     assert all(r["n"] > 0 for r in agg)
-
-
-def test_streaming_source_matches_batch_rows(spark):
-    """The streaming form must deliver EXACTLY the batch source's rows
-    (same (seed, i) function, same schema) once drained - the
-    replayability property Structured Streaming's exactly-once rests
-    on - across several micro-batches (batch_rows < max_rows)."""
-    from formula1_etl_analytics_project_spark.sources.pysource import (
-        SyntheticEventsDataSource,
-        SyntheticEventsStreamDataSource,
-    )
-
-    spark.dataSource.register(SyntheticEventsDataSource)
-    spark.dataSource.register(SyntheticEventsStreamDataSource)
-
-    q = (
-        spark.readStream.format("synthetic_events_stream")
-        .option("max_rows", 100)
-        .option("batch_rows", 37)
-        .load()
-        .writeStream.format("memory")
-        .queryName("pystream")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        tuple(r) for r in spark.sql("SELECT * FROM pystream").collect()
-    )
-    expected = sorted(
-        tuple(r)
-        for r in spark.read.format("synthetic_events")
-        .option("rows", 100)
-        .load()
-        .collect()
-    )
-    assert got == expected
-    assert len(got) == 100

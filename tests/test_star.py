@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from formula1_etl_analytics_project_spark.operators.joins import integrity_violations
-from formula1_etl_analytics_project_spark.plans.star import BUILDERS, build_star, reconstruct_wide
+from formula1_etl_analytics_project_spark.plans.star import BUILDERS, reconstruct_wide
 from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
 
 from tests.f1_fixture import write_csv
@@ -35,7 +35,7 @@ def wide(spark, wide_csv):
 
 @pytest.fixture(scope="module")
 def star(wide):
-    return build_star(wide)
+    return {n: f(wide) for n, f in BUILDERS.items()}
 
 
 @pytest.fixture(scope="module")

@@ -277,3 +277,29 @@ def test_malformed_head_epoch_raises_and_keeps_the_store(spark, tmp_path_factory
     assert sorted(os.listdir(f"{path}/_log")) == ["00000001.commit"]
     kept = spark.read.parquet(f"{path}/{snap_dir}")
     assert {r["k"]: r["v"] for r in kept.collect()} == {1: "a", 2: "b"}
+
+
+def test_plain_upsert_keeps_the_committed_epoch(spark, tmp_path_factory):
+    """A plain ``commit_log_upsert`` into a streaming store carries the
+    head's epoch forward: a later replay of that epoch is still skipped
+    and does not overwrite the plain upsert's value."""
+    from formula1_etl_analytics_project_spark.sources.sinks import (
+        commit_log_upsert,
+        read_committed,
+        read_committed_snapshot,
+    )
+    from formula1_etl_analytics_project_spark.streaming.pipeline import (
+        merge_epoch_batch,
+    )
+
+    path = str(tmp_path_factory.mktemp("eo_plain") / "store")
+    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    assert merge_epoch_batch(b0, 0, path, ["k"]) is True
+    plain = spark.createDataFrame([(1, "plain")], "k long, v string")
+    assert commit_log_upsert(spark, plain, path, ["k"]) == 2
+    assert read_committed(path)[2] == 0
+
+    replay = spark.createDataFrame([(1, "REPLAY")], "k long, v string")
+    assert merge_epoch_batch(replay, 0, path, ["k"]) is False
+    snap = {r["k"]: r["v"] for r in read_committed_snapshot(spark, path).collect()}
+    assert snap == {1: "plain", 2: "b"}

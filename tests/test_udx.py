@@ -9,12 +9,18 @@ from pyspark.sql import functions as F
 
 from formula1_etl_analytics_project_spark.functions.udx import (
     sentence_split_udtf,
-    weighted_mean_native,
     weighted_mean_udaf,
 )
 from formula1_etl_analytics_project_spark.sources.readers import read_table
 
 SF = "/root/testdata/sf0.001"
+
+
+def weighted_mean_native(x, w):
+    """The expression Catalyst can optimize - prefer in hot paths."""
+    x = F.col(x) if isinstance(x, str) else x
+    w = F.col(w) if isinstance(w, str) else w
+    return F.sum(x * w) / F.sum(w)
 
 
 def test_weighted_mean_udaf_matches_native(spark):
