@@ -143,13 +143,6 @@ def int_with_default(col: Column | str, default: int = 0) -> Column:
     return F.coalesce(c.try_cast("int"), F.lit(default))
 
 
-def date_parts(col: Column | str) -> tuple[Column, Column, Column]:
-    """C9/P3 (reference date_etl.py:27-32): date -> (day, month, year) ints."""
-    c = F.col(col) if isinstance(col, str) else col
-    d = c.cast("date")
-    return F.dayofmonth(d), F.month(d), F.year(d)
-
-
 def age_years(dob: Column | str, as_of_year: Column | None = None) -> Column:
     """P4 (reference driver_etl.py:47-49): ``now.year - dob.year``.
 

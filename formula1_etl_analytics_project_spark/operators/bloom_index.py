@@ -1,29 +1,30 @@
-"""Per-partition key Bloom index for partitioned-upsert moved-key checks.
+"""Per-partition key Bloom index: a moved-key probe that reads a sidecar
+instead of the table.
 
 ``upsert_parquet_partitioned`` must reject an incoming row whose key
 already lives under a DIFFERENT partition value (dynamic partition
 overwrite would otherwise leave the old row in place — a silent
-cross-partition duplicate). The exact check scans the whole snapshot's
-(keys, partition) projection on every merge: column-pruned, but still a
-full-table key scan — fine at sf0.1 (measured in SCALING.md), a
-100 TB-table scan per merge at scale.
+cross-partition duplicate). It does so with one exact check, a
+(keys, partition) projection scan of the whole table per merge;
+SCALING.md ("Moved-key check at scale") records why that is its only
+check.
 
-This module is the scale answer (VERDICT r03 task 8): a Bloom-filter
-index over each partition's key set, kept as a parquet sidecar under
-``<table>/_key_blooms`` and maintained incrementally — each merge
-rebuilds only the touched partitions' filters (the same dynamic
-partition overwrite the data write uses). A merge then checks moved
-keys by:
+This module answers the same question from a Bloom-filter index over
+each partition's key set, kept as a parquet sidecar under
+``<table>/_key_blooms``. The sidecar is built once
+(``build_key_bloom_index``) and read by ``probe_moved_keys``; no merge
+maintains it, so a probe is only as current as its last build. The
+catalog entry ``bloom_moved_key_probe`` runs it. A probe checks
+moved keys by:
 
-1. EXACT check inside the partitions the merge already reads (those
-   scans are paid for anyway — no extra IO);
-2. Bloom probe of all OTHER partitions' filters, merged into one
-   "anywhere else?" filter (distributed OR — no bitmap ever visits the
-   driver). Honest inserts and same-partition updates are negative and
-   cost O(|incoming keys| x k) expression work, no table IO;
-3. positives re-probe the PER-PARTITION filters to name their suspect
+1. Bloom probe of all partitions the batch does not write, merged
+   into one "anywhere else?" filter (distributed OR — no bitmap ever
+   visits the driver). Honest inserts and same-partition updates are
+   negative and cost O(|incoming keys| x k) expression work, no table
+   IO;
+2. positives re-probe the PER-PARTITION filters to name their suspect
    partitions (input is only the positives, so the fan-out is tiny);
-4. an exact, PARTITION-PRUNED verification scan of just the suspect
+3. an exact, PARTITION-PRUNED verification scan of just the suspect
    partitions confirms or clears each candidate (false positives cost
    one small pruned scan, never the table).
 
@@ -41,7 +42,7 @@ Kirsch-Mitzenmacher construction.
 
 Reference parity note: the reference app has no partitioned MERGE at
 all (its MERGE INTO experiment is orphaned — SURVEY.md §2 J3); this
-index exists for the 100 TB design goal, not reference behavior.
+index is not reference behavior.
 """
 
 from __future__ import annotations
@@ -171,11 +172,9 @@ def build_key_bloom_index(
     expected_keys_per_partition: int,
     fpp: float = 0.001,
 ) -> tuple[int, int]:
-    """One-time full build of the sidecar index for an existing table
-    (the only full-table key scan in the index's life; every subsequent
-    merge updates just its touched partitions). Persists (nbits,
-    nhashes) so later merges and probes agree on the hash geometry.
-    Returns (nbits, nhashes)."""
+    """Full build of the sidecar index for an existing table (one
+    full-table key scan). Persists (nbits, nhashes) so later probes
+    agree on the hash geometry. Returns (nbits, nhashes)."""
     nbits, nhashes = bloom_params(expected_keys_per_partition, fpp)
     snapshot = spark.read.parquet(path).select(partition_col, *keys)
     words = bloom_words(snapshot, keys, partition_col, nbits, nhashes)
@@ -186,28 +185,6 @@ def build_key_bloom_index(
         [(nbits, nhashes)], "nbits long, nhashes int"
     ).write.mode("overwrite").parquet(_meta_path(path))
     return nbits, nhashes
-
-
-def update_key_bloom_index(
-    spark, path: str, merged: DataFrame, keys: list[str], partition_col: str
-) -> None:
-    """Refresh the touched partitions' filters from ``merged`` (the
-    touched partitions' rows) — same per-write dynamic partition
-    overwrite as the data write, so the sidecar stays consistent
-    partition-by-partition and the session conf is never changed."""
-    meta = read_meta(spark, path)
-    if meta is None:
-        raise FileNotFoundError(
-            f"no Bloom index under {path}; run build_key_bloom_index first"
-        )
-    nbits, nhashes = meta
-    words = bloom_words(merged, keys, partition_col, nbits, nhashes)
-    (
-        words.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(_bloom_path(path))
-    )
 
 
 def _all_bits_present(
@@ -256,7 +233,7 @@ def probe_moved_keys(
     partition-pruned scan confirms it holds the key. Empty result ==
     batch is partition-stable outside its own partitions.
 
-    Stage 2 of the module docstring runs against the OR of every
+    Stage 1 of the module docstring runs against the OR of every
     other-partition filter; only its (FPP-bounded) positives fan out to
     the per-partition probe and the pruned verification scan.
     """
@@ -275,14 +252,14 @@ def probe_moved_keys(
     other_words = spark.read.parquet(_bloom_path(path)).filter(
         ~in_partitions(partition_col, parts)
     )
-    # stage 2: one merged "anywhere-else" filter (distributed OR)
+    # stage 1: one merged "anywhere-else" filter (distributed OR)
     merged_words = other_words.groupBy("word_idx").agg(
         F.bit_or("word").alias("word")
     )
     positives = _all_bits_present(
         probes, merged_words, ["word_idx"], [*keys, partition_col]
     )
-    # stage 3: name suspect partitions — re-probe the PER-PARTITION
+    # stage 2: name suspect partitions — re-probe the PER-PARTITION
     # filters with ONLY the positives. Each positive must test all its
     # positions against EVERY other partition (an absent word row is a
     # miss for that partition, so the partition axis has to be made
@@ -304,7 +281,7 @@ def probe_moved_keys(
         ["__old_part", "word_idx"],
         [*keys, "__new_part", "__old_part"],
     )
-    # stage 4: exact, partition-pruned verification
+    # stage 3: exact, partition-pruned verification
     suspect_parts = [
         r[0] for r in suspect.select("__old_part").distinct().collect()
     ]

@@ -33,12 +33,13 @@ def dedup_keep_first(
 ) -> DataFrame:
     """D2/D3: deterministic keep-first - the pandas
     ``drop_duplicates(keep='first')`` semantics with the implicit frame
-    order made explicit (reference CompleteETL.py:25-37,431-444)."""
+    order made explicit (reference CompleteETL.py:25-37,431-444). The
+    double-underscore temp column leaves a user column ``_rn`` alone."""
     w = Window.partitionBy(*keys).orderBy(*order_by)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
     )
 
 
@@ -525,26 +526,6 @@ def connected_components(
     return labels
 
 
-def simhash64(
-    text_col: Column | str, nbits: int = 16, hex_offset: int = 1
-) -> Column:
-    """SimHash over word tokens (default 16-bit for oracle
-    portability; :func:`simhash64_wide` packs two 32-bit halves for
-    the full 64-bit form).
-
-    Each token votes its md5-derived bits (hex digits starting at
-    ``hex_offset`` - the wide variant draws its two halves from
-    disjoint ranges); the signature takes the sign of each bit's vote
-    sum. Pure higher-order functions - no UDF. ``nbits`` must be <= 32
-    so the power-of-two packing stays exact in double.
-    """
-    if nbits > 32:
-        raise ValueError("simhash64: nbits > 32 -> use simhash64_wide")
-    return _simhash_from_digests(
-        _word_digests(text_col), nbits=nbits, hex_offset=hex_offset
-    )
-
-
 def _word_digests(text_col: Column | str) -> Column:
     """array<string>: one md5 hex digest per word token. The shared
     input both 32-bit SimHash halves (and any future band scheme)
@@ -555,7 +536,12 @@ def _word_digests(text_col: Column | str) -> Column:
 def _simhash_from_digests(
     digests: Column, nbits: int, hex_offset: int
 ) -> Column:
-    """SimHash over pre-computed digest strings (see simhash64)."""
+    """SimHash over pre-computed digest strings: each token votes the
+    ``nbits`` md5-derived bits that start at hex digit ``hex_offset``,
+    and the signature takes the sign of each bit's vote sum. Pure
+    higher-order functions - no UDF. ``nbits`` must be <= 32 so the
+    power-of-two packing stays exact in double; :func:`simhash64_wide`
+    packs two 32-bit halves for the full 64-bit form."""
     hashes = F.transform(
         digests,
         lambda d: F.conv(

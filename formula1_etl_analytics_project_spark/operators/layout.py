@@ -1,6 +1,6 @@
 """Multi-dimensional data layout: Z-order (Morton) clustering.
 
-Why this exists at 100 TB: parquet scans prune on per-row-group
+Why this exists: parquet scans prune on per-row-group
 min/max statistics. Sorting a table by ONE column makes that column's
 ranges tight but leaves every other column's ranges spanning the whole
 domain - a filter on the second column prunes nothing. Interleaving
@@ -12,8 +12,8 @@ ZORDER BY applies; here it is plain ``repartitionByRange`` + a bit-
 interleave expression, no table format required.
 
 The key is computed with built-in integer expressions (shiftright /
-% / *) - JVM-codegen'd, no UDF - and is dropped before the write, so
-the files carry only user columns.
+% / *) - JVM-codegen'd, no UDF - and ``zorder_sql`` restates it for
+DuckDB; the ``zorder_layout`` catalog entry runs both.
 
 Reference scope note: the reference's only layout decision is two
 single-column MSSQL indexes (``DDL Final.sql:230-231``); Z-order is
@@ -23,7 +23,7 @@ filter on".
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def zorder_key(cols: list[Column | str], bits: int = 12) -> Column:
@@ -58,29 +58,3 @@ def zorder_sql(cols: list[str], bits: int = 12) -> str:
                 f"((({v} // {2**b}) % 2) * {2 ** (b * len(cols) + ci)})"
             )
     return "(" + " + ".join(terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[Column | str],
-    bits: int = 12,
-    num_files: int = 8,
-) -> None:
-    """Write ``df`` clustered on the Morton key of ``cols``.
-
-    ``repartitionByRange`` on the key gives each output file a
-    contiguous Morton range (a small hyper-rectangle soup rather than
-    a full-domain slice), and the within-partition sort tightens
-    row-group stats inside each file. Readers need nothing special:
-    plain min/max pruning on the ORIGINAL columns now works for
-    filters on any clustered dimension.
-    """
-    keyed = df.withColumn("__z", zorder_key(cols, bits))
-    (
-        keyed.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -122,78 +122,3 @@ def distributed_sequence(
         )
         .drop(_PID, _LOCAL, "__offset")
     )
-
-
-def distributed_cumsum(
-    df: DataFrame,
-    order_col: str,
-    val_col: str,
-    out_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Running total of ``val_col`` (long) in ``order_col`` order with
-    no single-partition window - the prefix-sum twin of
-    :func:`distributed_sequence`, same two-phase shape:
-
-    1. range-partition + local sort on ``order_col``;
-    2. one mapInPandas pass stamps each row's LOCAL prefix sum
-       (inclusive) per partition;
-    3. per-partition totals (k rows) become broadcast offsets:
-       ``cumsum = offset + local_cumsum``.
-
-    ``order_col`` must be unique per row (ties would make the prefix
-    sum order-dependent); ``val_col`` must be integral - exact
-    arithmetic is the point, callers doing weighted selection on the
-    running total (operators/sampling.py) rely on it.
-    """
-    ranged = (
-        df.repartitionByRange(num_partitions, order_col)
-        if num_partitions
-        else df.repartitionByRange(order_col)
-    )
-    ranged = ranged.sortWithinPartitions(order_col)
-
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(ranged.schema.fields)
-        + [StructField(_PID, IntegerType()), StructField(_LOCAL, LongType())]
-    )
-
-    def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        running = 0
-        for b in batches:
-            b = b.copy()
-            b[_PID] = pid
-            local = b[val_col].astype("int64").cumsum() + running
-            b[_LOCAL] = local
-            running = int(local.iloc[-1]) if len(b) else running
-            yield b
-
-    stamped = ranged.mapInPandas(stamp, schema=out_schema).persist()
-
-    # Partition total = sum of values, NOT max of the local prefix sum
-    # (they agree only for non-negative values; sum is sign-safe).
-    totals = stamped.groupBy(_PID).agg(
-        F.sum(F.col(val_col).cast("long")).alias("__n")
-    )
-    offsets = totals.select(
-        _PID,
-        F.coalesce(
-            F.sum("__n").over(
-                Window.orderBy(_PID).rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("__offset"),
-    )
-
-    return (
-        stamped.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, (F.col("__offset") + F.col(_LOCAL)).cast("long"))
-        .drop(_PID, _LOCAL, "__offset")
-    )

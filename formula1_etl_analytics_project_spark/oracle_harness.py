@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import hashlib
 import math
 
 import numpy as np
@@ -47,7 +46,6 @@ __all__ = [
     "compare_frames",
     "duck_df",
     "spark_df",
-    "value_hash",
 ]
 
 
@@ -124,15 +122,6 @@ def canon_frame(df: pd.DataFrame):
         for row in df[cols].itertuples(index=False, name=None)
     )
     return cols, rows
-
-
-def value_hash(df: pd.DataFrame) -> str:
-    cols, rows = canon_frame(df)
-    h = hashlib.sha256()
-    h.update(("|".join(cols) + "\n").encode())
-    for r in rows:
-        h.update((repr(r) + "\n").encode())
-    return h.hexdigest()[:16]
 
 
 def compare_frames(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> dict:

@@ -1,13 +1,14 @@
 """Round-11 catalog entries (round 4) - 3 entries:
 
 * `bloom_moved_key_probe` - the per-partition key Bloom index
-  (operators/bloom_index.py, the scale path for the partitioned
-  upsert's moved-key check) exercised end-to-end in the gate: stage a
+  (operators/bloom_index.py, a sidecar-only moved-key probe; the
+  partitioned upsert itself checks exactly, see SCALING.md "Moved-key
+  check at scale") exercised end-to-end in the gate: stage a
   year-partitioned orders snapshot + its filter sidecar, probe an
   incoming batch of cross-partition movers and brand-new inserts, and
   return the CONFIRMED moved keys. The result is provably exact (no
   false negatives by Bloom's guarantee, no false positives because
-  stage 4 verifies with a partition-pruned exact scan), so the DuckDB
+  stage 3 verifies with a partition-pruned exact scan), so the DuckDB
   oracle is simply the true moved-key set - an approximate index whose
   output is gate-checkable without tolerance.
 * `bpe_merge_step` - one iteration of BPE tokenizer training: the
@@ -64,7 +65,7 @@ WHERE o_orderkey % 97 = 0
     gate_priority=True,
 )
 def q_bloom_moved_key_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moved-key detection via the partitioned-upsert Bloom sidecar.
+    """Moved-key detection via the per-partition key Bloom sidecar.
 
     Stages orders partitioned by order year with its per-partition key
     Bloom index (one-time per testdata fingerprint; the probe is
@@ -78,10 +79,10 @@ def q_bloom_moved_key_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Why this is oracle-checkable even though Bloom filters are
     approximate: the probe pipeline has NO false negatives (a set
     member's bits are always set) and NO false positives in its output
-    (stage 4 re-checks every candidate against a partition-PRUNED
+    (stage 3 re-checks every candidate against a partition-PRUNED
     exact scan), so the result equals the exact moved-key relation -
     which is what the DuckDB twin computes directly from orders. The
-    inserts land in the result of stage 2 only at the filter's FPP and
+    inserts land in the result of stage 1 only at the filter's FPP and
     are then cleared exactly.
 
     Shape at 100 TB: the probe reads the filter sidecar (~1.8 B/key),

@@ -417,11 +417,11 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive behind quality-threshold ablations - the output reports
     what the cut keeps per source.
 
-    Sibling of `operators.sequence.distributed_cumsum` (the
-    mapInPandas two-phase prefix sum used by the sampling operators):
-    this entry pins the pure-JVM variant - bucketed windows, no Python
-    worker - and supports a composite (score desc, id) order, which
-    distributed_cumsum's single ascending key does not.
+    Sibling of `operators.sequence.distributed_sequence` (the
+    mapInPandas two-phase running count): this entry pins a pure-JVM
+    running sum - bucketed windows, no Python worker - over a
+    composite (score desc, id) order, which a single ascending range
+    key does not support.
 
     The oracle states it as the obvious single global running sum.
     The Spark side computes the SAME prefix sum distributed: scores

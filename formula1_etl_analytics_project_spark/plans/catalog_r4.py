@@ -291,10 +291,9 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/layout.py): interleave the low 12 bits of customer and
     day-offset with pure integer expressions (JVM codegen, no UDF) and
     surface the lowest-key corner. The oracle restates the interleave
-    term-for-term. ``write_zordered`` uses this exact key to range-
-    partition + sort files so min/max pruning works on BOTH dimensions
-    - the test pins the per-file stats-tightness win over a
-    single-column sort."""
+    term-for-term. Range-partitioning + sorting files on this key makes
+    min/max pruning work on BOTH dimensions - the test pins the
+    per-file stats-tightness win over a single-column sort."""
     orders = read_table(spark, sf_dir, "orders")
     d = orders.select(
         "o_orderkey",

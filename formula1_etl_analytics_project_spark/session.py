@@ -20,7 +20,6 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def get_spark(
     app_name: str = "formula1-etl-analytics-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine session.
@@ -30,11 +29,10 @@ def get_spark(
     can be set post-hoc is applied through ``spark.conf`` afterwards.
     """
     cpus = cpus or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -90,9 +90,7 @@ def load_all(
 _REGISTERED_SF: dict[str, str] = {}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, force: bool = False
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Expose every testdata table as a temp view for the SQL surface
     (SURVEY.md EP3: the reference's only query layer is raw SQL).
 
@@ -101,7 +99,7 @@ def register_views(
     same directory are skipped (the common case - every SQL-surface
     catalog entry calls this defensively)."""
     key = spark.sparkContext.applicationId
-    if not force and _REGISTERED_SF.get(key) == sf_dir:
+    if _REGISTERED_SF.get(key) == sf_dir:
         return
     for name, df in load_all(spark, sf_dir).items():
         df.createOrReplaceTempView(name)

@@ -13,17 +13,21 @@ Reference behavior being replaced (SURVEY.md section 2.1/2.4):
     snapshot; on Delta/Iceberg the same logical plan becomes MERGE.
 
 Two merge targets: a year-partitioned fact merges in place by dynamic
-partition overwrite (``upsert_parquet_partitioned``); every
-whole-table snapshot goes through the commit log
-(``commit_log_upsert`` / ``read_committed_snapshot``: immutable
-snapshot dirs, one atomically linked commit file each, time travel,
-no lost updates). A streaming merge's epoch is written into its
-commit file, which is what makes ``merge_epoch_batch`` exactly-once.
+partition overwrite (``upsert_parquet_partitioned``), which refuses a
+batch that moves a key across partitions by one exact key-projection
+scan - the only moved-key check it has; every whole-table snapshot
+goes through the commit log (``commit_log_upsert`` /
+``read_committed_snapshot``: immutable snapshot dirs, one atomically
+linked commit file each, time travel, no lost updates). A streaming
+merge's epoch is written into its commit file, which is what makes
+``merge_epoch_batch`` exactly-once. Every keep-one-row-per-key step
+(``order_col`` keep-last, the latest CDC change) is
+``dedup_keep_first``.
 
 Scale notes: ``partition_by`` should be a low-cardinality natural key
-(e.g. year) so 100 TB writes produce prunable directories; the upsert
-shuffles both sides by the key - at scale, bucketing the base table on
-the merge key turns that into a shuffle-free join.
+(e.g. year) so writes produce prunable directories; the upsert
+shuffles both sides by the key - bucketing the base table on the
+merge key turns that into a shuffle-free join.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ from __future__ import annotations
 import posixpath
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from formula1_etl_analytics_project_spark.operators.dedup import dedup_keep_first
 
 
 def write_parquet(
@@ -96,14 +102,7 @@ def _keep_last(
     first batch into a new table."""
     if order_col is None:
         return incoming
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    return (
-        incoming.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return dedup_keep_first(incoming, keys, [F.col(order_col).desc()])
 
 
 def apply_changes(
@@ -143,19 +142,10 @@ def apply_changes(
     what that pattern becomes when the table no longer fits a full
     daily rewrite.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(seq_col).desc(), F.col(op_col).desc()
+    latest = dedup_keep_first(
+        changes, keys, [F.col(seq_col).desc(), F.col(op_col).desc()]
     )
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    survivors = snapshot.join(
-        latest.select(*keys).distinct(), on=keys, how="left_anti"
-    )
+    survivors = snapshot.join(latest.select(*keys), on=keys, how="left_anti")
     upserts = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
     return survivors.unionByName(upserts)
 
@@ -252,7 +242,6 @@ def upsert_parquet_partitioned(
     keys: list[str],
     partition_col: str,
     order_col: str | None = None,
-    check_moved_keys: bool | str = True,
     evolve_schema: bool = False,
 ) -> None:
     """Fact-scale MERGE on partitioned parquet: only the partitions
@@ -260,40 +249,22 @@ def upsert_parquet_partitioned(
     untouched partitions are never scanned and never written. This is
     the plain-parquet form of Delta/Iceberg's row-level MERGE
     (reference's orphaned MERGE INTO experiment, SURVEY J3) at the
-    grain that matters at 100 TB: a day's late data rewrites that
-    day's partition, not the table.
+    grain that matters: a day's late data rewrites that day's
+    partition, not the table.
 
     PARTITION-STABILITY INVARIANT: a key's partition value must never
     change between batches. Dynamic overwrite only rewrites partitions
     present in the incoming batch, so an incoming row whose key already
     exists under a DIFFERENT partition value would leave the old row in
-    place - the key silently duplicated across partitions. With
-    ``check_moved_keys=True`` (default) violations are detected before
-    any write and raise ``ValueError``: the snapshot is scanned as a
-    (keys, partition_col) projection - column-pruned, no data columns -
-    and inner-joined against the incoming keys on key-equal AND
-    partition-different. The check is skipped automatically when
-    ``partition_col`` is itself part of ``keys`` (a moved "key" is then
-    a different key by definition). Callers that guarantee stability
-    upstream can pass ``check_moved_keys=False`` to skip the
-    key-column scan.
-
-    SCALE: the exact check's key-projection scan is O(table) per merge
-    - measured in SCALING.md ("Moved-key check at scale": +0.37 s at
-    sf0.1 where job latency dominates; the scan term crosses the Bloom
-    path's ~3 s fixed overhead around O(10^8) rows on this container,
-    far below the 100 TB design point where it becomes a multi-TB
-    key-column scan per merge. Decision recorded there. Pass
-    ``check_moved_keys="bloom"`` to check against the per-partition
-    Bloom index sidecar instead (operators/bloom_index.py): the merge
-    then (1) checks exactly inside the partitions it already reads,
-    (2) probes incoming keys against the OR of every OTHER partition's
-    filter - no table IO - and (3) verifies the FPP-bounded positives
-    with a partition-PRUNED exact scan of just the suspect partitions.
-    The index must exist (build_key_bloom_index, a one-time full-key
-    scan); this function keeps it fresh by rebuilding the touched
-    partitions' filters from those partitions, read back after the
-    data write.
+    place - the key silently duplicated across partitions. Violations
+    are detected before any write and raise ``ValueError``: the
+    snapshot is scanned as a (keys, partition_col) projection -
+    column-pruned, no data columns - and inner-joined against the
+    incoming keys on key-equal AND partition-different. The check is
+    skipped only when ``partition_col`` is itself part of ``keys`` (a
+    moved "key" is then a different key by definition). The check is
+    an O(table) key-projection scan per merge; SCALING.md ("Moved-key
+    check at scale") explains why it is the only check.
 
     Mechanics: the path is read once, for both the pruned existing
     side and the moved-key scan; the table is new only when the path
@@ -324,20 +295,7 @@ def upsert_parquet_partitioned(
     pattern). Off by default: schema drift in a strict pipeline
     should fail loudly.
     """
-    if partition_col in keys:
-        check_moved_keys = False
-    if check_moved_keys == "bloom":
-        from formula1_etl_analytics_project_spark.operators import (
-            bloom_index as _bi,
-        )
-
-        if _bi.read_meta(spark, path) is None:
-            raise FileNotFoundError(
-                f"check_moved_keys='bloom' but no Bloom index under "
-                f"{path}; run build_key_bloom_index(spark, path, keys, "
-                f"partition_col, expected_keys_per_partition) once "
-                f"(for a brand-new table, after the first upsert)"
-            )
+    keys_can_move = partition_col not in keys
     merged = _keep_last(incoming, keys, order_col)
     Path = spark._jvm.org.apache.hadoop.fs.Path
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
@@ -361,28 +319,15 @@ def upsert_parquet_partitioned(
             partition_col, [*parts, None] if has_null else parts
         )
         existing = snapshot.filter(touched)
-        if check_moved_keys:
-            if check_moved_keys == "bloom":
-                # within the partitions this merge already scans, check
-                # exactly (no extra IO); everywhere else, via the index
-                snapshot_keys = existing.select(*keys, partition_col)
-            else:
-                snapshot_keys = snapshot.select(*keys, partition_col)
-            moved = (
-                snapshot_keys.withColumnRenamed(partition_col, "__old_part")
+        if keys_can_move:
+            moved_rows = (
+                snapshot.select(*keys, partition_col)
+                .withColumnRenamed(partition_col, "__old_part")
                 .join(incoming.select(*keys, partition_col), on=keys)
                 .filter(~F.col("__old_part").eqNullSafe(F.col(partition_col)))
                 .select(*keys, "__old_part", partition_col)
+                .collect()
             )
-            if check_moved_keys == "bloom":
-                moved = moved.unionByName(
-                    _bi.probe_moved_keys(
-                        spark, path, incoming, keys, partition_col
-                    )
-                    .withColumnRenamed("suspect_partition", "__old_part")
-                    .select(*keys, "__old_part", partition_col)
-                )
-            moved_rows = moved.collect()
             if moved_rows:
                 raise ValueError(
                     "upsert_parquet_partitioned: incoming batch moves key(s) "
@@ -405,11 +350,6 @@ def upsert_parquet_partitioned(
         .partitionBy(partition_col)
         .parquet(path)
     )
-    if check_moved_keys == "bloom":
-        # `merged` would now re-read the files the write just swapped
-        # in, so the index is fed from the touched partitions on disk
-        written = spark.read.parquet(path).filter(touched)
-        _bi.update_key_bloom_index(spark, path, written, keys, partition_col)
 
 
 def in_partitions(partition_col: str, values: list) -> Column:

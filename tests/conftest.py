@@ -10,5 +10,5 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="formula1-etl-analytics-spark-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="formula1-etl-analytics-spark-tests", cpus=8)
     yield s

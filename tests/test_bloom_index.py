@@ -1,26 +1,18 @@
-"""Per-partition key Bloom index (operators/bloom_index.py): the scale
-path for the partitioned upsert's moved-key check (VERDICT r03 task 8).
+"""Per-partition key Bloom index (operators/bloom_index.py): the
+sidecar-only moved-key probe that the catalog entry
+``bloom_moved_key_probe`` runs.
 
 Covers: filter build/probe correctness (no false negatives ever — a
-Bloom filter's hard guarantee), the FPP bound on honest inserts, the
-end-to-end bloom-mode upsert (accepts partition-stable batches, rejects
-movers with the same ValueError as the exact check), incremental index
-maintenance via dynamic partition overwrite, and the plan property that
-a clean probe never touches the data table.
+Bloom filter's hard guarantee), the FPP bound on honest inserts, and
+the plan property that a clean probe never touches the data table.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-
 import pytest
 
 from formula1_etl_analytics_project_spark.operators import bloom_index as bi
-from formula1_etl_analytics_project_spark.sources.sinks import (
-    upsert_parquet_partitioned,
-    write_parquet,
-)
+from formula1_etl_analytics_project_spark.sources.sinks import write_parquet
 
 
 def _mk_table(spark, tmp_path, n=300):
@@ -74,90 +66,11 @@ def test_probe_has_no_false_negatives_and_bounded_false_positives(
     assert bi.probe_moved_keys(spark, path, updates, ["k"], "part").count() == 0
 
 
-def test_bloom_mode_upsert_accepts_stable_and_rejects_movers(spark, tmp_path):
-    path = _mk_table(spark, tmp_path)
-    bi.build_key_bloom_index(
-        spark, path, ["k"], "part", expected_keys_per_partition=100
-    )
-    # stable batch: update k=0 in place + insert new key into A
-    ok = spark.createDataFrame(
-        [(0, "A", 9.0), (5000, "A", 1.0)], ["k", "part", "v"]
-    )
-    upsert_parquet_partitioned(
-        spark, ok, path, keys=["k"], partition_col="part",
-        check_moved_keys="bloom",
-    )
-    snap = spark.read.parquet(path)
-    assert snap.filter("k = 0").head()["v"] == 9.0
-    assert snap.filter("k = 5000").count() == 1
-    # mover: k=1 lives in B, incoming claims C -> same ValueError as
-    # the exact check
-    mover = spark.createDataFrame([(1, "C", -1.0)], ["k", "part", "v"])
-    with pytest.raises(ValueError, match="moves key"):
-        upsert_parquet_partitioned(
-            spark, mover, path, keys=["k"], partition_col="part",
-            check_moved_keys="bloom",
-        )
-    # mover WITHIN the scanned partitions is caught by the exact leg:
-    # batch touches B and C; k=1 (lives in B) claimed under C
-    mover2 = spark.createDataFrame(
-        [(1, "C", -1.0), (2, "C", 2.0)], ["k", "part", "v"]
-    )
-    with pytest.raises(ValueError, match="moves key"):
-        upsert_parquet_partitioned(
-            spark, mover2, path, keys=["k"], partition_col="part",
-            check_moved_keys="bloom",
-        )
-
-
-def test_bloom_mode_requires_index(spark, tmp_path):
-    path = _mk_table(spark, tmp_path)
-    batch = spark.createDataFrame([(0, "A", 9.0)], ["k", "part", "v"])
-    with pytest.raises(FileNotFoundError, match="build_key_bloom_index"):
-        upsert_parquet_partitioned(
-            spark, batch, path, keys=["k"], partition_col="part",
-            check_moved_keys="bloom",
-        )
-
-
-def test_index_update_rewrites_only_touched_partitions(spark, tmp_path):
-    path = _mk_table(spark, tmp_path)
-    bi.build_key_bloom_index(
-        spark, path, ["k"], "part", expected_keys_per_partition=100
-    )
-
-    def _mtimes(part):
-        return {
-            f: os.path.getmtime(f)
-            for f in glob.glob(
-                os.path.join(path, bi.BLOOM_DIR, f"part={part}", "*.parquet")
-            )
-        }
-
-    before_b, before_c = _mtimes("B"), _mtimes("C")
-    assert before_b and before_c
-    batch = spark.createDataFrame([(6000, "A", 1.0)], ["k", "part", "v"])
-    upsert_parquet_partitioned(
-        spark, batch, path, keys=["k"], partition_col="part",
-        check_moved_keys="bloom",
-    )
-    assert _mtimes("B") == before_b, "untouched partition filter rewritten"
-    assert _mtimes("C") == before_c
-    # the refreshed A-filter must know the new key: claiming 6000
-    # under B is now a detected move
-    mover = spark.createDataFrame([(6000, "B", -1.0)], ["k", "part", "v"])
-    with pytest.raises(ValueError, match="moves key"):
-        upsert_parquet_partitioned(
-            spark, mover, path, keys=["k"], partition_col="part",
-            check_moved_keys="bloom",
-        )
-
-
 def test_clean_probe_plan_never_scans_the_data_table(spark, tmp_path):
     """The point of the index: a batch of honest inserts whose probe
     comes back all-negative must decide WITHOUT reading the data table
     (the exact check's full key-projection scan is exactly what the
-    index removes). Clean probes skip stage 4, so the only parquet
+    index removes). Clean probes skip stage 3, so the only parquet
     reads are the sidecar's."""
     path = _mk_table(spark, tmp_path)
     bi.build_key_bloom_index(

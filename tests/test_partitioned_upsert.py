@@ -70,12 +70,6 @@ def test_partitioned_upsert_detects_cross_partition_key_move(spark, tmp_path):
     # nothing was written: snapshot unchanged
     rows = {r["k"]: (r["part"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert rows == {1: ("A", 1.0), 2: ("B", 2.0)}
-    # opt-out path still writes (caller owns the invariant)
-    upsert_parquet_partitioned(
-        spark, moved, path, keys=["k"], partition_col="part",
-        check_moved_keys=False,
-    )
-    assert spark.read.parquet(path).count() == 3  # the documented dup
     # partition_col inside keys: a "moved" key is a new key - no check,
     # no raise, straight merge
     base2 = str(tmp_path / "snap4")
@@ -349,12 +343,10 @@ def test_partitioned_upsert_unreadable_snapshot_raises_and_keeps_rows(
     incoming = spark.createDataFrame(
         [(1, "A", -1.0)], "k long, part string, v double"
     )
-    for check in (True, False):
-        with pytest.raises(Exception):
-            upsert_parquet_partitioned(
-                spark, incoming, path, keys=["k"], partition_col="part",
-                check_moved_keys=check,
-            )
+    with pytest.raises(Exception):
+        upsert_parquet_partitioned(
+            spark, incoming, path, keys=["k"], partition_col="part"
+        )
     os.remove(garbage)
     assert _snapshot(spark, path) == [
         (i, "A" if i < 50 else "B", float(i)) for i in range(100)
@@ -393,8 +385,8 @@ def test_partitioned_upsert_null_partition(spark, tmp_path):
 
 
 def test_bloom_mode_detects_moves_across_the_null_partition(spark, tmp_path):
-    import pytest
-
+    """The sidecar probe treats the null partition as a partition: a
+    key moving out of it, or into it, is a confirmed mover."""
     from formula1_etl_analytics_project_spark.operators import bloom_index as bi
 
     path = _parts(
@@ -405,28 +397,26 @@ def test_bloom_mode_detects_moves_across_the_null_partition(spark, tmp_path):
     bi.build_key_bloom_index(
         spark, path, ["k"], "part", expected_keys_per_partition=10
     )
-    # k=0 lives in the null partition, k=1 in A
+    # k=0 lives in the null partition, k=1 in A; one batch each, since
+    # a probe does not look inside the partitions its batch writes
+    found = []
     for k, part in ((0, "B"), (1, None)):
         mover = spark.createDataFrame(
             [(k, part, -1.0)], "k long, part string, v double"
         )
-        with pytest.raises(ValueError, match="moves key"):
-            upsert_parquet_partitioned(
-                spark, mover, path, keys=["k"], partition_col="part",
-                check_moved_keys="bloom",
-            )
-    assert spark.read.parquet(path).count() == 30
+        found += bi.probe_moved_keys(spark, path, mover, ["k"], "part").collect()
+    assert [(r["k"], r["suspect_partition"]) for r in found] == [
+        (0, None), (1, "A")
+    ]
 
 
 def test_merges_leave_the_session_overwrite_mode_alone(
     spark, tmp_path, monkeypatch
 ):
-    """Both merge paths overwrite partitions dynamically through a
-    per-write option. Setting and restoring the session conf instead
-    would race with other threads planning a static overwrite."""
+    """The merge overwrites partitions dynamically through a per-write
+    option. Setting and restoring the session conf instead would race
+    with other threads planning a static overwrite."""
     from pyspark.sql.conf import RuntimeConfig
-
-    from formula1_etl_analytics_project_spark.operators import bloom_index as bi
 
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key)
@@ -445,17 +435,12 @@ def test_merges_leave_the_session_overwrite_mode_alone(
             [(i, "ABC"[i % 3], float(i)) for i in range(30)],
             str(tmp_path / "snap"),
         )
-        bi.build_key_bloom_index(
-            spark, path, ["k"], "part", expected_keys_per_partition=10
+        batch = spark.createDataFrame(
+            [(0, "A", -1.0)], "k long, part string, v double"
         )
-        for mode in (True, "bloom"):
-            batch = spark.createDataFrame(
-                [(0, "A", -1.0)], "k long, part string, v double"
-            )
-            upsert_parquet_partitioned(
-                spark, batch, path, keys=["k"], partition_col="part",
-                check_moved_keys=mode,
-            )
+        upsert_parquet_partitioned(
+            spark, batch, path, keys=["k"], partition_col="part"
+        )
         assert key not in sets
         assert spark.conf.get(key) == "static"
         # the overwrites stayed dynamic: B and C survived

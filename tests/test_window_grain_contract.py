@@ -13,7 +13,7 @@ This sweep turns that hand audit into a regression gate: every
 catalog entry's physical plan is traversed; any ``WindowExec`` /
 ``WindowInPandasExec`` with an EMPTY partition spec must be either
 
-* the ``distributed_sequence`` / ``distributed_cumsum`` offsets
+* the ``distributed_sequence`` offsets
   window - recognized structurally by its ``__seq_pid`` sort key; its
   input is the per-partition count table, k = #partitions rows by
   construction (operators/sequence.py) - or
