@@ -33,26 +33,6 @@ from formula1_etl_analytics_project_spark.session import get_spark
 from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
 from formula1_etl_analytics_project_spark.sources.sinks import write_parquet
 
-# Report and CLI order: the reference's FK-safe load order (dims -> hub ->
-# facts, CompleteETL.py:1034-1042). The writes themselves run concurrently.
-LOAD_ORDER = [
-    "date_dim",
-    "location_dim",
-    "status_dim",
-    "driver",
-    "team",
-    "race",
-    "time_dim",
-    "sprint",
-    "free_practice",
-    "qualification",
-    "laps",
-    "pit_stop",
-    "results",
-    "driver_standings",
-    "team_standings",
-]
-
 
 def run_etl(
     spark: SparkSession,
@@ -61,7 +41,7 @@ def run_etl(
     register: bool = True,
 ) -> dict[str, int]:
     """Wide CSV -> 15 star-schema parquet tables. Returns row counts
-    per table in ``LOAD_ORDER`` order.
+    per table in ``BUILDERS`` order.
 
     One action per table: each builder's DataFrame carries an
     ``Observation`` that counts the rows its parquet write emits. The
@@ -83,17 +63,16 @@ def run_etl(
         write_parquet(
             table.observe(obs, F.count(F.lit(1)).alias("rows")),
             f"{out_dir}/{name}",
-            mode="overwrite",
         )
         return obs.get["rows"], table.schema
 
     try:
-        with ThreadPoolExecutor(min(len(LOAD_ORDER), sc.defaultParallelism)) as pool:
+        with ThreadPoolExecutor(min(len(BUILDERS), sc.defaultParallelism)) as pool:
             # Wrapped per task: each task gets its own copy of the caller's
             # local properties, which its setJobDescription then edits.
             futures = [
                 pool.submit(inheritable_thread_target(spark)(load), name)
-                for name in LOAD_ORDER
+                for name in BUILDERS
             ]
             wait(futures, return_when=FIRST_EXCEPTION)
             # On a failure, drop the writes not yet started. They queue after
@@ -101,7 +80,7 @@ def run_etl(
             # any CancelledError.
             for f in futures:
                 f.cancel()
-            written = {name: f.result() for name, f in zip(LOAD_ORDER, futures)}
+            written = {name: f.result() for name, f in zip(BUILDERS, futures)}
     finally:
         wide.unpersist()
     if register:
@@ -123,7 +102,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
     spark = get_spark(app_name="formula1-etl")
     counts = run_etl(spark, args.input, args.out)
-    for name in LOAD_ORDER:
+    for name in BUILDERS:
         print(f"{name}: {counts[name]} rows")
     if args.sql:
         spark.sql(args.sql).show(50, truncate=False)

@@ -137,10 +137,10 @@ def parse_fastest_lap_us(col: Column | str) -> Column:
     return F.when(ok, format_seconds(seconds, precision=6))
 
 
-def int_with_default(col: Column | str, default: int = 0) -> Column:
-    """C8/F5 (reference quali_etl.py:57): int cast, sentinel/garbage -> default."""
+def int_with_default(col: Column | str) -> Column:
+    """C8/F5 (reference quali_etl.py:57): int cast, sentinel/garbage -> 0."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.try_cast("int"), F.lit(default))
+    return F.coalesce(c.try_cast("int"), F.lit(0))
 
 
 def age_years(dob: Column | str, as_of_year: Column | None = None) -> Column:

@@ -107,16 +107,16 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     ).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def hashed_feature(col: Column | str, dim: int = 64) -> Column:
+def hashed_feature(col: Column | str) -> Column:
     """Hashing-trick feature index for one token: md5 low 60 bits mod
-    ``dim``. The featurizer needs NO vocabulary pass - the index is a
+    64. The featurizer needs NO vocabulary pass - the index is a
     pure function of the token - which is the property that makes it
     the scale answer: a 100 TB corpus vectorizes in one narrow
     projection with zero shuffles and no driver-side dictionary,
     where a vocab-indexed featurizer needs a global distinct+join
     first. md5 (not murmur3 ``hash()``) keeps it restatable in the
-    DuckDB oracle (``('0x'||substr(md5(t),1,15))::BIGINT % dim``)."""
+    DuckDB oracle (``('0x'||substr(md5(t),1,15))::BIGINT % 64``)."""
     c = F.col(col) if isinstance(col, str) else col
     return (
-        F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long") % dim
+        F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long") % 64
     ).alias("feat_idx")

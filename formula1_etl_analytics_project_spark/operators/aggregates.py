@@ -41,10 +41,9 @@ def salted_distinct_count(
     df: DataFrame,
     keys: list[str],
     value: str,
-    out: str = "n_distinct",
     buckets: int = 16,
 ) -> DataFrame:
-    """Exact per-key COUNT(DISTINCT value), skew-safe.
+    """Exact per-key COUNT(DISTINCT value) as ``n_distinct``, skew-safe.
 
     Phase 1 groups by ``(keys..., crc32(value) % buckets)`` and counts
     distinct values inside each bucket - a hot key's distinct set is
@@ -67,14 +66,13 @@ def salted_distinct_count(
         F.count_distinct(F.col(value)).alias("_partial")
     )
     return partial.groupBy(*keys).agg(
-        F.sum("_partial").alias(out)
+        F.sum("_partial").alias("n_distinct")
     )
 
 
-def exact_heavy_hitters(
-    df: DataFrame, key: str, k: int, out: str = "cnt"
-) -> DataFrame:
+def exact_heavy_hitters(df: DataFrame, key: str, k: int) -> DataFrame:
     """EXACT keys with frequency > N/(k+1), in O(k) state per task.
+    Returns (key, cnt).
 
     The naive ``groupBy(key).count()`` keeps one hash-map entry per
     DISTINCT key in every map task - at 100 TB a high-cardinality key
@@ -124,11 +122,11 @@ def exact_heavy_hitters(
     exact = (
         df.join(F.broadcast(candidates), on=key, how="left_semi")
         .groupBy(key)
-        .agg(F.count(F.lit(1)).alias(out))
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
     return (
         exact.crossJoin(F.broadcast(total))
-        .filter(F.col(out) * (k + 1) > F.col("_total"))
+        .filter(F.col("cnt") * (k + 1) > F.col("_total"))
         .drop("_total")
     )
 

@@ -17,13 +17,13 @@ maintains it, so a probe is only as current as its last build. The
 catalog entry ``bloom_moved_key_probe`` runs it. A probe checks
 moved keys by:
 
-1. Bloom probe of all partitions the batch does not write, merged
-   into one "anywhere else?" filter (distributed OR — no bitmap ever
-   visits the driver). Honest inserts and same-partition updates are
-   negative and cost O(|incoming keys| x k) expression work, no table
-   IO;
-2. positives re-probe the PER-PARTITION filters to name their suspect
-   partitions (input is only the positives, so the fan-out is tiny);
+1. Bloom probe of every partition's filter, merged into one "seen
+   anywhere?" filter (distributed OR — no bitmap ever visits the
+   driver). Honest inserts are negative and cost O(|incoming keys| x k)
+   expression work, no table IO;
+2. positives re-probe the PER-PARTITION filters of every partition
+   except the row's own to name their suspect partitions (input is
+   only the positives, so the fan-out is small);
 3. an exact, PARTITION-PRUNED verification scan of just the suspect
    partitions confirms or clears each candidate (false positives cost
    one small pruned scan, never the table).
@@ -231,11 +231,12 @@ def probe_moved_keys(
     index: rows of (keys..., partition_col, suspect_partition) where
     the key's incoming partition differs from a partition whose EXACT
     partition-pruned scan confirms it holds the key. Empty result ==
-    batch is partition-stable outside its own partitions.
+    no incoming key lives under a partition other than its own.
 
     Stage 1 of the module docstring runs against the OR of every
-    other-partition filter; only its (FPP-bounded) positives fan out to
-    the per-partition probe and the pruned verification scan.
+    partition's filter; only its positives (keys already in the table,
+    plus FPP-bounded false positives) fan out to the per-partition
+    probe and the pruned verification scan.
     """
     meta = read_meta(spark, path)
     if meta is None:
@@ -243,39 +244,31 @@ def probe_moved_keys(
             f"no Bloom index under {path}; run build_key_bloom_index first"
         )
     nbits, nhashes = meta
-    parts = [
-        r[0]
-        for r in incoming.select(partition_col).distinct().collect()
-    ]
     ikeys = incoming.select(*keys, partition_col).distinct()
     probes = _position_rows(ikeys, keys, nbits, nhashes)
-    other_words = spark.read.parquet(_bloom_path(path)).filter(
-        ~in_partitions(partition_col, parts)
-    )
-    # stage 1: one merged "anywhere-else" filter (distributed OR)
-    merged_words = other_words.groupBy("word_idx").agg(
-        F.bit_or("word").alias("word")
-    )
+    words = spark.read.parquet(_bloom_path(path))
+    # stage 1: one merged "seen anywhere?" filter (distributed OR)
+    merged_words = words.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
     positives = _all_bits_present(
         probes, merged_words, ["word_idx"], [*keys, partition_col]
     )
     # stage 2: name suspect partitions — re-probe the PER-PARTITION
     # filters with ONLY the positives. Each positive must test all its
-    # positions against EVERY other partition (an absent word row is a
-    # miss for that partition, so the partition axis has to be made
-    # explicit before the left join — a positives x other-partitions
-    # cross join, broadcast-sized because positives are FPP-bounded).
-    other_parts = other_words.select(
-        F.col(partition_col).alias("__old_part")
-    ).distinct()
+    # positions against EVERY partition but its own (an absent word row
+    # is a miss for that partition, so the partition axis has to be
+    # made explicit before the left join — a positives x partitions
+    # cross join). The own-partition test is null-safe: the null
+    # partition is a partition.
+    old_parts = words.select(F.col(partition_col).alias("__old_part")).distinct()
     pos_probes = (
         _position_rows(positives, keys, nbits, nhashes)
         .withColumnRenamed(partition_col, "__new_part")
-        .crossJoin(F.broadcast(other_parts))
+        .crossJoin(F.broadcast(old_parts))
+        .filter(~F.col("__old_part").eqNullSafe(F.col("__new_part")))
     )
     suspect = _all_bits_present(
         pos_probes,
-        other_words.select(
+        words.select(
             F.col(partition_col).alias("__old_part"), "word_idx", "word"
         ),
         ["__old_part", "word_idx"],

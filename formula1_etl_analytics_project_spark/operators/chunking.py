@@ -50,31 +50,24 @@ def _gram_key(toks: Column, p0: Column) -> Column:
     ).cast("long")
 
 
-def content_defined_chunks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    toks_col: str = "toks",
-    mod: int = 16,
-) -> DataFrame:
-    """(id, chunk_id, chunk_len, sig) for each token-array document.
+def content_defined_chunks(df: DataFrame, mod: int = 16) -> DataFrame:
+    """(doc_id, chunk_id, chunk_len, sig) for each token-array document.
 
-    ``df`` carries one row per document with an ``array<string>``
-    column ``toks_col`` (plus any passthrough columns, which are kept
+    ``df`` carries one row per ``doc_id`` with an ``array<string>``
+    column ``toks`` (plus any passthrough columns, which are kept
     on the output grouped by their per-document value). Expected chunk
     length is ``mod`` tokens. The final token never ends a chunk early
     (a boundary at the last position would produce an empty chunk).
     """
-    passthrough = [
-        c for c in df.columns if c not in (id_col, toks_col)
-    ]
+    passthrough = [c for c in df.columns if c not in ("doc_id", "toks")]
     pos = df.select(
-        id_col,
+        "doc_id",
         *passthrough,
-        F.size(toks_col).alias("_n"),
-        F.col(toks_col).alias("_toks"),
-        F.posexplode(toks_col).alias("_p0", "tok"),
+        F.size("toks").alias("_n"),
+        F.col("toks").alias("_toks"),
+        F.posexplode("toks").alias("_p0", "tok"),
     ).select(
-        id_col,
+        "doc_id",
         *passthrough,
         (F.col("_p0") + 1).alias("p"),
         "tok",
@@ -88,14 +81,14 @@ def content_defined_chunks(
         .alias("boundary"),
     )
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("p")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     chunked = pos.withColumn(
         "chunk_id", F.coalesce(F.sum("boundary").over(w), F.lit(0))
     )
-    return chunked.groupBy(id_col, *passthrough, "chunk_id").agg(
+    return chunked.groupBy("doc_id", *passthrough, "chunk_id").agg(
         F.count("*").alias("chunk_len"),
         F.md5(
             F.array_join(

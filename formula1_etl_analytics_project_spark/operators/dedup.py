@@ -62,6 +62,12 @@ def dedup_keep_first(
 # engine-portable.
 _MH_MOD = 1 << 32
 
+# The near-dup operators read the documents table's id and text columns
+# and shingle its text into 3-token shingles; minhash keeps 8 hashes,
+# banded 4 x 2 for LSH.
+_ID, _TEXT, _SHINGLE_K = "doc_id", "text", 3
+_NUM_HASHES, _BANDS = 8, 4
+
 
 def _hash_pair_expr(shingle_col: Column) -> Column:
     """array<struct<h1,h2>>: the two 32-bit md5 words per shingle.
@@ -90,34 +96,20 @@ def _minhash_from_pairs(pair_col: Column, seed: int) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """doc -> (id, minhash_0..minhash_{n-1}) signature row."""
-    hp = _hash_pair_expr(shingles(text_col, k=shingle_k))
-    base = df.select(F.col(id_col), hp.alias("_hp"))
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """doc -> (doc_id, mh_0..mh_7) signature row."""
+    hp = _hash_pair_expr(shingles(_TEXT, k=_SHINGLE_K))
+    base = df.select(F.col(_ID), hp.alias("_hp"))
     return base.select(
-        F.col(id_col),
+        F.col(_ID),
         *[
             _minhash_from_pairs(F.col("_hp"), seed).alias(f"mh_{seed}")
-            for seed in range(num_hashes)
+            for seed in range(_NUM_HASHES)
         ],
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, jaccard_threshold: float = 0.5) -> DataFrame:
     """MinHash + LSH near-duplicate pairs.
 
     Pipeline: shingle -> minhash signature -> band keys -> self-join on
@@ -126,12 +118,12 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, distinct.
     """
-    rows_per_band = num_hashes // bands
-    sh = shingles(text_col, k=shingle_k)
+    rows_per_band = _NUM_HASHES // _BANDS
+    sh = shingles(_TEXT, k=_SHINGLE_K)
     # Persist the shingle+hash-word table BEFORE deriving the minhash
     # columns: without a materialization boundary, Catalyst's
     # projection collapse inlines the shingle-and-md5 pipeline into all
-    # num_hashes minhash expressions AND both sides of the self-join
+    # _NUM_HASHES minhash expressions AND both sides of the self-join
     # (~16x recompute, measured 9x slower). Persisting the md5 WORDS
     # (not the finished minhashes) also means the one expensive pass -
     # tokenize, shingle, hash - runs exactly once; everything derived
@@ -145,7 +137,7 @@ def minhash_lsh_pairs(
     # two projects because the reused alias is expensive (SPARK-36718).
     # Measured at sf0.1: 0.91s -> 0.51s for the materialization pass.
     base = (
-        df.select(F.col(id_col).alias("_id"), sh.alias("_shingles"))
+        df.select(F.col(_ID).alias("_id"), sh.alias("_shingles"))
         .withColumn("_hp", _hash_pair_expr(F.col("_shingles")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -166,7 +158,7 @@ def minhash_lsh_pairs(
                 for r in range(rows_per_band)
             ],
         ).alias("band_key")
-        for b in range(bands)
+        for b in range(_BANDS)
     ]
     # The shingle arrays ride through the band join (one exchange of
     # id+bands+shingles per side). The alternative - join bare
@@ -212,29 +204,21 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: list[str] | None = None,
-    shingle_k: int = 3,
-    threshold: float = 0.3,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity within blocking groups.
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.3) -> DataFrame:
+    """Exact n-gram Jaccard similarity within (lang, source) blocks.
 
-    ``block_cols`` bounds the O(N^2) pair space (at 100 TB an unblocked
+    The blocks bound the O(N^2) pair space (at 100 TB an unblocked
     self-join is impossible; blocked, each block is an independent
     local join after one shuffle on the block key)."""
-    sh = shingles(text_col, k=shingle_k)
-    cols = [F.col(id_col).alias("_id"), sh.alias("_sh")] + [
-        F.col(c) for c in (block_cols or [])
-    ]
+    block_cols = ["lang", "source"]
+    sh = shingles(_TEXT, k=_SHINGLE_K)
+    cols = [F.col(_ID).alias("_id"), sh.alias("_sh")] + [F.col(c) for c in block_cols]
     # Same materialization boundary as minhash: shingles feed both join
     # sides, so compute them once.
     base = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
     base.count()  # eager: both join sides read it (see minhash note)
     join_cond = F.col("l._id") < F.col("r._id")
-    for c in block_cols or []:
+    for c in block_cols:
         join_cond = join_cond & (F.col(f"l.{c}") == F.col(f"r.{c}"))
     pairs = base.alias("l").join(base.alias("r"), join_cond)
     jac = F.size(F.array_intersect("l._sh", "r._sh")) / F.size(
@@ -250,16 +234,9 @@ def ngram_jaccard_pairs(
     )
 
 
-def prefix_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-    order: str = "lex",
-) -> DataFrame:
+def prefix_jaccard_pairs(df: DataFrame, order: str = "lex") -> DataFrame:
     """EXACT set-similarity self-join via AllPairs/PPJoin prefix
-    filtering - every pair with shingle-Jaccard >= threshold, with NO
+    filtering - every pair with shingle-Jaccard >= t = 0.5, with NO
     blocking loss and NO O(N^2) pair enumeration.
 
     The filter: sort each doc's shingle set by a fixed global total
@@ -309,13 +286,14 @@ def prefix_jaccard_pairs(
     probabilistic (banding can miss); this one is exact and complete.
     Returns (id_a, id_b, jaccard), id_a < id_b.
     """
+    threshold = 0.5
     hk = F.transform(
-        shingles(text_col, k=shingle_k),
+        shingles(_TEXT, k=_SHINGLE_K),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
     )
     sh_sorted = F.array_sort(F.array_distinct(hk))
     base = df.select(
-        F.col(id_col).alias("_id"), sh_sorted.alias("_sh")
+        F.col(_ID).alias("_id"), sh_sorted.alias("_sh")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     base.count()  # one materialization; prefix explode + verify reuse it
     n = F.size("_sh")
@@ -411,14 +389,13 @@ def prefix_jaccard_pairs(
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
-    node_col: str = "node",
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_iter: int = 30,
 ) -> DataFrame:
     """Connected components by min-label propagation WITH path
     compression: every node's label converges to the smallest node id
-    in its component.
+    in its component. ``nodes`` has a ``node`` column; the result is
+    (node, label). A component not closed within 30 rounds raises.
 
     The pairs -> clusters step that turns near-dup DETECTION into
     actual DEDUPLICATION (keeper = the node whose id equals its
@@ -471,9 +448,7 @@ def connected_components(
     und = directed.unionByName(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
-    labels = nodes.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("label")
-    ).localCheckpoint()
+    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
 
     def _label_sum(df: DataFrame):
         # exact (decimal) total: labels only ever decrease, so the
@@ -485,6 +460,7 @@ def connected_components(
 
     prev_sum = _label_sum(labels)
     converged = False
+    max_iter = 30
     for _ in range(max_iter):
         prop = und.join(labels, und["src"] == labels["node"]).select(
             F.col("dst").alias("node"), "label"
@@ -520,8 +496,8 @@ def connected_components(
         # fixpoint and returning them would silently split clusters.
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
-            "iterations (label sum still decreasing); raise "
-            "max_iter (rounds needed = max component diameter)"
+            "iterations (label sum still decreasing); the rounds needed "
+            "grow with the largest component's diameter"
         )
     return labels
 
@@ -606,8 +582,6 @@ def simhash64_wide_from_digests(digests: Column) -> Column:
 
 def simhash_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     nbits: int = 16,
     max_hamming: int = 2,
     band_bits: int = 4,
@@ -634,7 +608,7 @@ def simhash_pairs(
         else _simhash_from_digests(F.col("_dig"), nbits, hex_offset=1)
     )
     sig = (
-        df.select(F.col(id_col).alias("_id"), _word_digests(text_col).alias("_dig"))
+        df.select(F.col(_ID).alias("_id"), _word_digests(_TEXT).alias("_dig"))
         .withColumn("_sig", sig_expr)
         .select("_id", "_sig")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -674,15 +648,9 @@ def simhash_pairs(
     )
 
 
-def contamination_report(
-    df: DataFrame,
-    holdout: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-) -> DataFrame:
+def contamination_report(df: DataFrame, holdout: Column) -> DataFrame:
     """Benchmark decontamination: flag training docs that share at least
-    one k-token shingle with any holdout (benchmark/eval) document.
+    one 3-token shingle with any holdout (benchmark/eval) document.
 
     The dedup machinery pointed at the train/eval boundary - the check
     every pre-training corpus needs before a benchmark number means
@@ -690,7 +658,7 @@ def contamination_report(
     benchmark partition; the rest of ``df`` is the training corpus.
 
     Returns one row per contaminated training doc:
-    (id_col, n_shingle_hits = distinct overlapping shingles,
+    (doc_id, n_shingle_hits = distinct overlapping shingles,
      n_bench_docs = distinct benchmark docs overlapped).
 
     Scale shape: the benchmark side is tiny relative to a 100 TB corpus
@@ -701,8 +669,8 @@ def contamination_report(
     sparse) hit doc ids.
     """
     base = df.select(
-        F.col(id_col).alias("_id"),
-        shingles(text_col, k=shingle_k).alias("_sh"),
+        F.col(_ID).alias("_id"),
+        shingles(_TEXT, k=_SHINGLE_K).alias("_sh"),
         holdout.alias("_hold"),
     )
     hold = base.filter(F.col("_hold")).select(
@@ -716,5 +684,5 @@ def contamination_report(
             F.countDistinct("_s").alias("n_shingle_hits"),
             F.countDistinct("_bench_id").alias("n_bench_docs"),
         )
-        .select(F.col("_id").alias(id_col), "n_shingle_hits", "n_bench_docs")
+        .select(F.col("_id").alias(_ID), "n_shingle_hits", "n_bench_docs")
     )

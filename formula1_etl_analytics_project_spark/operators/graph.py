@@ -28,32 +28,24 @@ PR_INIT = 1_000_000_000_000
 PR_BASE = 150_000_000_000
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iterations: int = 3,
-    init: int = PR_INIT,
-    base: int = PR_BASE,
-    damping_pct: int = 85,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
     """Fixed-point PageRank over a directed edge list.
 
     ``edges`` must have ``src`` and ``dst`` columns (any integral
     type; the caller guarantees distinct edges). Returns one row per
-    node with its ``rank`` after ``iterations`` rounds. Dangling
-    nodes (no outgoing edges) contribute nothing; nodes with no
-    incoming edges settle at ``base``. All arithmetic is integer
+    node with its ``rank`` after 3 rounds, starting from ``PR_INIT``.
+    Dangling nodes (no outgoing edges) contribute nothing; nodes with
+    no incoming edges settle at ``PR_BASE``. All arithmetic is integer
     (div, not /), so results are exactly reproducible at any
     parallelism - see the module docstring.
     """
-    if iterations < 0:
-        raise ValueError(f"iterations must be >= 0, got {iterations}")
     # Both tables are consumed once per iteration plus the final
     # projection; without a boundary the union+distinct (nodes) and the
     # degree count (outdeg) replay inside every iteration's plan -
     # measured at sf0.1: best-of-4 2.54s -> 2.27s with the checkpoints,
     # and the variance tail tightens. Same rationale as the edge-stage
     # checkpoints in triangle_counts. eager=False: materialize at the
-    # first ACTION, not at plan build - explain()/iterations=0 callers
+    # first ACTION, not at plan build - explain() callers
     # must not trigger Spark jobs as a side effect of construction.
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -74,8 +66,8 @@ def pagerank_fixed_point(
         .select("src", "dst", "d")
         .localCheckpoint(eager=False)
     )
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
-    for _ in range(iterations):
+    ranks = nodes.select("node", F.lit(PR_INIT).cast("long").alias("rank"))
+    for _ in range(3):
         contrib = edges_d.join(
             ranks, edges_d["src"] == ranks["node"]
         ).select("dst", F.expr("`rank` div `d`").alias("c"))
@@ -83,8 +75,8 @@ def pagerank_fixed_point(
         ranks = nodes.join(inc, nodes["node"] == inc["dst"], "left").select(
             "node",
             (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(inc, 0)) div 100")
+                F.lit(PR_BASE)
+                + F.expr("(85 * coalesce(inc, 0)) div 100")
             ).alias("rank"),
         )
     return ranks

@@ -84,24 +84,17 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return size
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salt: int = 8,
-    how: str = "inner",
-    seed: int = 42,
-) -> DataFrame:
-    """Skew-defeating equi-join: left rows get a random salt in [0, salt),
-    the right side is replicated ``salt`` times, and the join key becomes
-    (key, salt) - a single hot key's rows now spread across ``salt``
+def salted_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+    """Skew-defeating inner equi-join: left rows get a seeded random salt
+    in [0, 8), the right side is replicated 8 times, and the join key
+    becomes (key, salt) - a single hot key's rows now spread across 8
     reducer partitions instead of landing on one straggler.
 
-    Semantically identical to ``left.join(right, on, how)`` (each left
-    row still matches exactly the right rows of its key, via exactly one
-    salt copy). Cost: right side shuffled/broadcast x salt. Inner/left
-    joins only - the replicated right side makes right/full-outer
-    null-matching ambiguous.
+    Semantically identical to ``left.join(right, on)`` (each left row
+    still matches exactly the right rows of its key, via exactly one
+    salt copy). Cost: right side shuffled/broadcast x 8. Inner joins
+    only - the replicated right side makes outer null-matching
+    ambiguous.
 
     WHEN TO SALT vs TRUST AQE (measured, sf-independent synthetic:
     20M rows, one key carrying 90%, local[32], sort-merge forced):
@@ -129,13 +122,12 @@ def salted_join(
     partition sits under the split threshold. Verified in
     tests/test_plan_quality.py::test_aqe_skew_split_fires_only_when_tuned.
     """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins only")
-    salted_left = left.withColumn("_salt", (F.rand(seed) * salt).cast("int"))
+    salt = 8
+    salted_left = left.withColumn("_salt", (F.rand(42) * salt).cast("int"))
     salted_right = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return salted_left.join(salted_right, on=[on, "_salt"], how=how).drop("_salt")
+    return salted_left.join(salted_right, on=[on, "_salt"], how="inner").drop("_salt")
 
 
 def integrity_violations(

@@ -25,35 +25,38 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+# Low bits of each column that the Morton key interleaves.
+Z_BITS = 12
 
-def zorder_key(cols: list[Column | str], bits: int = 12) -> Column:
-    """Morton key: interleave the low ``bits`` bits of each column.
+
+def zorder_key(cols: list[Column | str]) -> Column:
+    """Morton key: interleave the low ``Z_BITS`` bits of each column.
 
     Columns must be non-negative integers (callers bucket/offset
-    first); values >= 2**bits wrap via modulo, which only weakens
+    first); values >= 2**Z_BITS wrap via modulo, which only weakens
     clustering for outliers - never correctness, since the key is a
     layout hint, not data. With ``d`` columns the key uses
-    ``d * bits`` bits; keep that under 63.
+    ``d * Z_BITS`` bits; keep that under 63.
     """
     ncols = [F.col(c) if isinstance(c, str) else c for c in cols]
-    if len(ncols) * bits > 63:
+    if len(ncols) * Z_BITS > 63:
         raise ValueError("interleaved key would exceed 63 bits")
     z = F.lit(0).cast("long")
     for ci, col in enumerate(ncols):
-        v = col.cast("long") % (2**bits)
-        for b in range(bits):
+        v = col.cast("long") % (2**Z_BITS)
+        for b in range(Z_BITS):
             bit = F.shiftright(v, b) % 2
             z = z + bit * (2 ** (b * len(ncols) + ci))
     return z
 
 
-def zorder_sql(cols: list[str], bits: int = 12) -> str:
+def zorder_sql(cols: list[str]) -> str:
     """DuckDB-SQL twin of :func:`zorder_key`, term-for-term (integer
     shifts and adds only), so an oracle can restate the exact key."""
     terms = []
     for ci, c in enumerate(cols):
-        v = f"(CAST({c} AS BIGINT) % {2**bits})"
-        for b in range(bits):
+        v = f"(CAST({c} AS BIGINT) % {2**Z_BITS})"
+        for b in range(Z_BITS):
             terms.append(
                 f"((({v} // {2**b}) % 2) * {2 ** (b * len(cols) + ci)})"
             )

@@ -188,7 +188,7 @@ def ppm_pixel_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema=out_schema)
 
 
-def extract_features(df: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """media rows -> (media_id, media_type, feature: array<float>).
 
     Arrow-batched, per-partition; failures (undecodable payloads) yield

@@ -15,9 +15,10 @@ classic ``zipWithIndex`` design expressed DataFrame-first:
 1. ``repartitionByRange(order_col)`` - one range shuffle; partition i
    holds an ordered, non-overlapping slice of the key space.
 2. ``sortWithinPartitions(order_col)`` - local sort, no shuffle.
-3. A ``mapInPandas`` pass stamps ``spark_partition_id`` and a running
-   LOCAL index per partition (Arrow batches stream in partition order,
-   so the counter is deterministic).
+3. ``monotonically_increasing_id()`` over the sorted partitions is
+   ``(partition id << 33) + index within the partition``, so one native
+   projection stamps the partition id and the LOCAL index (no Python
+   worker).
 4. Per-partition row counts (a k-row aggregate, k = #partitions) turn
    into cumulative offsets on the driver-side-sized window, then
    broadcast-join back: ``seq = offset + local_idx``.
@@ -29,9 +30,6 @@ all-to-one shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 _PID = "__seq_pid"
@@ -63,39 +61,20 @@ def distributed_sequence(
     )
     ranged = ranged.sortWithinPartitions(*order_cols)
 
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    # NB: StructType.add mutates in place, and DataFrame.schema is a
-    # cached object - build a fresh StructType, never .add on df.schema
-    out_schema = StructType(
-        list(ranged.schema.fields)
-        + [StructField(_PID, IntegerType()), StructField(_LOCAL, LongType())]
-    )
-
-    def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Runs once per partition; batches arrive in partition order
-        # (post sortWithinPartitions), so `seen` is a deterministic
-        # running count. The pid is taken from TaskContext.
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        seen = 0
-        for b in batches:
-            b = b.copy()
-            b[_PID] = pid
-            b[_LOCAL] = range(seen, seen + len(b))
-            seen += len(b)
-            yield b
-
     # Two consumers read `stamped` (the k-row counts aggregate and the
-    # final join probe). Persist so (a) the mapInPandas stamping pass
-    # runs once per action instead of twice over the full fact, and
-    # (b) both consumers are guaranteed the SAME pid/local assignment
-    # rather than relying on shuffle-reuse determinism. No explicit
-    # unpersist: the API is lazy, so the earliest safe point is after
-    # the caller's action - Spark's ContextCleaner drops the blocks
-    # when the plan is garbage-collected.
-    stamped = ranged.mapInPandas(stamp, schema=out_schema).persist()
+    # final join probe). Persist so (a) the range shuffle and sort run
+    # once per action instead of twice over the full fact, and (b) both
+    # consumers are guaranteed the SAME pid/local assignment rather
+    # than relying on shuffle-reuse determinism. No explicit unpersist:
+    # the API is lazy, so the earliest safe point is after the caller's
+    # action - Spark's ContextCleaner drops the blocks when the plan is
+    # garbage-collected.
+    stamped = (
+        ranged.withColumn(_LOCAL, F.monotonically_increasing_id())
+        .withColumn(_PID, F.shiftright(_LOCAL, 33).cast("int"))
+        .withColumn(_LOCAL, F.col(_LOCAL).bitwiseAND((1 << 33) - 1))
+        .persist()
+    )
 
     # k rows (k = #partitions): cumulative count of everything in
     # partitions BEFORE mine. The single-partition window here is over

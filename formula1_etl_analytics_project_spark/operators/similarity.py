@@ -24,15 +24,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from formula1_etl_analytics_project_spark.functions.vectors import cosine, dot, norm
+from formula1_etl_analytics_project_spark.functions.vectors import cosine, dot
+
+# Every operator here reads the embeddings table's id and vector columns.
+_ID, _VEC = "vec_id", "embedding"
+# The IVF probe width, and the product-quantization shape: m subvectors of
+# sub_len dims, k centroids per subspace.
+_NPROBE = 2
+_PQ_M, _PQ_SUB_LEN, _PQ_K = 4, 16, 4
 
 
-def _query_vec(df: DataFrame, id_col: str, vec_col: str, query_id: int):
+def _query_vec(df: DataFrame, query_id: int):
     """The query vector as a 1-row broadcastable DataFrame (never a
     driver-side collect - composes into one distributed plan)."""
     return F.broadcast(
-        df.filter(F.col(id_col) == query_id).select(
-            F.col(vec_col).alias("_qvec")
+        df.filter(F.col(_ID) == query_id).select(
+            F.col(_VEC).alias("_qvec")
         )
     )
 
@@ -41,56 +48,48 @@ def brute_force_topk(
     df: DataFrame,
     query_id: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k against the vector of ``query_id``."""
-    q = _query_vec(df, id_col, vec_col, query_id)
+    q = _query_vec(df, query_id)
     scored = (
-        df.filter(F.col(id_col) != query_id)
+        df.filter(F.col(_ID) != query_id)
         .crossJoin(q)
         .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
+            F.col(_ID),
+            F.round(cosine(F.col(_VEC), F.col("_qvec")), 6).alias("cos_sim"),
         )
     )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), F.col(_ID)).limit(k)
 
 
 def assign_cells(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_id: str = "cent_id",
-    cent_vec: str = "cent_vec",
 ) -> DataFrame:
     """IVF index build: each vector joins (broadcast) against all
     centroids, keeps its argmax-cosine cell. Adds a ``cell`` column."""
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("_csim").desc(), F.col(cent_id)
+    w = Window.partitionBy(_ID).orderBy(
+        F.col("_csim").desc(), F.col("cent_id")
     )
     return (
         df.crossJoin(F.broadcast(centroids))
-        .withColumn("_csim", cosine(F.col(vec_col), F.col(cent_vec)))
+        .withColumn("_csim", cosine(F.col(_VEC), F.col("cent_vec")))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(df["*"], F.col(cent_id).alias("cell"))
+        .select(df["*"], F.col("cent_id").alias("cell"))
     )
 
 
 def sample_centroids(
     df: DataFrame,
     n: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic centroid pick: the n lowest-id vectors. Stands in
     for k-means so tests/oracle are reproducible."""
     return (
-        df.orderBy(id_col)
+        df.orderBy(_ID)
         .limit(n)
-        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
+        .select(F.col(_ID).alias("cent_id"), F.col(_VEC).alias("cent_vec"))
     )
 
 
@@ -99,78 +98,71 @@ def ivf_topk(
     query_id: int,
     k: int = 10,
     n_cells: int = 8,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF search: score only vectors in the query's ``nprobe`` nearest
+    """IVF search: score only vectors in the query's ``_NPROBE`` nearest
     cells. At scale the index table is written partitioned by cell, so
     the probe is a partition-pruned scan of nprobe/n_cells of the data.
     """
-    centroids = sample_centroids(df, n_cells, id_col, vec_col)
-    indexed = assign_cells(df, centroids, id_col, vec_col)
+    centroids = sample_centroids(df, n_cells)
+    indexed = assign_cells(df, centroids)
     qcells = (
-        indexed.filter(F.col(id_col) == query_id)
+        indexed.filter(F.col(_ID) == query_id)
         .crossJoin(F.broadcast(centroids))
         .select(
             F.col("cent_id"),
-            cosine(F.col(vec_col), F.col("cent_vec")).alias("_csim"),
+            cosine(F.col(_VEC), F.col("cent_vec")).alias("_csim"),
         )
         .orderBy(F.col("_csim").desc(), F.col("cent_id"))
-        .limit(nprobe)
+        .limit(_NPROBE)
         .select("cent_id")
     )
     candidates = indexed.join(
         F.broadcast(qcells), indexed["cell"] == qcells["cent_id"], "left_semi"
     )
-    q = _query_vec(df, id_col, vec_col, query_id)
+    q = _query_vec(df, query_id)
     scored = (
-        candidates.filter(F.col(id_col) != query_id)
+        candidates.filter(F.col(_ID) != query_id)
         .crossJoin(q)
         .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
+            F.col(_ID),
+            F.round(cosine(F.col(_VEC), F.col("_qvec")), 6).alias("cos_sim"),
         )
     )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), F.col(_ID)).limit(k)
 
 
 def lsh_bucket(
     df: DataFrame,
     hyperplanes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Random-hyperplane LSH: bucket = concatenated sign bits of the
     dot product with each hyperplane. ``hyperplanes`` is (hp_id, hp_vec)."""
     signed = (
         df.crossJoin(F.broadcast(hyperplanes))
-        .withColumn("_bit", F.when(dot(F.col(vec_col), F.col("hp_vec")) >= 0, "1").otherwise("0"))
-        .groupBy(id_col)
+        .withColumn("_bit", F.when(dot(F.col(_VEC), F.col("hp_vec")) >= 0, "1").otherwise("0"))
+        .groupBy(_ID)
         .agg(
             F.concat_ws(
                 "", F.transform(F.array_sort(F.collect_list(F.struct("hp_id", "_bit"))), lambda s: s["_bit"])
             ).alias("bucket")
         )
     )
-    return df.join(signed, on=id_col)
+    return df.join(signed, on=_ID)
 
 
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
     n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, candidate-limited to
     same-IVF-cell pairs: (id_a, id_b, cos_sim) with id_a < id_b."""
-    centroids = sample_centroids(df, n_cells, id_col, vec_col)
+    centroids = sample_centroids(df, n_cells)
     # Persist the cell index: it feeds both sides of the self-join (the
     # local analog of the IVF index written partitioned-by-cell).
     indexed = (
-        assign_cells(df, centroids, id_col, vec_col)
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), "cell")
+        assign_cells(df, centroids)
+        .select(F.col(_ID).alias("_id"), F.col(_VEC).alias("_vec"), "cell")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     indexed.count()  # eager: both self-join sides read the cell index
@@ -189,13 +181,7 @@ def embedding_neardup_pairs(
     )
 
 
-def kmeans_lloyd_centroids(
-    df: DataFrame,
-    k: int = 4,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd_centroids(df: DataFrame) -> DataFrame:
     """Distributed Lloyd's k-means: the centroid trainer for the IVF
     index (``sample_centroids`` is the deterministic stand-in this
     replaces when real training is wanted).
@@ -212,14 +198,15 @@ def kmeans_lloyd_centroids(
     each iteration's centroid table is k*dim doubles - persisted (here)
     or checkpointed to cut the replayed lineage per round.
 
-    Returns (cent_id, cent_vec array<double>) after ``iters`` updates.
+    Returns (cent_id, cent_vec array<double>): k = 4 centroids after 2
+    updates.
     """
-    cents = sample_centroids(df, k, id_col, vec_col)
-    for _ in range(iters):
-        assigned = assign_cells(df, cents, id_col, vec_col)
+    cents = sample_centroids(df, 4)
+    for _ in range(2):
+        assigned = assign_cells(df, cents)
         per_dim = (
             assigned.select(
-                "cell", F.posexplode(F.col(vec_col)).alias("_pos", "_val")
+                "cell", F.posexplode(F.col(_VEC)).alias("_pos", "_val")
             )
             .groupBy("cell", "_pos")
             .agg(
@@ -241,17 +228,10 @@ def kmeans_lloyd_centroids(
     return cents
 
 
-def ivf_recall_at_k(
-    df: DataFrame,
-    n_queries: int = 10,
-    k: int = 10,
-    n_cells: int = 8,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Recall@k of IVF-pruned search against the exact brute-force
-    answer, evaluated SET-BASED for ``n_queries`` queries in two corpus
+def ivf_recall_at_k(df: DataFrame) -> DataFrame:
+    """Recall@10 of IVF-pruned search (8 cells, ``_NPROBE`` probed)
+    against the exact brute-force answer, evaluated SET-BASED for the
+    10 queries with the lowest ids in two corpus
     scans (one brute pass, one candidate pass) - never a per-query
     driver loop. The standard ANN quality gate: at 100 TB you tune
     nprobe until recall@k clears the product bar, and this is the
@@ -263,37 +243,38 @@ def ivf_recall_at_k(
     centroids / tie-breaks as ``ivf_topk``, so an oracle can reproduce
     the approximation exactly.
     """
-    queries = df.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    k = 10
+    queries = df.filter(F.col(_ID) < 10).select(
+        F.col(_ID).alias("qid"), F.col(_VEC).alias("qvec")
     )
-    wq = Window.partitionBy("qid").orderBy(F.col("_cos").desc(), F.col(id_col))
+    wq = Window.partitionBy("qid").orderBy(F.col("_cos").desc(), F.col(_ID))
 
     brute = (
         df.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("qid"))
-        .withColumn("_cos", cosine(F.col(vec_col), F.col("qvec")))
+        .filter(F.col(_ID) != F.col("qid"))
+        .withColumn("_cos", cosine(F.col(_VEC), F.col("qvec")))
         .withColumn("_rn", F.row_number().over(wq))
         .filter(F.col("_rn") <= k)
-        .select("qid", F.col(id_col).alias("_hit"))
+        .select("qid", F.col(_ID).alias("_hit"))
     )
 
-    centroids = sample_centroids(df, n_cells, id_col, vec_col)
-    indexed = assign_cells(df, centroids, id_col, vec_col)
+    centroids = sample_centroids(df, 8)
+    indexed = assign_cells(df, centroids)
     wc = Window.partitionBy("qid").orderBy(F.col("_csim").desc(), F.col("cent_id"))
     qcells = (
         queries.crossJoin(F.broadcast(centroids))
         .withColumn("_csim", cosine(F.col("qvec"), F.col("cent_vec")))
         .withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") <= nprobe)
+        .filter(F.col("_rn") <= _NPROBE)
         .select("qid", "qvec", "cent_id")
     )
     ivf = (
         indexed.join(F.broadcast(qcells), indexed["cell"] == qcells["cent_id"])
-        .filter(F.col(id_col) != F.col("qid"))
-        .withColumn("_cos", cosine(F.col(vec_col), F.col("qvec")))
+        .filter(F.col(_ID) != F.col("qid"))
+        .withColumn("_cos", cosine(F.col(_VEC), F.col("qvec")))
         .withColumn("_rn", F.row_number().over(wq))
         .filter(F.col("_rn") <= k)
-        .select("qid", F.col(id_col).alias("_hit"))
+        .select("qid", F.col(_ID).alias("_hit"))
     )
 
     return (
@@ -351,39 +332,37 @@ def _pq_train(
     m: int,
     sub_len: int,
     k: int,
-    id_col: str,
-    vec_col: str,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared PQ trainer: first-k seed, one decimal-mean Lloyd update,
     final assignment. Returns (subs, codebook, assigned) where
     codebook = (sub_id, cent_id, cv array<double>) and assigned =
     (id, sub_id, code, _d). Determinism and scale notes on pq_encode.
     """
-    subs = _pq_subvectors(df, m, sub_len, id_col, vec_col)
+    subs = _pq_subvectors(df, m, sub_len, _ID, _VEC)
 
-    seed_ids = df.select(id_col).orderBy(id_col).limit(k)
+    seed_ids = df.select(_ID).orderBy(_ID).limit(k)
     cent0 = (
-        subs.join(F.broadcast(seed_ids), id_col)
+        subs.join(F.broadcast(seed_ids), _ID)
         .select(
-            F.col(id_col).alias("cent_id"),
+            F.col(_ID).alias("cent_id"),
             "sub_id",
             F.col("sv").alias("cv"),
         )
     )
 
     def assign(cents: DataFrame) -> DataFrame:
-        w = Window.partitionBy(id_col, "sub_id").orderBy("_d", "cent_id")
+        w = Window.partitionBy(_ID, "sub_id").orderBy("_d", "cent_id")
         return (
             subs.join(F.broadcast(cents), "sub_id")
             .withColumn("_d", _pq_sqdist(F.col("sv"), F.col("cv")))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(id_col, "sub_id", F.col("cent_id").alias("code"), "_d")
+            .select(_ID, "sub_id", F.col("cent_id").alias("code"), "_d")
         )
 
     a1 = assign(cent0)
     upd = (
-        a1.join(subs, [id_col, "sub_id"])
+        a1.join(subs, [_ID, "sub_id"])
         .select("sub_id", F.col("code").alias("cell"), F.posexplode("sv").alias("_p", "_v"))
         .groupBy("sub_id", "cell", "_p")
         .agg(
@@ -409,22 +388,19 @@ def _pq_train(
 
 def pq_encode(
     df: DataFrame,
-    m: int = 4,
-    sub_len: int = 16,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    m: int = _PQ_M,
+    sub_len: int = _PQ_SUB_LEN,
 ) -> DataFrame:
     """Product quantization: split each ``m * sub_len``-dim vector into
-    ``m`` subvectors, train ``k`` centroids per subspace (deterministic
+    ``m`` subvectors, train ``_PQ_K`` centroids per subspace (deterministic
     first-k seed + one decimal-mean Lloyd update), and assign every
     subvector its nearest (squared-L2) centroid. Output per vector:
     the ``m``-entry code word plus the reconstruction MSE - the memory
     side of the ANN stack (IVF prunes WHERE to look, PQ shrinks WHAT
-    is kept: 64 floats -> m small ints, a 64x compression at these
-    defaults, searched via asymmetric distance against the codebook).
+    is kept: 64 floats -> m small ints, a 64x compression at the
+    default shape, searched via asymmetric distance against the codebook).
 
-    Determinism: seeds are the subvectors of the k smallest ids;
+    Determinism: seeds are the subvectors of the _PQ_K smallest ids;
     squared distances are strict left-fold doubles (bit-identical in
     DuckDB's list_reduce); argmin tie-breaks on cent_id; the Lloyd
     update means are decimal-cast sums. The whole train+assign loop is
@@ -437,10 +413,10 @@ def pq_encode(
     and combines map-side. At 100 TB you persist the codebook once and
     the encode pass is a single narrow map over the fact table.
     """
-    _, _, a2 = _pq_train(df, m, sub_len, k, id_col, vec_col)
+    _, _, a2 = _pq_train(df, m, sub_len, _PQ_K)
     dim = m * sub_len
     return (
-        a2.groupBy(id_col)
+        a2.groupBy(_ID)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("sub_id", "code"))),
@@ -455,20 +431,11 @@ def pq_encode(
     )
 
 
-def pq_adc_recall(
-    df: DataFrame,
-    every: int = 200,
-    topk: int = 10,
-    m: int = 4,
-    sub_len: int = 16,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Recall@k of PQ asymmetric-distance (ADC) search against the
+def pq_adc_recall(df: DataFrame) -> DataFrame:
+    """Recall@10 of PQ asymmetric-distance (ADC) search against the
     exact squared-L2 answer - the quality gate that closes the PQ
     loop (pq_encode compresses; this measures what the compression
-    costs at query time). Queries are the vectors with id % every == 0,
+    costs at query time). Queries are the vectors with id % 200 == 0,
     evaluated SET-BASED like ivf_recall_at_k: never a per-query loop.
 
     ADC works exactly as on a real serving tier: per query, an
@@ -487,13 +454,14 @@ def pq_adc_recall(
     eval-only cost - is one corpus scan per evaluation, same as
     ivf_recall_at_k.
     """
-    subs, cents, assigned = _pq_train(df, m, sub_len, k, id_col, vec_col)
-    codes = assigned.select(id_col, "sub_id", "code")
+    topk = 10
+    subs, cents, assigned = _pq_train(df, _PQ_M, _PQ_SUB_LEN, _PQ_K)
+    codes = assigned.select(_ID, "sub_id", "code")
 
-    queries = df.filter(F.col(id_col) % every == 0).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    queries = df.filter(F.col(_ID) % 200 == 0).select(
+        F.col(_ID).alias("qid"), F.col(_VEC).alias("qvec")
     )
-    qsubs = _pq_subvectors(queries, m, sub_len, "qid", "qvec")
+    qsubs = _pq_subvectors(queries, _PQ_M, _PQ_SUB_LEN, "qid", "qvec")
     dtab = qsubs.join(F.broadcast(cents), "sub_id").select(
         "qid",
         "sub_id",
@@ -503,29 +471,29 @@ def pq_adc_recall(
 
     adc = (
         codes.join(F.broadcast(dtab), ["sub_id", "code"])
-        .filter(F.col(id_col) != F.col("qid"))
-        .groupBy("qid", id_col)
+        .filter(F.col(_ID) != F.col("qid"))
+        .groupBy("qid", _ID)
         .agg(
             F.sum(F.col("qd").cast("decimal(38,12)"))
             .cast("double")
             .alias("adc_d")
         )
     )
-    wa = Window.partitionBy("qid").orderBy("adc_d", id_col)
+    wa = Window.partitionBy("qid").orderBy("adc_d", _ID)
     adck = (
         adc.withColumn("_rn", F.row_number().over(wa))
         .filter(F.col("_rn") <= topk)
-        .select("qid", F.col(id_col).alias("_hit"))
+        .select("qid", F.col(_ID).alias("_hit"))
     )
 
-    wb = Window.partitionBy("qid").orderBy("_d", id_col)
+    wb = Window.partitionBy("qid").orderBy("_d", _ID)
     brute = (
         df.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("qid"))
-        .withColumn("_d", _pq_sqdist(F.col(vec_col), F.col("qvec")))
+        .filter(F.col(_ID) != F.col("qid"))
+        .withColumn("_d", _pq_sqdist(F.col(_VEC), F.col("qvec")))
         .withColumn("_rn", F.row_number().over(wb))
         .filter(F.col("_rn") <= topk)
-        .select("qid", F.col(id_col).alias("_hit"))
+        .select("qid", F.col(_ID).alias("_hit"))
     )
 
     return (

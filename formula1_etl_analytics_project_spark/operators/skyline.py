@@ -30,9 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def pareto_frontier_2d(
-    pts: DataFrame, x: str, y: str, bucket_width: int = 4
-) -> DataFrame:
+def pareto_frontier_2d(pts: DataFrame, x: str, y: str) -> DataFrame:
     """Rows of ``pts`` not dominated by any other row, where row j
     dominates row i iff ``x_j <= x_i`` and ``y_j >= y_i`` with at
     least one strict (minimize ``x``, maximize ``y``). ``x`` must be
@@ -40,6 +38,7 @@ def pareto_frontier_2d(
     both coordinates all survive (neither dominates). Returns the
     input columns unchanged.
     """
+    bucket_width = 4
     xc, yc = F.col(x), F.col(y)
     bk = F.floor(xc / bucket_width).alias("_bk")
     buckets = pts.groupBy(bk).agg(F.max(yc).alias("_bmax"))

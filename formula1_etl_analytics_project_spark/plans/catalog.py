@@ -879,9 +879,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> 4 bands -> within-bucket candidate join -> exact Jaccard >= 0.5.
     The O(N^2) pair space never materializes - only same-band pairs."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    return minhash_lsh_pairs(
-        docs, num_hashes=8, bands=4, shingle_k=3, jaccard_threshold=0.5
-    )
+    return minhash_lsh_pairs(docs, jaccard_threshold=0.5)
 
 
 # ===========================================================================
@@ -966,7 +964,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the approximate search EXACTLY - approximation
     here is a property of the algorithm, not nondeterminism."""
     emb = read_table(spark, sf_dir, "embeddings", spread=True)
-    return ivf_topk(emb, query_id=0, k=10, n_cells=8, nprobe=2)
+    return ivf_topk(emb, query_id=0, k=10, n_cells=8)
 
 
 @_register(

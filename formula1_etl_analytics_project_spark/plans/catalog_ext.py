@@ -532,7 +532,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
         ),
         on="l_orderkey",
-        salt=8,
     )
     return joined.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
@@ -576,9 +575,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with sum(|block|^2), not N^2, so the operator survives a
     100x corpus scale-up as long as blocks stay bounded."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    return ngram_jaccard_pairs(
-        docs, block_cols=["lang", "source"], shingle_k=3, threshold=0.3
-    )
+    return ngram_jaccard_pairs(docs, threshold=0.3)
 
 
 _SQL_HEX4 = (
@@ -1522,9 +1519,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cutting random-agreement candidates 2^8-fold (measured there:
     # 72.7 -> 4.9 MiB through the candidate exchange at sf0.1).
     pairs = simhash_pairs(docs, nbits=64, max_hamming=2, band_bits=16)
-    labels = connected_components(
-        pairs, docs.select(F.col("doc_id").alias("node")), node_col="node"
-    )
+    labels = connected_components(pairs, docs.select(F.col("doc_id").alias("node")))
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
@@ -1669,7 +1664,7 @@ def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf_dir, "embeddings", spread=True)
-    cents = kmeans_lloyd_centroids(emb, k=4, iters=2)
+    cents = kmeans_lloyd_centroids(emb)
     return cents.select(
         "cent_id", F.posexplode("cent_vec").alias("pos0", "_v")
     ).select(
@@ -1999,7 +1994,7 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    deduped = dedup_event_stream(stream, keys=["event_id"], watermark="10 years")
+    deduped = dedup_event_stream(stream)
     name = f"sdedup_{uuid.uuid4().hex[:8]}"
     q = (
         deduped.writeStream.outputMode("append")
@@ -2202,9 +2197,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     left = _stream().filter(F.col("event_id") % 2 == 0)
     right = _stream().filter(F.col("event_id") % 2 == 1)
-    pairs = stream_stream_user_pairs(
-        left, right, horizon="10 minutes", watermark="10 years"
-    )
+    pairs = stream_stream_user_pairs(left, right)
     name = f"ssjoin_{uuid.uuid4().hex[:8]}"
     q = (
         pairs.writeStream.outputMode("append")
@@ -2446,7 +2439,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf_dir, "embeddings", spread=True)
-    return ivf_recall_at_k(emb, n_queries=10, k=10, n_cells=8, nprobe=2)
+    return ivf_recall_at_k(emb)
 
 
 _TRY_ARITH_SQL = """
@@ -3162,9 +3155,7 @@ def q_skew_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = read_table(spark, sf_dir, "lineitem")
-    return salted_distinct_count(
-        li, ["l_returnflag"], "l_orderkey", out="n_distinct", buckets=16
-    )
+    return salted_distinct_count(li, ["l_returnflag"], "l_orderkey", buckets=16)
 
 
 _STREAM_UPSERT_SQL = """
@@ -3245,7 +3236,7 @@ def q_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(data_dir)
     )
     snap = os.path.join(stage, f"snap_{uuid.uuid4().hex[:8]}")
-    q = incremental_upsert_stream(stream, snap, keys=["event_id"])
+    q = incremental_upsert_stream(stream, snap)
     q.awaitTermination()
     return read_committed_snapshot(spark, snap).select(
         "event_id", "event_type", F.col("value").alias("value_final")

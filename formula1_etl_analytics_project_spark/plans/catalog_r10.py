@@ -430,9 +430,7 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
         ).alias("toks"),
     )
-    chunks = content_defined_chunks(
-        normed, id_col="doc_id", toks_col="toks", mod=_CDC_MOD
-    )
+    chunks = content_defined_chunks(normed, mod=_CDC_MOD)
     return chunks.groupBy("source").agg(
         F.count("*").alias("n_chunks"),
         F.countDistinct("sig").alias("n_unique"),
@@ -546,7 +544,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf_dir, "embeddings", spread=True)
-    enc = pq_encode(emb, m=4, sub_len=16, k=4)
+    enc = pq_encode(emb, m=4, sub_len=16)
     return enc.select(
         "vec_id",
         F.array_join(
@@ -635,7 +633,7 @@ def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf_dir, "embeddings", spread=True)
-    return pq_adc_recall(emb, every=200, topk=10, m=4, sub_len=16, k=4)
+    return pq_adc_recall(emb)
 
 
 # ===========================================================================
@@ -1314,9 +1312,9 @@ def q_cdc_chunk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
         ).alias("toks"),
     )
-    chunks = content_defined_chunks(
-        normed, id_col="doc_id", toks_col="toks", mod=_CDC_MOD
-    ).select("doc_id", "sig").persist()
+    chunks = (
+        content_defined_chunks(normed, mod=_CDC_MOD).select("doc_id", "sig").persist()
+    )
     pairs = (
         chunks.alias("a")
         .join(

@@ -360,7 +360,7 @@ def q_prefix_jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    return prefix_jaccard_pairs(docs, threshold=0.5, order="df")
+    return prefix_jaccard_pairs(docs, order="df")
 
 
 def _wire_prefix_df_oracle() -> None:

@@ -210,7 +210,7 @@ def q_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("n").alias("id_a"), F.col("m").alias("id_b"))
     )
     clab = connected_components(
-        core_edges, core.withColumnRenamed("n", "node"), node_col="node"
+        core_edges, core.withColumnRenamed("n", "node")
     ).withColumnRenamed("label", "cluster")
     border = (
         und.join(core.withColumnRenamed("n", "_cn"), und["n"] == F.col("_cn"), "left_anti")

@@ -158,7 +158,6 @@ def q_golden_record_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     clab = connected_components(
         pairs.select("src_id", "dst_id"),
         names.select(F.col("nid").alias("node")),
-        node_col="node",
         src_col="src_id",
         dst_col="dst_id",
     )

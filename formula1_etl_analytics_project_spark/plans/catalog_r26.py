@@ -31,6 +31,8 @@ Importing this module registers everything into catalog.CATALOG.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from formula1_etl_analytics_project_spark.plans.catalog import (
@@ -382,22 +384,15 @@ def q_source_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BOTH twins as literals: runtime pow() differs by 1 ulp between the
 # JVM and DuckDB's libm, and that ulp survived round(6) into the final
 # quotient (caught at sf0.001 pre-driver). Literals make the weight
-# table bit-identical by construction.
-def _ema_weights(alpha_num: int = 8, alpha_den: int = 10, n: int = 20):
-    from decimal import Decimal, ROUND_HALF_UP
-
-    q = Decimal("0.000001")
-    return [
-        str(
-            (Decimal(alpha_num) ** d / Decimal(alpha_den) ** d).quantize(
-                q, rounding=ROUND_HALF_UP
-            )
+# table bit-identical by construction. 20 lags.
+_EMA_W = [
+    str(
+        (Decimal(8) ** d / Decimal(10) ** d).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP
         )
-        for d in range(n)
-    ]
-
-
-_EMA_W = _ema_weights()
+    )
+    for d in range(20)
+]
 
 _EMA_W_CASE = (
     "CASE date_diff('day', b.day, a.day) "

@@ -214,9 +214,7 @@ def q_minhash_estimate_error(
         F.col("id_a").alias("doc_id")
     ).unionByName(truth.select(F.col("id_b").alias("doc_id"))).distinct()
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    sigs = minhash_signatures(
-        docs.join(F.broadcast(ids), "doc_id"), num_hashes=8, shingle_k=3
-    )
+    sigs = minhash_signatures(docs.join(F.broadcast(ids), "doc_id"))
     mh_cols = [f"mh_{i}" for i in range(8)]
     a = sigs.select(
         F.col("doc_id").alias("id_a"),

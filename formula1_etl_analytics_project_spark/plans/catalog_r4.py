@@ -63,7 +63,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantically invisible. l_suppkey's counts straddle N/100 at every
     sf, so both the keep and the drop branch are exercised."""
     li = read_table(spark, sf_dir, "lineitem")
-    return exact_heavy_hitters(li, "l_suppkey", k=_HH_K, out="cnt")
+    return exact_heavy_hitters(li, "l_suppkey", k=_HH_K)
 
 
 # ===========================================================================
@@ -124,7 +124,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         wave1.unionByName(wave2),
         keys=["o_orderkey"],
         seq_col="seq",
-        op_col="op",
     )
     return merged.withColumnRenamed("o_totalprice", "price_final")
 
@@ -263,8 +262,6 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order (Morton) layout key (operators/layout.py)
 # ===========================================================================
 
-_Z_BITS = 12
-
 _ZORDER_SQL = f"""
 WITH d AS (
   SELECT o_orderkey, o_custkey,
@@ -273,7 +270,7 @@ WITH d AS (
   FROM orders
 )
 SELECT o_orderkey, o_custkey, day_off,
-       {zorder_sql(['o_custkey', 'day_off'], _Z_BITS)} AS zval
+       {zorder_sql(['o_custkey', 'day_off'])} AS zval
 FROM d
 ORDER BY zval, o_orderkey
 LIMIT 20
@@ -303,9 +300,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day_off"),
     )
     return (
-        d.withColumn(
-            "zval", zorder_key(["o_custkey", "day_off"], _Z_BITS)
-        )
+        d.withColumn("zval", zorder_key(["o_custkey", "day_off"]))
         .orderBy("zval", "o_orderkey")
         .limit(20)
     )

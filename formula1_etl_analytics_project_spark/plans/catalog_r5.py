@@ -335,9 +335,7 @@ def q_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     'No space left on device' was this spill landing on a disk the
     cumulative 301-entry sweep had already filled."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
-    return prefix_jaccard_pairs(
-        docs, shingle_k=3, threshold=0.5
-    )
+    return prefix_jaccard_pairs(docs)
 
 
 # ===========================================================================
@@ -443,14 +441,12 @@ def q_minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join's own 289 MiB) for a 256-row pair set. Checkpointing the
     # tiny pair results makes each expensive join run exactly once.
     truth = (
-        prefix_jaccard_pairs(docs, shingle_k=3, threshold=0.5)
+        prefix_jaccard_pairs(docs)
         .select("id_a", "id_b")
         .localCheckpoint()
     )
     lsh = (
-        minhash_lsh_pairs(
-            docs, num_hashes=8, bands=4, shingle_k=3, jaccard_threshold=0.5
-        )
+        minhash_lsh_pairs(docs, jaccard_threshold=0.5)
         .select("id_a", "id_b")
         .localCheckpoint()
     )

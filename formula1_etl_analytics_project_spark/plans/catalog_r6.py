@@ -203,7 +203,7 @@ def q_pagerank_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    ranks = pagerank_fixed_point(edges, iterations=3)
+    ranks = pagerank_fixed_point(edges)
     return (
         ranks.orderBy(F.desc("rank"), "node")
         .limit(20)

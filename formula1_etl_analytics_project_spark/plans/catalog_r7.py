@@ -170,7 +170,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents", spread=True)
     feats = (
         docs.select("doc_id", F.explode(tokens(normalize("text"))).alias("tok"))
-        .select("doc_id", hashed_feature("tok", 64))
+        .select("doc_id", hashed_feature("tok"))
         .groupBy("doc_id", "feat_idx")
         .agg(F.count("*").alias("cnt"))
     )

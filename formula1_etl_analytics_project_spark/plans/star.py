@@ -23,8 +23,8 @@ Semantics faithfully reproduced (SURVEY.md section 7 hard parts):
 Scale notes: one shared scan fans out to 15 sinks - ``wide.cache()`` at
 the call site makes the reuse explicit (Spark does not reuse scans
 across actions). Every dedup is a window over ``partitionBy(key)`` -
-shuffle-on-key, no driver state, no global sort except where the
-reference's own output order demands one.
+shuffle-on-key, no driver state, no global sort except the laps
+builder's file-order surrogate key and cap.
 """
 
 from __future__ import annotations
@@ -45,7 +45,9 @@ from formula1_etl_analytics_project_spark.operators.dedup import dedup_keep_firs
 
 
 def build_date_dim(wide: DataFrame) -> DataFrame:
-    """CompleteETL.py:22 (distinct dates, desc sort) + :122-125 (parts)."""
+    """CompleteETL.py:22 (distinct dates) + :122-125 (parts). The
+    reference's desc sort is not kept: a table's row order is not part
+    of its contract, and a global sort costs a range-sampling job."""
     d = parse_date("date").alias("date")
     return (
         wide.select(d)
@@ -57,7 +59,6 @@ def build_date_dim(wide: DataFrame) -> DataFrame:
             F.month("date").alias("month"),
             F.year("date").alias("year"),
         )
-        .orderBy(F.col("date").desc())
     )
 
 
@@ -190,7 +191,7 @@ def build_qualification(wide: DataFrame) -> DataFrame:
             F.col("driverId").alias("driver_id"),
             parse_date("quali_date").alias("quali_date"),
             parse_time("quali_time").alias("quali_time"),
-            int_with_default("position", 0).alias("position"),
+            int_with_default("position").alias("position"),
         )
     )
 
@@ -302,6 +303,9 @@ def build_team_standings(wide: DataFrame) -> DataFrame:
     )
 
 
+# The reference's FK-safe load order (dims -> hub -> facts,
+# CompleteETL.py:1034-1042): the order of run_etl's report and the CLI's
+# output. The writes themselves run concurrently.
 BUILDERS = {
     "date_dim": build_date_dim,
     "location_dim": build_location_dim,

@@ -16,16 +16,12 @@ Catalyst for free; scan parallelism comes from file splits
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from formula1_etl_analytics_project_spark.schemas import (
     TESTDATA_TABLES,
     WIDE_F1_SCHEMA,
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def read_table(
@@ -81,16 +77,14 @@ def read_table(
     return df
 
 
-def load_all(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR
-) -> dict[str, DataFrame]:
+def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: read_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
 _REGISTERED_SF: dict[str, str] = {}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every testdata table as a temp view for the SQL surface
     (SURVEY.md EP3: the reference's only query layer is raw SQL).
 

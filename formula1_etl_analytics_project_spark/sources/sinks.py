@@ -40,12 +40,10 @@ from formula1_etl_analytics_project_spark.operators.dedup import dedup_keep_firs
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    writer = df.write.mode(mode)
+    """Overwrite ``path`` with ``df`` as parquet."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -110,18 +108,17 @@ def apply_changes(
     changes: DataFrame,
     keys: list[str],
     seq_col: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a CDC change feed (insert/update/delete) to a snapshot.
 
-    ``changes`` carries the snapshot's columns plus ``op_col`` in
+    ``changes`` carries the snapshot's columns plus ``op`` in
     {'I','U','D'} and a monotonically increasing ``seq_col`` (commit
     LSN / binlog position). Per key, only the HIGHEST-``seq_col``
     change matters for a snapshot rebuild - intermediate versions are
     skipped entirely (no row-at-a-time replay):
 
       1. window row_number per key over ``seq_col`` desc -> latest
-         change per key (ties broken by ``op_col`` for determinism;
+         change per key (ties broken by ``op`` for determinism;
          a well-formed feed never ties).
       2. snapshot rows whose key appears in the feed are dropped
          (one left-anti join).
@@ -143,10 +140,10 @@ def apply_changes(
     daily rewrite.
     """
     latest = dedup_keep_first(
-        changes, keys, [F.col(seq_col).desc(), F.col(op_col).desc()]
+        changes, keys, [F.col(seq_col).desc(), F.col("op").desc()]
     )
     survivors = snapshot.join(latest.select(*keys), on=keys, how="left_anti")
-    upserts = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
+    upserts = latest.filter(F.col("op") != "D").drop("op", seq_col)
     return survivors.unionByName(upserts)
 
 
@@ -156,10 +153,9 @@ def write_bucketed(
     bucket_by: str | list[str],
     buckets: int = 8,
     sort_by: str | list[str] | None = None,
-    mode: str = "overwrite",
     path: str | None = None,
 ) -> None:
-    """Bucketed managed-table write (``bucketBy`` + ``saveAsTable``).
+    """Bucketed managed-table overwrite (``bucketBy`` + ``saveAsTable``).
 
     Two tables co-bucketed on their join key with the same bucket count
     join WITHOUT a shuffle - each bucket pair joins locally (the plan
@@ -169,7 +165,7 @@ def write_bucketed(
     (plain ``.parquet(path)`` cannot record bucket metadata).
     """
     cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-    writer = df.write.mode(mode).bucketBy(buckets, *cols)
+    writer = df.write.mode("overwrite").bucketBy(buckets, *cols)
     if sort_by:
         scols = [sort_by] if isinstance(sort_by, str) else list(sort_by)
         writer = writer.sortBy(*scols)
@@ -570,9 +566,7 @@ def commit_log_upsert(
         next_n = base_n + 1
         snap_dir = f"_snap_{next_n:08d}_{_uuid.uuid4().hex[:8]}"
         try:
-            write_parquet(
-                merged, posixpath.join(path, snap_dir), mode="overwrite"
-            )
+            write_parquet(merged, posixpath.join(path, snap_dir))
         except Exception as exc:
             # A lagging writer can lose its base snapshot mid-scan when
             # a faster writer commits twice and prunes (retention keeps

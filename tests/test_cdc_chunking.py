@@ -37,7 +37,7 @@ def _chunks(spark, rows):
         ]
     )
     df = spark.createDataFrame(rows, schema)
-    out = content_defined_chunks(df, id_col="doc_id", toks_col="toks", mod=8)
+    out = content_defined_chunks(df, mod=8)
     return {
         r["doc_id"]: sorted(
             (r2["chunk_id"], r2["chunk_len"], r2["sig"])

@@ -81,9 +81,11 @@ def test_minhash_lsh_finds_planted_pairs(docs):
 
 
 def test_ngram_jaccard_exact_values(docs):
+    # one (lang, source) block holds every doc, so every pair is scored
+    blocked = docs.withColumn("lang", F.lit("en")).withColumn("source", F.lit("web"))
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, threshold=0.2).collect()
+        for r in ngram_jaccard_pairs(blocked, threshold=0.2).collect()
     }
     assert pairs[(1, 4)] == 1.0
     assert 0.5 < pairs[(1, 2)] < 1.0
@@ -155,7 +157,7 @@ def test_prefix_jaccard_is_lossless_vs_all_pairs(spark, docs):
 
     got = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in prefix_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in prefix_jaccard_pairs(docs).collect()
     }
     sh = docs.select(
         F.col("doc_id").alias("_id"),
@@ -190,12 +192,10 @@ def test_prefix_jaccard_df_order_matches_lex(spark, docs):
 
     lex = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in prefix_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in prefix_jaccard_pairs(docs).collect()
     }
     df_ = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in prefix_jaccard_pairs(
-            docs, threshold=0.5, order="df"
-        ).collect()
+        for r in prefix_jaccard_pairs(docs, order="df").collect()
     }
     assert lex == df_ and lex

@@ -8,9 +8,9 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark.sql import functions as F
 
-from formula1_etl_analytics_project_spark.etl import BUILDERS, LOAD_ORDER, run_etl
+from formula1_etl_analytics_project_spark.etl import BUILDERS, run_etl
 from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
-from tests.f1_fixture import write_csv
+from formula1_etl_analytics_project_spark.sources.fixture import write_csv
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +23,7 @@ def etl_out(spark, tmp_path_factory):
 
 def test_all_tables_written_nonempty(spark, etl_out):
     out, counts, _ = etl_out
-    assert list(counts) == LOAD_ORDER
+    assert list(counts) == list(BUILDERS)
     assert all(n > 0 for n in counts.values()), counts
 
 
@@ -34,7 +34,7 @@ def test_counts_and_content_match_serial_builders(spark, etl_out):
     uncached scan."""
     out, counts, csv_path = etl_out
     wide = read_wide_csv(spark, csv_path)
-    for name in LOAD_ORDER:
+    for name in BUILDERS:
         written = spark.read.parquet(f"{out}/{name}")
         serial = BUILDERS[name](wide)
         assert written.columns == serial.columns, name
@@ -111,7 +111,7 @@ def test_registered_views_use_the_written_schema_and_start_no_job(
     tracker = sc.statusTracker()
     assert tracker.getJobIdsForGroup("run_etl-writes")
     assert list(tracker.getJobIdsForGroup("run_etl-register")) == []
-    for name in LOAD_ORDER:
+    for name in BUILDERS:
         inferred = spark.read.parquet(f"{out}/{name}").schema
         assert spark.table(name).schema == inferred, name
 

@@ -96,7 +96,7 @@ def test_laptime_precision(spark):
 
 
 def test_int_with_default(spark):
-    out = _vals(spark, int_with_default("x", 0), ["7", "bad", None])
+    out = _vals(spark, int_with_default("x"), ["7", "bad", None])
     assert out == [7, 0, 0]
 
 

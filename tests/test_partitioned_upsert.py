@@ -397,8 +397,7 @@ def test_bloom_mode_detects_moves_across_the_null_partition(spark, tmp_path):
     bi.build_key_bloom_index(
         spark, path, ["k"], "part", expected_keys_per_partition=10
     )
-    # k=0 lives in the null partition, k=1 in A; one batch each, since
-    # a probe does not look inside the partitions its batch writes
+    # k=0 lives in the null partition, k=1 in A; one batch each
     found = []
     for k, part in ((0, "B"), (1, None)):
         mover = spark.createDataFrame(

@@ -174,7 +174,7 @@ def test_salted_join_spreads_hot_keys(spark):
     # 10k rows, ALL the same key - the pathological skew case.
     left = spark.range(10_000).select(F.lit(1).alias("k"), F.col("id").alias("v"))
     right = spark.createDataFrame([(1, "x")], "k int, tag string")
-    out = salted_join(left, right, on="k", salt=8)
+    out = salted_join(left, right, on="k")
     assert out.count() == 10_000  # semantics intact
     salted = left.withColumn("_salt", (F.rand(42) * 8).cast("int"))
     n_groups = salted.select("k", "_salt").distinct().count()
@@ -400,7 +400,7 @@ def test_aqe_skew_split_fires_only_when_tuned(spark):
         assert "skew=true" in final_plan(q())
         # salting needs no AQE cooperation and keeps exact semantics
         salted = (
-            salted_join(left, right, "k", salt=8)
+            salted_join(left, right, "k")
             .groupBy("v")
             .agg(F.sum("w").alias("s"))
         )
@@ -752,13 +752,13 @@ def test_cdc_chunk_pairs_joins_on_digests_not_text(spark):
 
 def test_epoch_shuffle_range_partitions_no_global_sort(spark):
     """The epoch shuffle's data path must be a RANGE partitioning on
-    the md5 key + per-partition local work (MapInPandas stamping) -
+    the md5 key + per-partition local work (the sequence stamp) -
     never a global sort. The only SinglePartition exchange allowed is
     the k-row offsets aggregate (k = #partitions, data-independent),
     whose result broadcasts back."""
     plan = _plan(spark, "epoch_shuffle_docs")
     assert "rangepartitioning(_k" in plan
-    assert "MapInPandas" in plan
+    assert "monotonically_increasing_id() AS __seq_local" in plan
     assert "BroadcastHashJoin" in plan  # offsets join back as broadcast
     # the single-partition exchange must feed an aggregate (the k-row
     # offsets path), not the row-level data path

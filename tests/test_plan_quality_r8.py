@@ -19,14 +19,14 @@ def _plan(spark, name: str) -> str:
 
 def test_snm_rank_is_distributed_not_global_window(spark):
     """The sorted-neighborhood rank must come from the distributed
-    sequence operator (range exchange + MapInPandas stamping), NOT a
+    sequence operator (range exchange + native partition/index stamp), NOT a
     single-partition ROW_NUMBER window over the whole vocabulary; the
     stamped relation must be persisted (InMemoryRelation) so the
     probe and neighbor sides reuse one stamping pass; and the
     neighbor match must be an equi hash join, never a nested loop."""
     plan = _plan(spark, "sorted_neighborhood_pairs")
     assert "rangepartitioning" in plan
-    assert "MapInPandas" in plan
+    assert "monotonically_increasing_id() AS __seq_local" in plan
     assert "InMemoryRelation" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -93,11 +93,11 @@ def test_gini_rank_is_distributed_sequence(spark):
     unpartitioned ROW_NUMBER window over the spend table: the only
     single-partition exchanges sit over k-row aggregates (the
     sequence operator's offsets and the final 1-row Gini), never over
-    a scan or the MapInPandas stamping pass."""
+    a scan or the stamping pass."""
     df = CATALOG["gini_spend"].spark(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan
-    assert "MapInPandas" in plan
+    assert "monotonically_increasing_id() AS __seq_local" in plan
     lines = plan.splitlines()
     for i, l in enumerate(lines):
         if "Exchange SinglePartition" in l:

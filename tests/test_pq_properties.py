@@ -58,14 +58,14 @@ def test_lloyd_update_never_increases_assignment_error(spark):
         return assigned.agg(F.sum("_d")).collect()[0][0]
 
     err0 = total_err(cent0)
-    _, cent1, _ = _pq_train(df, m, sub_len, k, "vec_id", "embedding")
+    _, cent1, _ = _pq_train(df, m, sub_len, k)
     err1 = total_err(cent1)
     assert err1 <= err0 + 1e-9, (err0, err1)
 
 
 def test_pq_codes_are_valid_and_mse_consistent(spark):
     df = _vectors(spark)
-    out = pq_encode(df, m=2, sub_len=8, k=4).collect()
+    out = pq_encode(df, m=2, sub_len=8).collect()
     assert len(out) == 60
     seed_ids = {0, 1, 2, 3}
     for r in out:

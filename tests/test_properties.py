@@ -188,7 +188,7 @@ def test_pagerank_matches_pure_python_fixpoint(spark, edge_list):
     edges = spark.createDataFrame(distinct_edges, ["src", "dst"])
     got = {
         r["node"]: r["rank"]
-        for r in pagerank_fixed_point(edges, iterations=3).collect()
+        for r in pagerank_fixed_point(edges).collect()
     }
     assert got == pagerank_fixed_point_local(distinct_edges, iterations=3)
 
@@ -517,7 +517,7 @@ def test_apply_changes_matches_sequential_replay(spark, snapshot, feed):
     got = {
         r["k"]: r["v"]
         for r in apply_changes(
-            snap_df, feed_df, keys=["k"], seq_col="seq", op_col="op"
+            snap_df, feed_df, keys=["k"], seq_col="seq"
         ).collect()
     }
     assert got == replay

@@ -45,10 +45,10 @@ def test_dense_and_unique(spark, scattered):
 
 
 def test_no_fact_scale_single_partition_exchange(spark, scattered):
-    """The fact path goes Exchange rangepartitioning -> MapInPandas;
-    the only SinglePartition exchange sits directly over the k-row
-    count aggregate (k = #partitions), so no full-data all-to-one
-    funnel exists anywhere in the plan."""
+    """The fact path goes Exchange rangepartitioning -> a native stamp
+    (no Python worker); the only SinglePartition exchange sits directly
+    over the k-row count aggregate (k = #partitions), so no full-data
+    all-to-one funnel exists anywhere in the plan."""
     got = distributed_sequence(scattered, "k", "seq")
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan
@@ -57,12 +57,11 @@ def test_no_fact_scale_single_partition_exchange(spark, scattered):
     assert single, "expected the k-row offsets exchange"
     for i in single:
         # the exchange's child (next tree line) must be the partial/
-        # final count aggregate - k rows - never a scan or MapInPandas
+        # final count aggregate - k rows - never a scan or the stamp
         assert "HashAggregate" in lines[i + 1], lines[i : i + 2]
-    # and the fact-side MapInPandas is never below a SinglePartition
-    # exchange: its own subtree contains the range exchange instead
-    mip = [i for i, l in enumerate(lines) if "MapInPandas" in l]
-    assert mip, "expected the stamping MapInPandas node"
+    # and the partition/index stamp runs in the JVM: no Python exec node
+    python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+    assert not [l for l in lines if any(n in l for n in python_nodes)], plan
 
 
 def test_build_pit_stop_plan_has_no_global_window(spark, tmp_path):
@@ -71,7 +70,7 @@ def test_build_pit_stop_plan_has_no_global_window(spark, tmp_path):
     all-to-one Exchange of the whole pit-stop fact)."""
     from formula1_etl_analytics_project_spark.plans.star import build_pit_stop
     from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
-    from tests.f1_fixture import write_csv
+    from formula1_etl_analytics_project_spark.sources.fixture import write_csv
 
     wide = read_wide_csv(spark, write_csv(str(tmp_path / "wide.csv")))
     df = build_pit_stop(wide)

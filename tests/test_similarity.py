@@ -64,7 +64,7 @@ def test_brute_force_cosine_exact(spark, emb):
 
 def test_ivf_recall_vs_bruteforce(spark, emb):
     exact = {r["vec_id"] for r in brute_force_topk(emb, 7, k=5).collect()}
-    approx = {r["vec_id"] for r in ivf_topk(emb, 7, k=5, n_cells=4, nprobe=2).collect()}
+    approx = {r["vec_id"] for r in ivf_topk(emb, 7, k=5, n_cells=4).collect()}
     # clustered corpus: the query's true neighbors live in its cluster,
     # whose cell IVF probes first -> near-perfect recall expected
     assert 999 in approx

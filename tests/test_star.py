@@ -18,7 +18,7 @@ from formula1_etl_analytics_project_spark.operators.joins import integrity_viola
 from formula1_etl_analytics_project_spark.plans.star import BUILDERS, reconstruct_wide
 from formula1_etl_analytics_project_spark.sources.readers import read_wide_csv
 
-from tests.f1_fixture import write_csv
+from formula1_etl_analytics_project_spark.sources.fixture import write_csv
 
 
 @pytest.fixture(scope="module")

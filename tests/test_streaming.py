@@ -29,7 +29,7 @@ def event_dir(spark, tmp_path_factory):
 
 def test_windowed_counts_match_batch(spark, event_dir):
     stream = read_event_stream(spark, event_dir)
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
+    agg = windowed_event_counts(stream)
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -99,7 +99,7 @@ def test_stream_dedup_within_watermark(spark, event_dir, tmp_path_factory):
     src.write.mode("append").parquet(dup_dir)
 
     stream = read_event_stream(spark, dup_dir)
-    deduped = dedup_event_stream(stream, keys=["event_id"], watermark="10 years")
+    deduped = dedup_event_stream(stream)
     q = (
         deduped.writeStream.outputMode("append")
         .format("memory")
@@ -124,7 +124,7 @@ def test_incremental_upsert_stream(spark, event_dir, tmp_path_factory):
 
     snap = str(tmp_path_factory.mktemp("snap") / "events_snapshot")
     stream = read_event_stream(spark, event_dir)
-    q = incremental_upsert_stream(stream, snap, keys=["event_id"])
+    q = incremental_upsert_stream(stream, snap)
     q.awaitTermination()
 
     n_commits, _, epoch = read_committed(snap)
