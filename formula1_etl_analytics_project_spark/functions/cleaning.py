@@ -3,10 +3,8 @@ re-expressed as native Column expressions (SURVEY.md section 2.8, C1-C9).
 
 The reference applies plain Python functions row-at-a-time
 (``Series.apply`` / ``for row in data`` loops). Every one of them maps
-onto JVM-side expressions that stay inside whole-stage codegen; the one
-deliberate exception is ``parse_race_time_pandas_udf``, an
-Arrow-vectorized twin of C3 kept to exercise (and test) the engine's
-vectorized-UDF path.
+onto JVM-side expressions that stay inside whole-stage codegen, with no
+Python UDF.
 
 All parsers are null-safe the same way the originals are: the '\\N'
 sentinel is already a real NULL by the time these run (reader option),
@@ -16,9 +14,7 @@ reference's try/except-skip semantics (F6).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import StringType
 
 
 def parse_time(col: Column | str) -> Column:
@@ -84,38 +80,6 @@ def format_seconds(col: Column | str, precision: int = 6) -> Column:
         c.isNotNull(),
         F.format_string(f"%02d:%02d:%0{3 + precision}.{precision}f", hours, minutes, secs),
     )
-
-
-@F.pandas_udf(StringType())
-def parse_race_time_pandas_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized twin of C3 -> 'HH:mm:ss.SSSSSS' strings.
-
-    Kept as the engine's one demonstrative pandas UDF (SURVEY.md
-    section 2.10); the native composition above is the production path.
-    """
-
-    def one(v):
-        if v is None:
-            return None
-        v = str(v)
-        try:
-            if v.startswith("+"):
-                total = float(v[1:])
-            else:
-                h, m, sec = v.split(":")
-                if not (0 <= int(m) < 60 and 0 <= float(sec) < 60):
-                    return None
-                total = int(h) * 3600 + int(m) * 60 + float(sec)
-        except (ValueError, TypeError):
-            return None
-        # round BEFORE the split so the carry propagates (59.9999996
-        # is one whole minute, not an invalid :60.000000 field)
-        total = round(total, 6)
-        h, rem = divmod(total, 3600)
-        m, sec = divmod(rem, 60)
-        return f"{int(h):02d}:{int(m):02d}:{sec:09.6f}"
-
-    return s.map(one)
 
 
 def parse_laptime_ms(col: Column | str) -> Column:

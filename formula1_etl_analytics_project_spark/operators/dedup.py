@@ -516,8 +516,9 @@ def _simhash_from_digests(
     ``nbits`` md5-derived bits that start at hex digit ``hex_offset``,
     and the signature takes the sign of each bit's vote sum. Pure
     higher-order functions - no UDF. ``nbits`` must be <= 32 so the
-    power-of-two packing stays exact in double; :func:`simhash64_wide`
-    packs two 32-bit halves for the full 64-bit form."""
+    power-of-two packing stays exact in double;
+    :func:`simhash64_wide_from_digests` packs two 32-bit halves for the
+    full 64-bit form."""
     hashes = F.transform(
         digests,
         lambda d: F.conv(
@@ -554,27 +555,18 @@ def _simhash_from_digests(
     )
 
 
-def simhash64_wide(text_col: Column | str) -> Column:
-    """True 64-bit SimHash: two independent 32-bit halves voting over
-    DISJOINT md5 hex ranges (digits 1-8 and 9-16), packed bitwise into
-    one long - ``hi << 32 | lo``. The packing is integer arithmetic
+def simhash64_wide_from_digests(digests: Column) -> Column:
+    """True 64-bit SimHash from a pre-staged digest array column: two
+    independent 32-bit halves voting over DISJOINT md5 hex ranges
+    (digits 1-8 and 9-16), packed bitwise into one long -
+    ``hi << 32 | lo``. The packing is integer arithmetic
     (shiftleft/bitwiseOR on long), so all 64 bits are exact; the sign
     bit is just bit 63. Hamming distance and band extraction work
     unchanged: ``bit_count(xor)`` is a 64-bit popcount, and band masks
     ``(sig >> k) & m`` are sign-safe because the mask discards the
-    sign-extended high bits.
-
-    NB: as a single expression this tokenizes+hashes the text twice
-    (once per half - no CSE in interpreted HOFs). DataFrame-level
-    callers should stage ``_word_digests`` as its own column first and
-    use :func:`simhash64_wide_from_digests` (what simhash_pairs does),
-    which runs the md5 pass once."""
-    dig = _word_digests(text_col)
-    return simhash64_wide_from_digests(dig)
-
-
-def simhash64_wide_from_digests(digests: Column) -> Column:
-    """64-bit SimHash from a pre-staged digest array column."""
+    sign-extended high bits. Stage ``_word_digests`` as its own column
+    first (as simhash_pairs does) so the md5 pass runs once, not once
+    per half."""
     lo = _simhash_from_digests(digests, nbits=32, hex_offset=1)
     hi = _simhash_from_digests(digests, nbits=32, hex_offset=9)
     return F.shiftleft(hi, 32).bitwiseOR(lo)

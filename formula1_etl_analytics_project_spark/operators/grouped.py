@@ -1,10 +1,9 @@
 """Grouped-map operators (``applyInPandas``): per-group pandas kernels
 for semantics the built-in expressions genuinely can't state cleanly.
 
-This is the third Python escape hatch tier (SURVEY.md section 2.10 /
+The package's Python escape hatches (SURVEY.md section 2.10 /
 the north-star UDF surface):
 
-  * ``pandas_udf``      - scalar, vectorized (functions.cleaning C3 twin)
   * ``mapInPandas``     - partition-streaming (operators.multimodal)
   * ``applyInPandas``   - grouped-map, full group in one pandas frame
                           (this module)

@@ -11,10 +11,12 @@ fixed by the data model, independent of scale factor) get pinned
 factor (TPC-H customer at sf10000 is 1.5B rows), so a pinned hint on
 them is right at sf0.1 and OOMs the driver at sf10000 - those sides go
 through :func:`broadcast_if_small`, which consults Catalyst's size
-estimate and otherwise leaves the strategy to AQE. Fact-fact joins
-rely on AQE for sort-merge vs shuffled-hash and skew splitting;
-pre-bucketing both facts on the join key removes that shuffle entirely
-when the tables are co-bucketed at write time.
+estimate and otherwise leaves the strategy to AQE. The same estimate,
+against the same ``_BOUNDED_DIM_BYTES`` budget, is the only thing that
+picks :func:`asof_join`'s composition. Fact-fact joins rely on AQE for
+sort-merge vs shuffled-hash and skew splitting; pre-bucketing both facts
+on the join key removes that shuffle entirely when the tables are
+co-bucketed at write time.
 """
 
 from __future__ import annotations
@@ -32,27 +34,20 @@ _BOUNDED_DIM_BYTES = 64 << 20
 # is cached on DataFrame.semanticHash() - canonicalized-plan hashing, no
 # file listing. Staleness caveat: a plan re-read after its underlying
 # files were rewritten reuses the old decision; the gate is a coarse
-# 64 MB threshold so this only matters if a table crosses it mid-session
-# - call clear_size_gate_cache() after large in-place rewrites.
+# 64 MB threshold so this only matters if a table crosses it mid-session.
 _SIZE_CACHE: dict[tuple[int, int], int] = {}
 _SIZE_CACHE_MAX = 1024
 
 
-def clear_size_gate_cache() -> None:
-    _SIZE_CACHE.clear()
-
-
-def broadcast_if_small(
-    df: DataFrame, max_bytes: int = _BOUNDED_DIM_BYTES
-) -> DataFrame:
+def broadcast_if_small(df: DataFrame) -> DataFrame:
     """Size-gated broadcast hint for join sides that GROW with scale.
 
     nation/region/date are bounded by the data model and can carry an
     unconditional ``broadcast()``. customer/part/supplier grow linearly
     with scale factor, so a hint that is right at sf0.1 OOMs the driver
     (or is silently demoted) at sf10000. This helper consults Catalyst's
-    own logical-plan size estimate: under ``max_bytes`` the hint is
-    pinned (guaranteeing the no-fact-shuffle star plan); above it the
+    own logical-plan size estimate: under ``_BOUNDED_DIM_BYTES`` the hint
+    is pinned (guaranteeing the no-fact-shuffle star plan); above it the
     side is returned unhinted and AQE picks broadcast vs shuffled join
     from runtime statistics. If no estimate is available the hint is
     NOT forced - the conservative failure mode. Decisions are memoized
@@ -61,7 +56,7 @@ def broadcast_if_small(
     size = plan_size_bytes(df)
     if size is None:
         return df
-    return F.broadcast(df) if size <= max_bytes else df
+    return F.broadcast(df) if size <= _BOUNDED_DIM_BYTES else df
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -148,15 +143,14 @@ def asof_join(
     right_time: str,
     value_col: str,
     out_col: str | None = None,
-    strategy: str = "auto",
-    max_broadcast_bytes: int = _BOUNDED_DIM_BYTES,
 ) -> DataFrame:
     """As-of join: every left row picks the right row of the same key
     with the greatest ``right_time`` <= ``left_time``; several right
     rows at that same time resolve deterministically to the greatest
     ``value_col`` (so the right side needs NO pre-dedup pass — one
     fewer shuffle). Spark has no native as-of join; two compositions,
-    chosen by a size gate:
+    chosen by the ``_BOUNDED_DIM_BYTES`` size gate on the keyed right
+    side:
 
     * ``array`` — the small-right fast path: the right side collapses
       to one row per key holding a time-sorted array of (time, value)
@@ -173,7 +167,8 @@ def asof_join(
       time-ordered window, ``last(value, ignorenulls)`` carries the
       latest right value forward. One shuffle+sort of left+right on
       the key — the right answer when the right side is itself
-      fact-scale (both sides shuffle once; no memory bound).
+      fact-scale, or when it has no size estimate (both sides shuffle
+      once; no memory bound).
 
     At equal timestamps the right row is visible to the left row
     (<= semantics) in both forms: the array filter uses ``<=``, and
@@ -182,34 +177,29 @@ def asof_join(
     the greatest (time, value) pair, and the union window's ordering
     ends each equal-time run at the greatest ``__v``.
     """
-    if strategy not in ("auto", "array", "union"):
-        raise ValueError(f"unknown asof strategy {strategy!r}")
     out_col = out_col or value_col
-    if strategy != "union":
-        keyed = right.groupBy(F.col(right_on).alias("__k")).agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(right_time), F.col(value_col)))
-            ).alias("__arr")
+    keyed = right.groupBy(F.col(right_on).alias("__k")).agg(
+        F.sort_array(
+            F.collect_list(F.struct(F.col(right_time), F.col(value_col)))
+        ).alias("__arr")
+    )
+    size = plan_size_bytes(keyed)
+    if size is not None and size <= _BOUNDED_DIM_BYTES:
+        looked = left.join(
+            F.broadcast(keyed),
+            left[left_on] == keyed["__k"],
+            "left",
+        ).withColumn(
+            out_col,
+            F.try_element_at(
+                F.filter(
+                    "__arr",
+                    lambda x: x[right_time] <= F.col(left_time),
+                ),
+                F.lit(-1),
+            )[value_col],
         )
-        size = plan_size_bytes(keyed)
-        if strategy == "array" or (
-            size is not None and size <= max_broadcast_bytes
-        ):
-            looked = left.join(
-                F.broadcast(keyed),
-                left[left_on] == keyed["__k"],
-                "left",
-            ).withColumn(
-                out_col,
-                F.try_element_at(
-                    F.filter(
-                        "__arr",
-                        lambda x: x[right_time] <= F.col(left_time),
-                    ),
-                    F.lit(-1),
-                )[value_col],
-            )
-            return looked.drop("__k", "__arr")
+        return looked.drop("__k", "__arr")
     tagged_left = left.select(
         F.col(left_on).alias("__k"),
         F.col(left_time).alias("__t"),

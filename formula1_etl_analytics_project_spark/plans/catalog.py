@@ -18,7 +18,7 @@ comparison against DuckDB deterministic):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -53,7 +53,6 @@ class QuerySpec:
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
-    tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
     # Optional scale restatement of the SAME oracle semantics for the
     # sf1 parity harness (scripts/sf1_check.py): some driver-facing
@@ -82,15 +81,12 @@ _ORACLE_PREP: list[Callable[[], None]] = []
 def _register(
     name: str,
     oracle: str | None,
-    tags: tuple[str, ...] = (),
     bench: bool = False,
     gate_priority: bool = False,
     oracle_scale: str | None = None,
 ):
     def deco(fn):
-        CATALOG[name] = QuerySpec(
-            name, fn, oracle, tags, bench, oracle_scale
-        )
+        CATALOG[name] = QuerySpec(name, fn, oracle, bench, oracle_scale)
         if gate_priority:
             _GATE_PRIORITY_DYNAMIC.append(name)
         return fn
@@ -127,7 +123,6 @@ def _sql_dsum(expr, alias, scale=4):
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("agg", "scan", "filter"),
     bench=True,
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,7 +163,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            c_mktsegment AS segment, c_acctbal AS balance
     FROM customer WHERE c_acctbal > 0
     """,
-    tags=("project", "filter"),
 )
 def q_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1: projection + rename + simple predicate (the reference's
@@ -188,7 +182,6 @@ def q_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "distinct_flags",
     "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    tags=("dedup",),
 )
 def q_distinct_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1: full-row distinct (reference CompleteETL.py:22)."""
@@ -208,7 +201,6 @@ def q_distinct_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ) WHERE rn = 1
     """,
-    tags=("dedup", "window"),
     bench=True,
 )
 def q_dedup_first_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,7 +226,6 @@ def q_dedup_first_order(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem
     ) WHERE rn = 1
     """,
-    tags=("dedup", "window"),
 )
 def q_dedup_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: composite-key first-seen dedup (reference pitstop/laps sets,
@@ -253,7 +244,6 @@ def q_dedup_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
-    tags=("sort", "limit"),
 )
 def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1+O3: global top-k -> TakeOrderedAndProject (per-partition heap,
@@ -275,7 +265,6 @@ def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_sql_dsum('o_totalprice', 'total')}
     FROM orders GROUP BY 1, 2
     """,
-    tags=("scalar", "agg"),
 )
 def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3/C9: date-part derivation (reference date_etl.py:27-32) feeding
@@ -299,7 +288,6 @@ def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_orders
     FROM orders GROUP BY 1
     """,
-    tags=("scalar",),
 )
 def q_order_age_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4: the reference's year-subtraction age semantics
@@ -332,7 +320,6 @@ def q_order_age_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name, n_name
     """,
-    tags=("join", "agg"),
     bench=True,
 )
 def q_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,7 +356,6 @@ def q_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_name FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
-    tags=("join",),
 )
 def q_anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: integrity/coverage anti-join (the reference's commented-out
@@ -388,7 +374,6 @@ def q_anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
     """,
-    tags=("join",),
 )
 def q_semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-side of J2 as a semi-join (never duplicates the child)."""
@@ -418,7 +403,6 @@ def q_semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_sql_dsum('o_totalprice', 'total')}
     FROM merged GROUP BY o_orderstatus
     """,
-    tags=("join", "sink"),
 )
 def q_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: the merge-on-key upsert (reference's orphaned MERGE INTO
@@ -444,7 +428,6 @@ def q_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ) WHERE rn = 1
     """,
-    tags=("dedup", "join"),
 )
 def q_normalize_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's signature move at scale: recover a dimension from
@@ -476,7 +459,6 @@ def q_normalize_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS order_seq
     FROM orders
     """,
-    tags=("window",),
     bench=True,
 )
 def q_running_customer_total(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,7 +487,6 @@ def q_running_customer_total(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ) WHERE rnk <= 3
     """,
-    tags=("window",),
 )
 def q_rank_in_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY 2.6: per-group ranking (Results.rank / fastest-lap
@@ -529,7 +510,6 @@ def q_rank_in_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_sql_dsum('o_totalprice', 'total')}
     FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
-    tags=("agg", "rollup"),
 )
 def q_rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dashboard-style subtotal rollup (the Power BI matrix pages,
@@ -556,7 +536,6 @@ def q_rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
            {_sql_dsum("CASE WHEN o_orderstatus = 'P' THEN o_totalprice END", 'total_P')}
     FROM orders GROUP BY o_orderpriority
     """,
-    tags=("agg", "pivot"),
 )
 def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (status columns per priority) - expressed as conditional
@@ -589,7 +568,6 @@ def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS avg_value
     FROM events GROUP BY 1, 2
     """,
-    tags=("agg", "time"),
     bench=True,
 )
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,7 +609,6 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_events
     FROM sess GROUP BY user_id
     """,
-    tags=("window", "time"),
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: lag-gap flag + running sum = session ids, then
@@ -666,7 +643,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_id, printf('%+.3f', value) AS gap_str FROM events
     ) WHERE starts_with(gap_str, '+')
     """,
-    tags=("scalar",),
 )
 def q_gap_time_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: the reference's '+ss.mmm' race-gap time form (time_etl.py:
@@ -730,7 +706,6 @@ _SQL_NORM_TOKS = (
            CAST(length(text) AS INT) AS text_len, lang
     FROM documents
     """,
-    tags=("text",),
 )
 def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (whitespace tokenizer) + length accounting."""
@@ -749,7 +724,6 @@ def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, {_SQL_QUALITY} AS quality
     FROM documents
     """,
-    tags=("text",),
 )
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality scoring (length / stopword density /
@@ -766,7 +740,6 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS lang_guess
     FROM documents
     """,
-    tags=("text",),
 )
 def q_doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-density language ID heuristic."""
@@ -782,7 +755,6 @@ def q_doc_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS fingerprint
     FROM documents
     """,
-    tags=("text", "dedup"),
 )
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: md5 over whitespace-normalized text."""
@@ -799,7 +771,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1 HAVING COUNT(*) >= 1
     """,
-    tags=("text", "dedup"),
     bench=True,
 )
 def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,7 +840,6 @@ _SQL_SHINGLES = """
     WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
           / len(list_distinct(list_concat(sh_a, sh_b))) >= 0.5
     """,
-    tags=("text", "dedup", "lsh"),
     bench=True,
 )
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,7 +883,6 @@ def _sql_cosine(a: str, b: str) -> str:
     WHERE e.vec_id <> 0
     ORDER BY cos_sim DESC, e.vec_id LIMIT 10
     """,
-    tags=("vector",),
     bench=True,
 )
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -954,7 +923,6 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE a.cell IN (SELECT cent_id FROM qcells) AND a.vec_id <> 0
     ORDER BY cos_sim DESC, a.vec_id LIMIT 10
     """,
-    tags=("vector", "lsh"),
 )
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-pruned ANN: probe 2 of 8 cells instead of the full corpus -
@@ -982,7 +950,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings e CROSS JOIN hp
     GROUP BY e.vec_id
     """,
-    tags=("vector", "lsh"),
 )
 def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucketing: bucket = concatenated sign bits
@@ -1023,7 +990,6 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON l.cell = r.cell AND l.vec_id < r.vec_id
     WHERE ROUND({_sql_cosine('l.embedding', 'r.embedding')}, 6) >= 0.4
     """,
-    tags=("vector", "dedup", "lsh"),
 )
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within IVF cells. The

@@ -167,7 +167,7 @@ SELECT table_name, CAST(n_rows AS BIGINT) AS n_rows FROM (
 """
 
 
-@_register("etl_star_counts", _COUNTS_SQL, tags=("etl", "gate"))
+@_register("etl_star_counts", _COUNTS_SQL)
 def q_etl_star_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1 end-to-end: fixture CSV -> run_etl -> 15 parquet tables;
     emit each table's written row count. Every count the oracle
@@ -200,7 +200,7 @@ JOIN (SELECT CAST(driverId AS BIGINT) AS driver_id, surname FROM drv
 """
 
 
-@_register("etl_standings_check", _STANDINGS_SQL, tags=("etl", "gate"))
+@_register("etl_standings_check", _STANDINGS_SQL)
 def q_etl_standings_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standings recompute off the WRITTEN star (parquet read-back,
     not the builder plan): per driver, total wins and best points from
@@ -255,7 +255,6 @@ WHERE res.resultId IS NOT NULL
 @_register(
     "etl_wide_roundtrip",
     _ROUNDTRIP_SQL,
-    tags=("etl", "join", "gate"),
     gate_priority=True,
 )
 def q_etl_wide_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,9 +307,7 @@ FROM k
 """
 
 
-@_register(
-    "etl_cache_transparency", _CACHE_TRANSPARENCY_SQL, tags=("etl", "gate")
-)
+@_register("etl_cache_transparency", _CACHE_TRANSPARENCY_SQL)
 def q_etl_cache_transparency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 standalone-DAG semantics vs EP1's fused pipeline: the
     reference runs each star table as an INDEPENDENT per-table DAG

@@ -43,6 +43,7 @@ from formula1_etl_analytics_project_spark.plans.catalog import (
     _sql_dsum,
 )
 from formula1_etl_analytics_project_spark.sources.readers import read_table, register_views
+from formula1_etl_analytics_project_spark.streaming.pipeline import read_event_stream
 
 # ===========================================================================
 # Null handling (S2 sentinel decode, F1/F4 null-row drops, F5 defaults)
@@ -63,7 +64,6 @@ from formula1_etl_analytics_project_spark.sources.readers import read_table, reg
       FROM lineitem
     )
     """,
-    tags=("scalar", "filter"),
 )
 def q_null_sentinel_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     r"""S2+F5+F6: the reference's '\N' sentinel / garbage handling
@@ -97,7 +97,6 @@ def q_null_sentinel_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE a IS NOT NULL OR b IS NOT NULL
     GROUP BY 1, 2
     """,
-    tags=("filter",),
 )
 def q_drop_allnull_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/F4: drop rows where ALL of a null-subset is null (the
@@ -133,7 +132,6 @@ def q_drop_allnull_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
            strftime(ts, '%H:%M:%S.%f') AS time_us
     FROM events
     """,
-    tags=("scalar", "time"),
 )
 def q_time_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1/C4/C5: clock-string parse with garbage -> NULL, plus the
@@ -171,7 +169,6 @@ def q_time_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT o_custkey AS k FROM orders WHERE o_orderstatus = 'O'
     )
     """,
-    tags=("setop",),
 )
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT / INTERSECT / UNION ALL over key sets."""
@@ -199,7 +196,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_rows
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("agg",),
 )
 def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact multi-distinct aggregation (expand + two-phase agg in
@@ -219,7 +215,6 @@ def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT ROW_NUMBER() OVER (ORDER BY s_suppkey) AS seq, s_suppkey, s_name
     FROM supplier
     """,
-    tags=("window", "project"),
 )
 def q_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5: the reference's DB sequences (SEQ_laps_id) as deterministic
@@ -254,7 +249,6 @@ def q_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM orders)
     GROUP BY CUBE (y, o_orderstatus)
     """,
-    tags=("agg", "rollup"),
 )
 def q_cube_year_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (year, status) - all four grouping sets (the Power BI
@@ -296,7 +290,7 @@ LIMIT 10
 """
 
 
-@_register("sql_surface_q3", _Q3_SQL, tags=("sql", "join", "agg"), bench=True)
+@_register("sql_surface_q3", _Q3_SQL, bench=True)
 def q_sql_surface_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP3: the engine's SQL entry point - the exact same SQL text runs
     through spark.sql (over registered temp views) and the DuckDB
@@ -317,7 +311,7 @@ WHERE EXISTS (SELECT 1 FROM orders
 """
 
 
-@_register("exists_decorrelated", _EXISTS_SQL, tags=("sql", "subquery"))
+@_register("exists_decorrelated", _EXISTS_SQL)
 def q_exists_decorrelated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS through the SQL surface. Catalyst
     decorrelates both into one semi-join + one anti-join on o_custkey -
@@ -337,7 +331,7 @@ WHERE c_acctbal > 9000
 """
 
 
-@_register("scalar_subquery", _SCALAR_SUBQ_SQL, tags=("sql", "subquery"))
+@_register("scalar_subquery", _SCALAR_SUBQ_SQL)
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subqueries (per-customer count + exact-decimal
     spend). Catalyst rewrites each into a left outer join against a
@@ -358,7 +352,7 @@ JOIN orders o
 """
 
 
-@_register("range_join", _RANGE_JOIN_SQL, tags=("join", "time"))
+@_register("range_join", _RANGE_JOIN_SQL)
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi + range join: events matched to same-user orders within a
     30-day window, same SQL text on both engines (the +29y shift
@@ -389,7 +383,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF LEFT JOIN ord
       ON e.user_id = ord.o_custkey AND ord.o_orderdate <= e.ts
     """,
-    tags=("join", "time"),
     bench=True,
 )
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,6 +446,18 @@ def _stage_dir(sf_dir: str, kind: str, table: str) -> str:
 _STAGE_DIRS: set[str] = set()
 
 
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file-source stream. It is staged once per
+    process as 4 parquet files, so ``maxFilesPerTrigger=1`` runs several
+    micro-batches; the ``_SUCCESS`` marker skips a restage."""
+    stage = _stage_dir(sf_dir, "stream", "events")
+    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
+        read_table(spark, sf_dir, "events").repartition(4).write.mode(
+            "overwrite"
+        ).parquet(stage)
+    return read_event_stream(spark, stage)
+
+
 # ===========================================================================
 # Structured Streaming as a first-class catalog entry
 # ===========================================================================
@@ -465,7 +470,6 @@ _STAGE_DIRS: set[str] = set()
            COUNT(*) AS n_events, {_sql_dsum('value', 'total_value', 6)}
     FROM events GROUP BY 1, 2
     """,
-    tags=("streaming",),
 )
 def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A real Structured Streaming execution inside the correctness
@@ -473,21 +477,9 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream (maxFilesPerTrigger=1 -> several micro-batches), and the
     tumbling-window aggregate's final state must equal the batch SQL
     twin - the streaming-batch unification Spark promises."""
-    from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
-
-    stage = _stage_dir(sf_dir, "stream", "events")
-    marker = os.path.join(stage, "_SUCCESS")
-    if not os.path.exists(marker):
-        read_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage)
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     agg = (
-        stream.withWatermark("ts", "10 years")  # complete-mode: keep all
+        _event_stream(spark, sf_dir)
+        .withWatermark("ts", "10 years")  # complete-mode: keep all
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -517,7 +509,6 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
     """,
-    tags=("join", "skew"),
 )
 def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-salted fact-fact join: the (key, salt) composite spreads any
@@ -565,7 +556,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ROUND(CAST(len(list_intersect(l.sh, r.sh)) AS DOUBLE)
                 / len(list_distinct(list_concat(l.sh, r.sh))), 6) >= 0.3
     """,
-    tags=("text", "dedup"),
 )
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard similarity within (lang, source) blocks.
@@ -671,7 +661,6 @@ _SQL_SIMHASH64_SIGS = f"""toked AS (
     FROM sigs l JOIN sigs r ON l.doc_id < r.doc_id
     WHERE bit_count(CAST(xor(l.sig, r.sig) AS BIGINT)) <= 2
     """,
-    tags=("text", "dedup", "lsh"),
     bench=True,
 )
 def q_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,7 +696,6 @@ def q_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sigs l JOIN sigs r ON l.doc_id < r.doc_id
     WHERE bit_count(CAST(xor(l.sig, r.sig) AS BIGINT)) <= 2
     """,
-    tags=("text", "dedup", "lsh"),
 )
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, hamming <= 2 over 16-bit signatures.
@@ -755,7 +743,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE NULL END, 6) AS v_filled
     FROM anch
     """,
-    tags=("udf", "window"),
 )
 def q_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map pandas operator (applyInPandas) inside the oracle
@@ -797,7 +784,6 @@ def q_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier ON l_suppkey = s_suppkey
     WHERE l_orderkey % 100 = 0
     """,
-    tags=("join",),
 )
 def q_denormalize_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star -> wide denormalization at ROW level (the reverse of the
@@ -860,7 +846,6 @@ def q_denormalize_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
     FROM sess GROUP BY user_id, sess_id
     """,
-    tags=("window", "time"),
 )
 def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's native ``session_window`` (30-minute inactivity gap) vs
@@ -891,7 +876,6 @@ def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_acctbal > 9000
     GROUP BY c_custkey
     """,
-    tags=("agg", "array"),
 )
 def q_array_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array aggregation: per-customer sorted distinct order-year list.
@@ -926,7 +910,6 @@ def q_array_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            NTILE(4) OVER (ORDER BY total DESC, o_custkey) AS quartile
     FROM spend
     """,
-    tags=("window",),
 )
 def q_ntile_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NTILE bucketing: customers into spend quartiles, WITHOUT the
@@ -1005,7 +988,6 @@ def q_ntile_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
     """,
-    tags=("window",),
 )
 def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-frame window: 7-row trailing moving average per user
@@ -1041,7 +1023,6 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     GROUP BY 1 ORDER BY freq DESC, token LIMIT 100
     """,
-    tags=("text",),
 )
 def q_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary building: explode tokens -> frequency table -> top
@@ -1070,7 +1051,6 @@ def q_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(quantile_cont(value, 0.99), 6) AS p99
     FROM events GROUP BY event_type
     """,
-    tags=("agg",),
 )
 def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles per group (Spark ``percentile`` and DuckDB
@@ -1102,7 +1082,6 @@ def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn = 1
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate)
     """,
-    tags=("window", "etl"),
 )
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 historization: per-customer status versions become
@@ -1146,7 +1125,6 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn <= 40
     GROUP BY lang
     """,
-    tags=("text", "sample"),
 )
 def q_stratified_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group quota (stratified cap): keep at most K=40 docs per
@@ -1175,7 +1153,6 @@ def q_stratified_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
              x -> x <> ''))) AS BIGINT) AS n_ws_tokens
     FROM documents GROUP BY lang
     """,
-    tags=("text",),
 )
 def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token accounting per language with BOTH tokenizers the brief
@@ -1214,7 +1191,6 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(MIN(l_tax), 6), ROUND(MAX(l_tax), 6)
     FROM lineitem
     """,
-    tags=("agg", "quality"),
 )
 def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-profiling pass (the pre-training corpus health check):
@@ -1256,7 +1232,6 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY metric
     """,
-    tags=("project", "reshape"),
 )
 def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): wide metric columns -> long (metric, value)
@@ -1297,7 +1272,6 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY status
     """,
-    tags=("source", "json"),
 )
 def q_jsonl_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured (JSONL) handling: serialize rows to JSON
@@ -1338,7 +1312,6 @@ def q_jsonl_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(CASE WHEN o_orderkey % 7 <> 0 THEN 1 END) AS n_clerk_known
     FROM orders GROUP BY o_orderstatus
     """,
-    tags=("source", "scan"),
 )
 def q_csv_sentinel_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     r"""S1/S2 in the gate: orders are round-tripped through a staged
@@ -1391,7 +1364,6 @@ def _csv_stage(spark: SparkSession, sf_dir: str) -> str:
            ROUND(SUM(value), 3) AS total_value
     FROM events GROUP BY user_id
     """,
-    tags=("streaming", "udf"),
 )
 def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator inside the correctness gate:
@@ -1400,22 +1372,11 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches); the FINAL state per user must equal the batch aggregate -
     state carried, never recomputed. The pandas-side float sum is
     rounded to 3 decimals for cross-engine comparison."""
-    from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
     from formula1_etl_analytics_project_spark.streaming.pipeline import (
         stateful_user_totals,
     )
 
-    stage = _stage_dir(sf_dir, "stream", "events")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        read_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage)
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    totals = stateful_user_totals(stream)
+    totals = stateful_user_totals(_event_stream(spark, sf_dir))
     name = f"state_{uuid.uuid4().hex[:8]}"
     q = (
         totals.writeStream.outputMode("update")
@@ -1491,7 +1452,6 @@ _SQL_CLUSTERS_SCALE = f"""
            CAST(node = MIN(label) AS INT) AS is_keeper
     FROM reach GROUP BY node
     """,
-    tags=("dedup", "iterative"),
     bench=True,
     oracle_scale=_SQL_CLUSTERS_SCALE,
 )
@@ -1546,7 +1506,6 @@ _SQL_SHA_BYTE0 = (
            CAST(8 AS INT) AS dim
     FROM documents
     """,
-    tags=("multimodal",),
 )
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal pipeline over synthesized binary payloads (document
@@ -1597,7 +1556,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM train t JOIN hold h ON t.s = h.s
     GROUP BY t.doc_id
     """,
-    tags=("text", "dedup"),
 )
 def q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: training docs sharing any 3-token
@@ -1650,7 +1608,6 @@ _SQL_KMEANS_UPDATE = """
     )
     SELECT cell AS cent_id, pos, ROUND(cval, 6) AS c_val FROM u2
     """,
-    tags=("vector", "iterative"),
     bench=True,
 )
 def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1684,7 +1641,6 @@ def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'ok' END AS verdict
     FROM documents
     """,
-    tags=("text", "filter"),
 )
 def q_quality_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality gate with rejection reasons - the kept/dropped
@@ -1713,7 +1669,6 @@ def q_quality_filter_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                             (o_orderstatus, o_orderpriority))
     """,
-    tags=("agg",),
 )
 def q_grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS - the general form behind the cube/rollup entries
@@ -1740,7 +1695,6 @@ def q_grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE substr(md5(CAST(doc_id AS VARCHAR)), 32, 1) IN ('0', '1')
     """,
-    tags=("filter", "text"),
 )
 def q_hash_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Bernoulli corpus subsample (2/16 = 12.5%) keyed on
@@ -1762,7 +1716,6 @@ def q_hash_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1
     """,
-    tags=("agg", "time"),
 )
 def q_date_rollup_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar bucketing: ISO-week rollup via date_trunc (both engines
@@ -1784,7 +1737,6 @@ def q_date_rollup_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
-    tags=("window",),
 )
 def q_window_rank_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relative-rank window surface: percent_rank / cume_dist / lag
@@ -1812,7 +1764,6 @@ def q_window_rank_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_name
     """,
-    tags=("agg",),
 )
 def q_listagg_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic string aggregation (LISTAGG): sort_array over
@@ -1850,9 +1801,7 @@ GROUP BY w.window_id
 _RANGE_BUCKET_S = 300  # bucket width = half the window span
 
 
-@_register(
-    "range_join_binned", _RANGE_BINNED_SQL, tags=("join", "time"), bench=True
-)
+@_register("range_join_binned", _RANGE_BINNED_SQL, bench=True)
 def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure range join (NO equi key) via interval bucketing - the scale
     path `range_join` deliberately refuses. The 20 highest-value events
@@ -1914,7 +1863,7 @@ GROUP BY n_name
 """
 
 
-@_register("regional_revenue_q5", _Q5_SQL, tags=("sql", "join", "agg"))
+@_register("regional_revenue_q5", _Q5_SQL)
 def q_regional_revenue_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (local-supplier revenue): six-way join whose
     c_nationkey = s_nationkey condition CROSSES dimension branches, so
@@ -1935,7 +1884,7 @@ FROM o JOIN g ON o.grp_key IS NOT DISTINCT FROM g.grp_key
 """
 
 
-@_register("nullsafe_join", _NULLSAFE_SQL, tags=("join", "null"))
+@_register("nullsafe_join", _NULLSAFE_SQL)
 def q_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality join (`<=>` / IS NOT DISTINCT FROM): a third
     of the orders get a NULL-ified key, and joining each row back to
@@ -1966,7 +1915,6 @@ def q_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT DISTINCT event_id, event_type, value FROM events)
     GROUP BY event_type
     """,
-    tags=("streaming", "dedup"),
 )
 def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup inside the correctness gate: the events
@@ -1976,7 +1924,6 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` on event_id, and the surviving
     rows' per-type counts must equal the batch distinct - the streaming
     D1/D2 twin, state bounded by the watermark at real scale."""
-    from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
     from formula1_etl_analytics_project_spark.streaming.pipeline import (
         dedup_event_stream,
     )
@@ -1989,12 +1936,7 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.repartition(2).write.mode("append").parquet(stage)
         with open(done, "w"):
             pass
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    deduped = dedup_event_stream(stream)
+    deduped = dedup_event_stream(read_event_stream(spark, stage))
     name = f"sdedup_{uuid.uuid4().hex[:8]}"
     q = (
         deduped.writeStream.outputMode("append")
@@ -2023,7 +1965,7 @@ GROUP BY o_orderpriority
 """
 
 
-@_register("filtered_agg_surface", _FILTERED_AGG_SQL, tags=("agg", "sql"))
+@_register("filtered_agg_surface", _FILTERED_AGG_SQL)
 def q_filtered_agg_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI FILTER-clause aggregates (conditional aggregation without
     CASE-wrapping every argument): one scan, one hash aggregate, N
@@ -2042,7 +1984,6 @@ def q_filtered_agg_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("source", "schema"),
 )
 def q_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution at the scan (the 100 TB lake reality: files
@@ -2083,7 +2024,7 @@ GROUP BY o_orderstatus
 """
 
 
-@_register("upsert_partitioned_orders", _UPSERT_PART_SQL, tags=("sink", "merge"))
+@_register("upsert_partitioned_orders", _UPSERT_PART_SQL)
 def q_upsert_partitioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned MERGE through a real write/read round-trip:
     orders are snapshotted partitioned by status, a batch bumping every
@@ -2128,7 +2069,7 @@ FROM events
 """
 
 
-@_register("trailing_window_1h", _TRAILING_SQL, tags=("window", "time"))
+@_register("trailing_window_1h", _TRAILING_SQL)
 def q_trailing_window_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frame (trailing 1-hour sum per user) - the
     value-based frame the ROWS-based moving_avg entry can't express:
@@ -2165,7 +2106,7 @@ GROUP BY l.user_id
 """
 
 
-@_register("stream_stream_join", _SS_JOIN_SQL, tags=("streaming", "join"))
+@_register("stream_stream_join", _SS_JOIN_SQL)
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream inner join in the gate: the events
     table is staged as files and consumed as TWO independent streams
@@ -2176,27 +2117,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch self-join - Spark's batch/streaming unification for the
     hardest stateful operator. Oversized watermark = no late drops, the
     complete-data testing pattern used by the other stream entries."""
-    from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
     from formula1_etl_analytics_project_spark.streaming.pipeline import (
         stream_stream_user_pairs,
     )
 
-    stage = _stage_dir(sf_dir, "stream", "events")
-    marker = os.path.join(stage, "_SUCCESS")
-    if not os.path.exists(marker):
-        read_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage)
-
-    def _stream():
-        return (
-            spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-
-    left = _stream().filter(F.col("event_id") % 2 == 0)
-    right = _stream().filter(F.col("event_id") % 2 == 1)
+    left = _event_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 0)
+    right = _event_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 1)
     pairs = stream_stream_user_pairs(left, right)
     name = f"ssjoin_{uuid.uuid4().hex[:8]}"
     q = (
@@ -2230,7 +2156,7 @@ FROM m
 """
 
 
-@_register("stats_agg_surface", _STATS_SQL, tags=("agg", "stats"))
+@_register("stats_agg_surface", _STATS_SQL)
 def q_stats_agg_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variance/stddev per group via EXACT moment sums: built-in
     stddev_samp accumulates doubles in partition order, so its low bits
@@ -2278,7 +2204,7 @@ WHERE n > 0
 """
 
 
-@_register("doc_chunk_windows", _CHUNK_SQL, tags=("text", "chunking"))
+@_register("doc_chunk_windows", _CHUNK_SQL)
 def q_doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking (sequence packing prep for a
     training pipeline): 50-token windows, stride 40, so consecutive
@@ -2344,7 +2270,7 @@ FROM q
 """
 
 
-@_register("quantize_embeddings", _QUANT_SQL, tags=("vector", "quantize"))
+@_register("quantize_embeddings", _QUANT_SQL)
 def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization per vector (4x storage cut for a
     100 TB embedding corpus; the dequantized dot product needs only the
@@ -2427,7 +2353,7 @@ GROUP BY b.qid
 """
 
 
-@_register("ann_ivf_recall", _RECALL_SQL, tags=("vector", "eval"))
+@_register("ann_ivf_recall", _RECALL_SQL)
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the IVF probe (2 of 8 cells) against brute force
     for 10 queries, set-based (two corpus passes total, every small
@@ -2451,7 +2377,7 @@ WHERE l_orderkey % 100 = 0
 """
 
 
-@_register("try_arithmetic", _TRY_ARITH_SQL, tags=("scalar", "null"))
+@_register("try_arithmetic", _TRY_ARITH_SQL)
 def q_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 error-handling surface at the expression level: try_divide
     yields NULL instead of raising on zero denominators (the per-row
@@ -2488,7 +2414,7 @@ WHERE d.doc_id % 2 = 1
 """
 
 
-@_register("incremental_dedup_docs", _INCR_DEDUP_SQL, tags=("dedup", "incremental"))
+@_register("incremental_dedup_docs", _INCR_DEDUP_SQL)
 def q_incremental_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-run dedup done RIGHT (the reference's D4 kept a global
     Python set across DAG runs - a driver-memory bug; SURVEY section 7
@@ -2526,7 +2452,7 @@ GROUP BY split, lang
 """
 
 
-@_register("train_val_test_split", _SPLIT_SQL, tags=("text", "sampling"))
+@_register("train_val_test_split", _SPLIT_SQL)
 def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-based train/val/test split (~13/1/2 of 16 by
     the first md5 nibble of the doc id): membership is a pure function
@@ -2562,7 +2488,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("full_outer_join_surface", _FULL_OUTER_SQL, tags=("join", "null"))
+@_register("full_outer_join_surface", _FULL_OUTER_SQL)
 def q_full_outer_join_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join with all three row classes populated: even
     customers without orders (left-only), even customers with orders
@@ -2596,7 +2522,7 @@ GROUP BY event_type
 """
 
 
-@_register("variant_json_surface", _VARIANT_SQL, tags=("json", "variant"))
+@_register("variant_json_surface", _VARIANT_SQL)
 def q_variant_json_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured VARIANT surface (Spark 4): the props column is
     parsed ONCE into the binary variant encoding and fields are
@@ -2647,7 +2573,7 @@ FROM orders
 """
 
 
-@_register("corrupt_records_scan", _CORRUPT_SQL, tags=("source", "quality"))
+@_register("corrupt_records_scan", _CORRUPT_SQL)
 def q_corrupt_records_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERMISSIVE ingestion of a CSV with planted type corruption:
     malformed rows land with NULL typed fields plus the raw line in
@@ -2700,7 +2626,6 @@ GROUP BY o_orderstatus
 @_register(
     "upsert_versioned_orders",
     _UPSERT_VER_SQL,
-    tags=("sink", "merge"),
     gate_priority=True,
 )
 def q_upsert_versioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2768,7 +2693,6 @@ GROUP BY source
 @_register(
     "corpus_clean_pipeline",
     _CORPUS_SQL,
-    tags=("text", "dedup", "filter", "pipeline"),
     gate_priority=True,
     bench=True,
 )
@@ -2833,7 +2757,6 @@ FROM a
 @_register(
     "higher_order_funcs",
     _HOF_SQL,
-    tags=("functions", "array"),
     gate_priority=True,
 )
 def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2879,7 +2802,6 @@ WHERE c_custkey % 20 = 0
 @_register(
     "string_funcs_surface",
     _STRF_SQL,
-    tags=("functions", "string"),
     gate_priority=True,
 )
 def q_string_funcs_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2935,7 +2857,6 @@ FROM scored WHERE rk <= 3
 @_register(
     "tfidf_top_terms",
     _TFIDF_SQL,
-    tags=("text", "agg"),
     gate_priority=True,
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3014,7 +2935,7 @@ FROM seeded
 """
 
 
-@_register("pii_redact_docs", _PII_SQL, tags=("text", "privacy"))
+@_register("pii_redact_docs", _PII_SQL)
 def q_pii_redact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing - the redaction pass a training-data pipeline runs
     before anything ships: emails and phone-shaped tokens are counted
@@ -3083,7 +3004,7 @@ FROM packed
 """
 
 
-@_register("pack_sequences", _PACK_SQL, tags=("text", "chunking"))
+@_register("pack_sequences", _PACK_SQL)
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing (context-window assignment): documents are
     concatenated in deterministic (source, doc_id) order into one token
@@ -3139,7 +3060,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("agg", "skew"),
 )
 def q_skew_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-key COUNT(DISTINCT) via value-hash bucketing
@@ -3168,7 +3088,6 @@ FROM events
 @_register(
     "stream_incremental_upsert",
     _STREAM_UPSERT_SQL,
-    tags=("streaming", "sink"),
 )
 def q_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming incremental-load path driven end-to-end inside the
@@ -3266,7 +3185,7 @@ FROM cand
 """
 
 
-@_register("fuzzy_name_pairs", _FUZZY_PAIRS_SQL, tags=("linkage", "dedup"))
+@_register("fuzzy_name_pairs", _FUZZY_PAIRS_SQL)
 def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy entity resolution over the part-name vocabulary
     (operators/linkage.py): distinct the names, block by last token AND
@@ -3312,7 +3231,7 @@ FROM v LEFT JOIN c ON v.user_id = c.user_id
 """
 
 
-@_register("event_funnel", _FUNNEL_SQL, tags=("analytics", "time"))
+@_register("event_funnel", _FUNNEL_SQL)
 def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-step funnel view -> click -> purchase per user
     (operators/linkage.py funnel_first_times): each step's first
@@ -3357,7 +3276,7 @@ WHERE FALSE
 """
 
 
-@_register("approx_agg_gate", _APPROX_GATE_SQL, tags=("agg", "approx"))
+@_register("approx_agg_gate", _APPROX_GATE_SQL)
 def q_approx_agg_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Accuracy-contract gate for Spark's approximate aggregates: per
     event_type, approx_count_distinct(user_id, rsd=0.05) must land

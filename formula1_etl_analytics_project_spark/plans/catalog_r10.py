@@ -89,7 +89,6 @@ GROUP BY d.doc_id
 @_register(
     "unigram_logprob_score",
     _NLL_SQL,
-    tags=("text", "quality"),
     bench=True,
 )
 def q_unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,7 +186,6 @@ LIMIT 20
 @_register(
     "bm25_doc_scores",
     _BM25_SQL,
-    tags=("text", "retrieval"),
 )
 def q_bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-20 ranking for a fixed 3-term query - the retrieval
@@ -294,7 +292,6 @@ FROM ranked WHERE rk <= 5
 @_register(
     "source_boilerplate_ngrams",
     _BOILER_SQL,
-    tags=("text", "dedup"),
 )
 def q_source_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Template / boilerplate detector: per source, the 5 word
@@ -390,7 +387,6 @@ GROUP BY source
 @_register(
     "cdc_chunk_dedup",
     _CDC_SQL,
-    tags=("text", "dedup"),
 )
 def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (FastCDC/rsync-style, in tokens): a
@@ -513,7 +509,6 @@ FROM a2 GROUP BY vec_id
 @_register(
     "pq_codes",
     _PQ_SQL,
-    tags=("vector", "iterative"),
     bench=True,
 )
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,7 +603,6 @@ GROUP BY b.qid
 @_register(
     "pq_adc_recall",
     _ADC_SQL,
-    tags=("vector", "iterative"),
 )
 def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of PQ asymmetric-distance search vs the exact
@@ -654,7 +648,6 @@ GROUP BY o_orderpriority
 @_register(
     "orc_roundtrip_scan",
     _ORC_SQL,
-    tags=("source", "sink"),
 )
 def q_orc_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar-format interchange: stage the orders table to ORC
@@ -715,7 +708,6 @@ FROM documents
 @_register(
     "epoch_shuffle_docs",
     _SHUF_SQL,
-    tags=("sampling", "ml"),
 )
 def q_epoch_shuffle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training-data-loader global shuffle: every document gets a
@@ -784,7 +776,6 @@ GROUP BY source
 @_register(
     "mixture_resample_docs",
     _MIX_RESAMPLE_SQL,
-    tags=("sampling", "ml"),
 )
 def q_mixture_resample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture resampling: downsample over-represented sources so the
@@ -879,7 +870,7 @@ GROUP BY o_year
 """
 
 
-@_register("sql_surface_q8", _Q8_SQL, tags=("sql", "join", "agg"))
+@_register("sql_surface_q8", _Q8_SQL)
 def q_sql_surface_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): the widest join in the
     suite - lineitem against SEVEN dimension sides (part, orders,
@@ -923,7 +914,6 @@ GROUP BY o_orderstatus
 @_register(
     "upsert_commitlog_orders",
     _COMMITLOG_SQL,
-    tags=("sink", "merge"),
 )
 def q_upsert_commitlog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The optimistic-concurrency commit-log store through a real
@@ -996,7 +986,6 @@ FROM v2
 @_register(
     "time_travel_diff",
     _TT_DIFF_SQL,
-    tags=("sink", "merge", "audit"),
 )
 def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Version-over-version audit via TIME TRAVEL: commit base orders,
@@ -1077,7 +1066,6 @@ FROM merged
 @_register(
     "stream_exactly_once_gate",
     _EO_SQL,
-    tags=("streaming", "sink", "merge"),
 )
 def q_stream_exactly_once_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exactly-once replay CONTRACT under the hash gate: epoch 0
@@ -1160,7 +1148,6 @@ GROUP BY event_type
 @_register(
     "python_source_scan",
     _PYSRC_SQL,
-    tags=("source",),
 )
 def q_python_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom Python DataSource (sources/pysource.py) under the
@@ -1215,7 +1202,6 @@ GROUP BY o_orderstatus
 @_register(
     "compact_small_files",
     _COMPACT_SQL,
-    tags=("sink", "maintenance"),
 )
 def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lake maintenance under the gate: orders are deliberately
@@ -1279,7 +1265,6 @@ FROM hits WHERE n_shared >= 2
 @_register(
     "cdc_chunk_pairs",
     _CDC_PAIRS_SQL,
-    tags=("text", "dedup"),
 )
 def q_cdc_chunk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shift-robust near-dup CANDIDATE PAIRS at sub-document grain:
@@ -1349,7 +1334,6 @@ GROUP BY o.o_orderstatus
 @_register(
     "bucketed_join_agg",
     _BUCKETED_SQL,
-    tags=("join", "layout"),
 )
 def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The write-once/join-many bucketed layout under the hash gate:

@@ -61,7 +61,6 @@ WHERE o_orderkey % 97 = 0
 @_register(
     "bloom_moved_key_probe",
     _BLOOM_PROBE_SQL,
-    tags=("upsert", "index", "dedup"),
     gate_priority=True,
 )
 def q_bloom_moved_key_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,7 +148,6 @@ LIMIT 20
 @_register(
     "bpe_merge_step",
     _BPE_MERGE_SQL,
-    tags=("text", "tokenizer"),
     gate_priority=True,
     bench=True,
 )
@@ -244,7 +242,6 @@ GROUP BY d.doc_id
 @_register(
     "bigram_lm_score",
     _BIGRAM_LM_SQL,
-    tags=("text", "quality"),
     gate_priority=True,
 )
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -95,7 +95,6 @@ GROUP BY f.doc_id
 @_register(
     "dsir_importance_weights",
     _DSIR_SQL,
-    tags=("text", "selection", "llm-data"),
     gate_priority=True,
 )
 def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,7 +211,6 @@ FROM assigned a LEFT JOIN dup d ON a.vec_id = d.vec_id
 @_register(
     "semdedup_keep",
     _SEMDEDUP_SQL,
-    tags=("vector", "dedup", "llm-data"),
     gate_priority=True,
 )
 def q_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,7 +303,6 @@ GROUP BY g.doc_id
 @_register(
     "soft_dedup_weights",
     _SOFT_DEDUP_SQL,
-    tags=("text", "dedup", "llm-data"),
     gate_priority=True,
 )
 def q_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -76,7 +76,6 @@ GROUP BY supp_nation, cust_nation, l_year
 @_register(
     "sql_surface_q7",
     _Q7_SQL,
-    tags=("sql", "join", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,7 +126,6 @@ GROUP BY o_orderpriority
 @_register(
     "sql_surface_q4",
     _Q4_SQL,
-    tags=("sql", "subquery", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,7 +171,6 @@ LIMIT 20
 @_register(
     "sql_surface_q10",
     _Q10_SQL,
-    tags=("sql", "join", "agg", "topk"),
     gate_priority=True,
 )
 def q_sql_surface_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,7 +231,6 @@ FROM r
 @_register(
     "penny_allocation",
     _PENNY_SQL,
-    tags=("window", "finance"),
     gate_priority=True,
     bench=True,
 )
@@ -327,7 +323,6 @@ LIMIT 100
 @_register(
     "keyset_pagination",
     _KEYSET_SQL,
-    tags=("sql", "topk"),
     gate_priority=True,
 )
 def q_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,7 +422,6 @@ LIMIT 50
 @_register(
     "common_neighbors_linkpred",
     _LINKPRED_SQL,
-    tags=("graph", "analytics"),
     gate_priority=True,
 )
 def q_common_neighbors_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,7 +556,6 @@ FROM m
 @_register(
     "autocorr_revenue",
     _ACF_SQL,
-    tags=("window", "stats", "timeseries"),
     gate_priority=True,
 )
 def q_autocorr_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,7 +658,6 @@ CROSS JOIN tot
 @_register(
     "mutual_information",
     _MI_SQL,
-    tags=("stats", "text"),
     gate_priority=True,
 )
 def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:

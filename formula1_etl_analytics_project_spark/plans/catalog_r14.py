@@ -68,7 +68,6 @@ ORDER BY custdist DESC, c_count DESC
 @_register(
     "sql_surface_q13",
     _Q13_SQL,
-    tags=("sql", "join", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,7 +116,6 @@ ORDER BY p_brand
 @_register(
     "sql_surface_q17",
     _Q17_SQL,
-    tags=("sql", "subquery", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,7 +168,6 @@ ORDER BY p_brand
 @_register(
     "sql_surface_q19",
     _Q19_SQL,
-    tags=("sql", "join", "pushdown"),
     gate_priority=True,
 )
 def q_sql_surface_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,7 +225,6 @@ ORDER BY cal_date
 @_register(
     "calendar_dim",
     _CALENDAR_SQL,
-    tags=("dimension", "generate"),
     gate_priority=True,
 )
 def q_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,7 +303,6 @@ ORDER BY source, bucket
 @_register(
     "perplexity_buckets",
     _PPL_BUCKETS_SQL,
-    tags=("text", "quality", "curation"),
     gate_priority=True,
 )
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,7 +398,6 @@ _N_SCORE_BUCKETS = 64
 @_register(
     "token_budget_select",
     _BUDGET_SQL,
-    tags=("text", "curation", "sample"),
     gate_priority=True,
     bench=True,
 )

@@ -67,7 +67,6 @@ ORDER BY is_inferred
 @_register(
     "late_arriving_dim",
     _LATE_DIM_SQL,
-    tags=("etl", "join", "dimension"),
     gate_priority=True,
 )
 def q_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,7 +138,6 @@ ORDER BY 1
 @_register(
     "equi_depth_histogram",
     _EQUI_DEPTH_SQL,
-    tags=("analytics", "histogram"),
     gate_priority=True,
 )
 def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,7 +215,6 @@ ORDER BY l_returnflag
 @_register(
     "weighted_median_groups",
     _WEIGHTED_MEDIAN_SQL,
-    tags=("analytics", "stats"),
     gate_priority=True,
 )
 def q_weighted_median_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,7 +296,6 @@ GROUP BY s.custkey, s.n_orders
 @_register(
     "cogroup_span_counts",
     _COGROUP_SQL,
-    tags=("udf", "cogroup"),
     gate_priority=True,
 )
 def q_cogroup_span_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,6 @@ Importing this module registers everything into catalog.CATALOG.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -38,7 +37,7 @@ from formula1_etl_analytics_project_spark.plans.catalog import (
     _sql_dsum,
     _dsum,
 )
-from formula1_etl_analytics_project_spark.plans.catalog_ext import _stage_dir
+from formula1_etl_analytics_project_spark.plans.catalog_ext import _event_stream
 from formula1_etl_analytics_project_spark.sources.readers import (
     read_table,
     register_views,
@@ -80,7 +79,6 @@ GROUP BY doc_id
 @_register(
     "ngram_novelty",
     _NOVELTY_SQL,
-    tags=("text", "curation", "dedup"),
     gate_priority=True,
     bench=True,
 )
@@ -166,7 +164,6 @@ GROUP BY 1, 2
 @_register(
     "stream_static_join",
     _STREAM_STATIC_SQL,
-    tags=("streaming", "join"),
     gate_priority=True,
     bench=True,
 )
@@ -189,22 +186,10 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's lifetime) is exactly why `stream_incremental_upsert`
     exists for slowly-changing sides.
     """
-    from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
-
-    stage = _stage_dir(sf_dir, "stream", "events")
-    marker = os.path.join(stage, "_SUCCESS")
-    if not os.path.exists(marker):
-        read_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage)
     customer = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = _event_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 years")  # complete-mode: keep all
         .join(customer, stream["user_id"] == customer["c_custkey"])
@@ -258,7 +243,6 @@ ORDER BY 1, 2 DESC
 @_register(
     "sql_surface_q9",
     _Q9_SQL,
-    tags=("sql", "join", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q9(spark: SparkSession, sf_dir: str) -> DataFrame:

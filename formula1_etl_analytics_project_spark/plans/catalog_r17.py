@@ -62,7 +62,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 @_register(
     "sql_surface_q6",
     _Q6_SQL,
-    tags=("sql", "pushdown", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,7 +103,6 @@ ORDER BY s_suppkey
 @_register(
     "sql_surface_q15",
     _Q15_SQL,
-    tags=("sql", "subquery", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,7 +169,6 @@ ORDER BY source, bucket_cap
 @_register(
     "length_bucket_batching",
     _LENGTH_BUCKET_SQL,
-    tags=("text", "curation", "batching"),
     gate_priority=True,
 )
 def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:

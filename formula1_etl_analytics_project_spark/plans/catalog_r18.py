@@ -101,7 +101,6 @@ ORDER BY l_returnflag
 @_register(
     "sql_surface_q12",
     _Q12_SQL,
-    tags=("sql", "join", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,7 +147,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
 @_register(
     "sql_surface_q14",
     _Q14_SQL,
-    tags=("sql", "join", "agg"),
     gate_priority=True,
 )
 def q_sql_surface_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,7 +186,6 @@ FROM lineitem
 @_register(
     "observed_metrics_gate",
     _OBSERVE_SQL,
-    tags=("quality", "observe"),
     gate_priority=True,
 )
 def q_observed_metrics_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,7 +290,6 @@ def _arrow_vector_stats_fn(batches):
 @_register(
     "arrow_vector_stats",
     _ARROW_STATS_SQL,
-    tags=("vector", "udf", "arrow"),
     gate_priority=True,
 )
 def q_arrow_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,7 +328,6 @@ def q_arrow_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "prefix_jaccard_pairs_df",
     None,  # set below: shares prefix_jaccard_pairs' oracle verbatim
-    tags=("text", "dedup", "ssjoin"),
     bench=True,
 )
 def q_prefix_jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,7 +433,6 @@ ORDER BY true_cnt DESC, partkey
 @_register(
     "countmin_sketch_gate",
     _CMS_SQL,
-    tags=("agg", "approx", "sketch"),
 )
 def q_countmin_sketch_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequency estimation with its two provable
@@ -602,7 +596,6 @@ ORDER BY rrf_score DESC, doc_id
 @_register(
     "rrf_fusion",
     _RRF_SQL,
-    tags=("text", "vector", "retrieval"),
 )
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion (k=60) of two independent retrieval
@@ -702,7 +695,6 @@ ORDER BY c_nationkey, qi_segment
 @_register(
     "k_anonymity_generalize",
     _KGEN_SQL,
-    tags=("quality", "privacy", "agg"),
 )
 def q_k_anonymity_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One iteration of the k-anonymity REMEDIATION loop: equivalence
@@ -791,7 +783,6 @@ ORDER BY c_nationkey, c_mktsegment
 @_register(
     "k_anonymity_audit",
     _KANON_SQL,
-    tags=("quality", "privacy", "agg"),
 )
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit over the quasi-identifier pair
@@ -879,7 +870,6 @@ ORDER BY digit
 @_register(
     "benford_digit_audit",
     _BENFORD_SQL,
-    tags=("quality", "stats", "agg"),
 )
 def q_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit over order totals: naturally-grown
@@ -971,7 +961,6 @@ ORDER BY c_nationkey, c_mktsegment
 @_register(
     "t_closeness_audit",
     _TCLOSE_SQL,
-    tags=("quality", "privacy", "agg"),
 )
 def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit, completing the structured-privacy triad
@@ -1067,7 +1056,6 @@ LIMIT {_PRF_TOPN}
 @_register(
     "prf_query_expansion",
     _PRF_SQL,
-    tags=("text", "retrieval"),
 )
 def q_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance feedback (the RM3/Rocchio shape): take the

@@ -117,7 +117,6 @@ ORDER BY event_type
 @_register(
     "psi_drift",
     _PSI_SQL,
-    tags=("stats", "quality", "monitoring"),
 )
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index per event type: bucket the event
@@ -329,7 +328,6 @@ GROUP BY n_a, n_b
 @_register(
     "ks_two_sample",
     _KS_SQL,
-    tags=("stats", "window"),
     bench=True,
 )
 def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -410,7 +408,6 @@ FROM t CROSS JOIN r
 @_register(
     "mann_whitney_u",
     _MWU_SQL,
-    tags=("stats", "window"),
 )
 def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U over the same high-vs-low-priority price arms
@@ -499,7 +496,6 @@ ORDER BY o_orderkey
 @_register(
     "target_encoding_loo",
     _LOO_SQL,
-    tags=("ml", "agg", "join"),
 )
 def q_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out target encoding: replace the categorical
@@ -606,7 +602,6 @@ FROM dcg CROSS JOIN idcg
 @_register(
     "ndcg_retrieval_eval",
     _NDCG_SQL,
-    tags=("text", "retrieval", "eval"),
 )
 def q_ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@10 of the BM25 ranking against graded relevance, closing

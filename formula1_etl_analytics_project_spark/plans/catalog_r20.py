@@ -101,7 +101,6 @@ FROM se
 @_register(
     "welch_ttest",
     _WELCH_SQL,
-    tags=("stats",),
 )
 def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's two-sample t-test (unequal variances): do high- and
@@ -229,7 +228,6 @@ FROM chi CROSS JOIN tot t
 @_register(
     "cramers_v",
     _CRAMER_SQL,
-    tags=("stats", "analytics"),
 )
 def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramer's V: chi-squared normalized by n * min(r-1, c-1) into a
@@ -328,7 +326,6 @@ ORDER BY r.doc_id
 @_register(
     "quantile_normalization",
     _QNORM_SQL,
-    tags=("ml", "window", "stats"),
 )
 def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization: replace each document's length with
@@ -426,7 +423,6 @@ ORDER BY dur
 @_register(
     "km_survival",
     _KM_SQL,
-    tags=("stats", "window", "analytics"),
 )
 def q_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival estimator over user activity lifetimes
@@ -546,7 +542,6 @@ ORDER BY source
 @_register(
     "dp_noisy_release",
     _DP_SQL,
-    tags=("privacy", "agg"),
 )
 def q_dp_noisy_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Laplace-mechanism release shape for per-source document

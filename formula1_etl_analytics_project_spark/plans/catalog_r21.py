@@ -99,7 +99,6 @@ FROM ranked
 @_register(
     "bootstrap_ci_mean",
     _BOOT_SQL,
-    tags=("stats", "sampling"),
     bench=True,
 )
 def q_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,7 +264,6 @@ ORDER BY fs_score DESC, left_name, right_name
 @_register(
     "fs_linkage_scores",
     _FS_SQL,
-    tags=("linkage", "dedup", "stats"),
 )
 def q_fs_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter match scoring over the blocked fuzzy candidate
@@ -432,7 +430,6 @@ ORDER BY step
 @_register(
     "wilson_funnel_ci",
     _WILSON_SQL,
-    tags=("stats", "analytics"),
 )
 def q_wilson_funnel_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel conversion rates with Wilson 95% score intervals: the
@@ -566,7 +563,6 @@ ORDER BY pos
 @_register(
     "power_iteration_pc1",
     _PC_SQL,
-    tags=("ml", "similarity", "stats"),
     bench=True,
 )
 def q_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -148,7 +148,6 @@ _DBSCAN_SQL_SCALE = (
 @_register(
     "dbscan_labels",
     _DBSCAN_SQL,
-    tags=("vector", "ml", "graph"),
     oracle_scale=_DBSCAN_SQL_SCALE,
 )
 def q_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,7 +311,6 @@ LIMIT 1
 @_register(
     "best_split_finding",
     _SPLIT_SQL,
-    tags=("ml", "agg", "window"),
 )
 def q_best_split_finding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed GBDT inner loop (XGBoost/LightGBM histogram
@@ -437,7 +435,6 @@ FROM agg
 @_register(
     "ab_srm_check",
     _SRM_SQL,
-    tags=("stats", "quality", "monitoring"),
 )
 def q_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch gate: users are assigned to arms by
@@ -521,7 +518,6 @@ FROM nc CROSS JOIN th CROSS JOIN cov
 @_register(
     "conformal_threshold",
     _CONF_SQL,
-    tags=("ml", "stats"),
 )
 def q_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split conformal calibration at alpha = 0.1: hash-split the

@@ -89,7 +89,6 @@ ORDER BY cluster_id
 @_register(
     "golden_record_names",
     _GOLDEN_SQL,
-    tags=("linkage", "dedup", "graph"),
 )
 def q_golden_record_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivorship: each linked cluster of name variants (connected
@@ -208,7 +207,6 @@ ORDER BY thr
 @_register(
     "nested_subsample_stats",
     _NEST_SQL,
-    tags=("sampling", "curation"),
 )
 def q_nested_subsample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested corpus subsamples for scaling-law runs: membership is
@@ -273,7 +271,6 @@ ORDER BY o_orderstatus
 @_register(
     "xml_roundtrip_scan",
     _XML_SQL,
-    tags=("source", "sink"),
 )
 def q_xml_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML interchange surface (the built-in XML source added in
@@ -354,7 +351,6 @@ ORDER BY doc_id
 @_register(
     "binary_files_scan",
     _BINF_SQL,
-    tags=("source", "multimodal"),
 )
 def q_binary_files_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `binaryFile` source - Spark's ingest path for opaque media

@@ -72,7 +72,6 @@ FROM s
 @_register(
     "roc_auc_eval",
     _AUC_SQL,
-    tags=("ml", "eval", "agg"),
 )
 def q_roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-aware ROC-AUC as the Mann-Whitney rank statistic: with tied
@@ -172,7 +171,6 @@ ORDER BY b.bin
 @_register(
     "isotonic_calibration",
     _ISO_SQL,
-    tags=("ml", "eval", "join"),
 )
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic calibration (monotone regression of outcome rate on
@@ -295,7 +293,6 @@ FROM j GROUP BY doc_id ORDER BY doc_id
 @_register(
     "line_dedup_docs",
     _LINEDEDUP_SQL,
-    tags=("text", "dedup"),
     bench=True,
 )
 def q_line_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,7 +401,6 @@ ORDER BY source, fold
 @_register(
     "stratified_kfold_assign",
     _KFOLD_SQL,
-    tags=("ml", "sampling"),
 )
 def q_stratified_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified k-fold assignment for cross-validation:
@@ -488,7 +484,6 @@ ORDER BY s.hod
 @_register(
     "seasonal_trend_decompose",
     _SEASONAL_SQL,
-    tags=("time", "window"),
 )
 def q_seasonal_trend_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical (moving-average) seasonal decomposition of the hourly

@@ -62,7 +62,6 @@ ORDER BY k
 @_register(
     "vocab_coverage_curve",
     _VOCAB_COV_SQL,
-    tags=("text", "agg"),
 )
 def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: for each candidate vocab budget k,
@@ -152,7 +151,6 @@ ORDER BY e.event_type, l.q
 @_register(
     "quantile_pinball_eval",
     _PINBALL_SQL,
-    tags=("ml", "eval", "agg"),
 )
 def q_quantile_pinball_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinball (quantile) loss of the per-event-type exact-quantile
@@ -226,7 +224,6 @@ ORDER BY c.anchor_id, c.slot
 @_register(
     "contrastive_negatives",
     _NEGATIVES_SQL,
-    tags=("ml", "sampling", "join"),
 )
 def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for contrastive embedding
@@ -323,7 +320,6 @@ FROM tc GROUP BY source ORDER BY source
 @_register(
     "lexical_diversity_report",
     _LEXDIV_SQL,
-    tags=("text", "agg"),
 )
 def q_lexical_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source lexical diversity: type-token ratio and hapax-

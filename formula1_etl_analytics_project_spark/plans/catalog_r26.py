@@ -134,7 +134,6 @@ def _winnow_fps(spark: SparkSession, sf_dir: str, persist_grams=False):
 @_register(
     "winnow_fingerprints",
     _WINNOW_FP_SQL,
-    tags=("text", "dedup"),
 )
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (MOSS) document fingerprints: hash every 4-token
@@ -217,7 +216,6 @@ ORDER BY p.doc_a, p.doc_b
 @_register(
     "winnow_dup_pairs",
     _WINNOW_PAIRS_SQL,
-    tags=("text", "dedup", "join"),
     bench=True,
 )
 def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,7 +311,6 @@ FROM documents GROUP BY source ORDER BY source
 @_register(
     "source_datasheet",
     _DATASHEET_SQL,
-    tags=("text", "quality", "agg"),
 )
 def q_source_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-source dataset card a curation run publishes: volume
@@ -438,7 +435,6 @@ FROM lagged GROUP BY day, n_orders, revenue ORDER BY day
 @_register(
     "ema_revenue_trend",
     _EMA_SQL,
-    tags=("timeseries", "window", "join"),
 )
 def q_ema_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted daily revenue trend: for each day, the

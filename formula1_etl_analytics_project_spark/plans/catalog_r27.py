@@ -71,7 +71,6 @@ FROM scored ORDER BY doc_id
 @_register(
     "linear_quality_classifier",
     _CLASSIFIER_SQL,
-    tags=("text", "quality", "ml"),
     bench=True,
 )
 def q_linear_quality_classifier(
@@ -177,7 +176,6 @@ FROM grp GROUP BY source ORDER BY source
 @_register(
     "template_skeleton_stats",
     _SKELETON_SQL,
-    tags=("text", "dedup", "quality"),
 )
 def q_template_skeleton_stats(
     spark: SparkSession, sf_dir: str
@@ -269,7 +267,6 @@ FROM mom ORDER BY lag
 @_register(
     "xcorr_best_lag",
     _XCORR_SQL,
-    tags=("timeseries", "analytics", "join"),
 )
 def q_xcorr_best_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lead-lag discovery: Pearson cross-correlation between daily

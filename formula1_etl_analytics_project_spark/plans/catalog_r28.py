@@ -79,7 +79,6 @@ _JOIN_EST_SQL = (
 @_register(
     "join_size_estimate",
     _JOIN_EST_SQL,
-    tags=("ops", "join", "agg"),
 )
 def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cardinality-estimation audit for the three FK joins a star
@@ -180,7 +179,6 @@ ORDER BY q DESC, doc_id LIMIT 10
 @_register(
     "diversity_capped_topk",
     _DIVERSE_TOPK_SQL,
-    tags=("text", "quality", "window"),
 )
 def q_diversity_capped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-10 documents by quality score under a DIVERSITY CAP
@@ -275,7 +273,6 @@ FROM mom
 @_register(
     "token_zipf_fit",
     _ZIPF_SQL,
-    tags=("text", "analytics", "agg"),
 )
 def q_token_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf power-law fit over the token frequency spectrum: rank the

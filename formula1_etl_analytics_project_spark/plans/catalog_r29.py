@@ -79,7 +79,6 @@ FROM ranked WHERE rank <= 3 ORDER BY vec_id, rank
 @_register(
     "knn_graph_blocked",
     _KNN_SQL,
-    tags=("vector", "similarity", "graph"),
     bench=True,
 )
 def q_knn_graph_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,7 +173,6 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM truth) AS n_truth,
 @_register(
     "winnow_recall_eval",
     _WINNOW_RECALL_SQL,
-    tags=("text", "dedup", "eval"),
 )
 def q_winnow_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Accuracy evidence for the winnowing candidate generator:
@@ -263,7 +261,6 @@ FROM grp ORDER BY shard
 @_register(
     "shard_balance_report",
     _SHARD_BALANCE_SQL,
-    tags=("text", "ops", "agg"),
 )
 def q_shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard-balance audit for md5 hash-sharding (the assignment the

@@ -96,7 +96,6 @@ def _argmax1(df: DataFrame, score_col: str) -> DataFrame:
 @_register(
     "mmr_diversify",
     _MMR_SQL,
-    tags=("text", "retrieval", "eval"),
     bench=True,
 )
 def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -75,7 +75,6 @@ FROM wide
 @_register(
     "diff_in_diff",
     _DID_SQL,
-    tags=("analytics", "stats", "eval"),
 )
 def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences: purchase value per (hash-split
@@ -215,7 +214,6 @@ ORDER BY r.hr
 @_register(
     "seasonal_anomaly_flags",
     _SEASONAL_ANOM_SQL,
-    tags=("timeseries", "analytics", "ops"),
 )
 def q_seasonal_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonality-adjusted anomaly detection: hourly event-value

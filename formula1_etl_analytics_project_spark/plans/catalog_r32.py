@@ -64,7 +64,6 @@ _CLUSTER_STATS_SQL = _cluster_stats_sql(CATALOG["dedup_clusters"].oracle)
 @_register(
     "dedup_cluster_size_stats",
     _CLUSTER_STATS_SQL,
-    tags=("dedup", "agg", "eval"),
     bench=True,
     # same rollup over the banded scale restatement of the closure
     # (catalog_ext._SQL_CLUSTERS_SCALE) - the composition inherits the
@@ -169,7 +168,6 @@ _MH_ERR_SQL = _mh_err_sql(_PREFIX_PAIRS_SQL)
 @_register(
     "minhash_estimate_error",
     _MH_ERR_SQL,
-    tags=("text", "dedup", "eval"),
     # truth pairs from the df-ordered scale restatement (catalog_r5);
     # the signature/error tail is already linear in the truth set.
     oracle_scale=_mh_err_sql(_PREFIX_PAIRS_SQL_SCALE),

@@ -101,7 +101,6 @@ FROM piv
 @_register(
     "anova_dow_value",
     _ANOVA_SQL,
-    tags=("analytics", "stats"),
 )
 def q_anova_dow_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA: does mean order value differ across the seven
@@ -231,7 +230,6 @@ ORDER BY d.src_a, d.src_b
 @_register(
     "source_pair_similarity",
     _SRC_SIM_SQL,
-    tags=("text", "analytics", "join"),
 )
 def q_source_pair_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-vs-source token-distribution cosine: each

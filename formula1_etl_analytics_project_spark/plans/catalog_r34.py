@@ -47,7 +47,6 @@ ORDER BY nation
 @_register(
     "incremental_join_maintenance",
     _IJM_SQL,
-    tags=("ops", "join", "agg", "incremental"),
 )
 def q_incremental_join_maintenance(
     spark: SparkSession, sf_dir: str

@@ -57,7 +57,6 @@ GROUP BY n.n_name ORDER BY nation
 @_register(
     "retraction_merge_view",
     _RETRACT_SQL,
-    tags=("ops", "join", "agg", "incremental"),
 )
 def q_retraction_merge_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retraction-based view maintenance under a dimension change:

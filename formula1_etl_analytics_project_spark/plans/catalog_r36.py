@@ -77,7 +77,6 @@ _WATERFALL_SQL = _waterfall_sql(CATALOG["dedup_clusters"].oracle)
 @_register(
     "curation_waterfall",
     _WATERFALL_SQL,
-    tags=("text", "dedup", "quality", "eval"),
     bench=True,
     # the near-dup stage embeds the banded scale restatement of the
     # closure (catalog_ext._SQL_CLUSTERS_SCALE); everything else in the

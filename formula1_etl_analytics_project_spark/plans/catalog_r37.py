@@ -65,7 +65,6 @@ GROUP BY doc_id
 @_register(
     "media_decode_stats",
     _MEDIA_DECODE_SQL,
-    tags=("multimodal",),
 )
 def q_media_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image decode with a REAL codec: per document, build a 4x4

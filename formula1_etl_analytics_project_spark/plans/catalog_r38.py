@@ -54,7 +54,7 @@ GROUP BY o_orderstatus
 """
 
 
-@_register("upsert_schema_evolution", _UPSERT_EVO_SQL, tags=("sink", "merge", "schema"))
+@_register("upsert_schema_evolution", _UPSERT_EVO_SQL)
 def q_upsert_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution MERGE through a real write/read round-trip:
     orders are snapshotted partitioned by status, then a batch bumping
@@ -141,7 +141,7 @@ ORDER BY part_value DESC, p_partkey
 """
 
 
-@_register("sql_surface_q11", _Q11_SQL, tags=("sql", "join", "agg"))
+@_register("sql_surface_q11", _Q11_SQL)
 def q_sql_surface_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (important part value): per-part revenue from
     a nation group's suppliers, kept only where it exceeds twice the
@@ -189,7 +189,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """
 
 
-@_register("sql_surface_q16", _Q16_SQL, tags=("sql", "join", "agg"))
+@_register("sql_surface_q16", _Q16_SQL)
 def q_sql_surface_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (parts/supplier relationship): distinct
     supplier counts per (brand, type, size) after excluding a
@@ -234,7 +234,7 @@ ORDER BY s.s_name
 """
 
 
-@_register("sql_surface_q20", _Q20_SQL, tags=("sql", "join", "agg"))
+@_register("sql_surface_q20", _Q20_SQL)
 def q_sql_surface_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (potential part promotion): suppliers who
     DOMINATED shipments of a part family in a year - an IN whose

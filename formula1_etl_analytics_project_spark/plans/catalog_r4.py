@@ -51,7 +51,6 @@ HAVING COUNT(*) * {_HH_K + 1} > (SELECT COUNT(*) FROM lineitem)
 @_register(
     "heavy_hitters",
     _HEAVY_SQL,
-    tags=("agg", "sketch", "skew"),
     gate_priority=True,
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +83,6 @@ WHERE NOT (o_orderkey % 5 = 0 AND o_orderkey % 15 = 0
 @_register(
     "cdc_apply",
     _CDC_SQL,
-    tags=("sink", "merge", "incremental"),
     gate_priority=True,
     bench=True,
 )
@@ -145,7 +143,6 @@ LIMIT 100
 @_register(
     "weighted_sample",
     _WSAMPLE_SQL,
-    tags=("sampling", "text"),
     gate_priority=True,
 )
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,7 +200,6 @@ FROM grid g LEFT JOIN lastv l ON g.user_id = l.user_id AND g.m = l.m
 @_register(
     "resample_ffill",
     _RESAMPLE_SQL,
-    tags=("time", "window"),
     gate_priority=True,
     bench=True,
 )
@@ -280,7 +276,6 @@ LIMIT 20
 @_register(
     "zorder_layout",
     _ZORDER_SQL,
-    tags=("layout", "scan"),
     gate_priority=True,
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,7 +317,6 @@ FROM orders WHERE year(o_orderdate) >= 1997
 @_register(
     "union_by_name",
     _UNION_BY_NAME_SQL,
-    tags=("union", "schema"),
     gate_priority=True,
 )
 def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,7 +362,6 @@ WHERE (e.value - m.s1 / m.n)
 @_register(
     "zscore_outliers",
     _ZSCORE_SQL,
-    tags=("agg", "stats", "quality"),
     gate_priority=True,
 )
 def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -422,7 +415,6 @@ GROUP BY l.l_returnflag, q.lo, q.hi
 @_register(
     "winsorize_clip",
     _WINSOR_SQL,
-    tags=("agg", "stats", "quality"),
     gate_priority=True,
 )
 def q_winsorize_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,7 +475,6 @@ FROM m
 @_register(
     "group_correlations",
     _CORR_SQL,
-    tags=("agg", "stats"),
     gate_priority=True,
 )
 def q_group_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -545,7 +536,6 @@ HAVING COUNT(*) BETWEEN 3 AND 60
 @_register(
     "inverted_index",
     _INVINDEX_SQL,
-    tags=("text", "search"),
     gate_priority=True,
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,7 +614,6 @@ LIMIT 20
 @_register(
     "bigram_pmi",
     _BIGRAM_SQL,
-    tags=("text", "stats"),
     gate_priority=True,
 )
 def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:

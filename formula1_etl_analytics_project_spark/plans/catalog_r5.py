@@ -60,7 +60,6 @@ FROM sig
 @_register(
     "repetition_signals",
     _REPETITION_SQL,
-    tags=("text", "quality"),
     bench=True,
     gate_priority=True,
 )
@@ -132,7 +131,6 @@ FROM per_src CROSS JOIN tot
 @_register(
     "domain_mix_weights",
     _MIX_SQL,
-    tags=("text", "sampling"),
     gate_priority=True,
 )
 def q_domain_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,7 +188,6 @@ FROM (SELECT doc_id,
 @_register(
     "explode_ordinality",
     _ORDINALITY_SQL,
-    tags=("lateral", "text"),
     gate_priority=True,
 )
 def q_explode_ordinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,7 +305,6 @@ WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 @_register(
     "prefix_jaccard_pairs",
     _PREFIX_PAIRS_SQL,
-    tags=("text", "dedup", "ssjoin"),
     gate_priority=True,
     oracle_scale=_PREFIX_PAIRS_SQL_SCALE,
 )
@@ -410,7 +406,6 @@ WITH {_KEYED_CTE}, truth AS (
 @_register(
     "minhash_lsh_recall",
     _LSH_RECALL_SQL,
-    tags=("text", "dedup", "lsh", "eval"),
     gate_priority=True,
     oracle_scale=_LSH_RECALL_SQL_SCALE,
 )
@@ -490,7 +485,6 @@ FROM anc GROUP BY anc
 @_register(
     "recursive_cte_closure",
     _RECURSIVE_SQL,
-    tags=("sql", "recursive", "graph"),
     gate_priority=True,
     bench=True,
 )
@@ -526,7 +520,6 @@ WHERE c.c_custkey % 100 = 0
 @_register(
     "lateral_topk_per_key",
     _LATERAL_SQL,
-    tags=("sql", "lateral", "topk"),
     gate_priority=True,
 )
 def q_lateral_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:

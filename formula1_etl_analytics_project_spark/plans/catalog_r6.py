@@ -60,7 +60,6 @@ GROUP BY g.doc_id
 @_register(
     "dup_ngram_fraction",
     _DUP_NGRAM_SQL,
-    tags=("text", "dedup"),
     bench=True,
     gate_priority=True,
 )
@@ -160,7 +159,6 @@ FROM r3 ORDER BY rank DESC, node LIMIT 20
 @_register(
     "pagerank_orders",
     _PAGERANK_SQL,
-    tags=("graph", "iterative"),
     bench=True,
     gate_priority=True,
 )
@@ -237,7 +235,6 @@ ORDER BY run_len DESC, user_id, first_event_id LIMIT 50
 @_register(
     "gaps_islands",
     _GAPS_ISLANDS_SQL,
-    tags=("window", "sql-surface"),
     gate_priority=True,
 )
 def q_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,7 +294,6 @@ ORDER BY n_orders DESC, supp_a, supp_b LIMIT 30
 @_register(
     "supplier_cooccurrence",
     _COOCCURRENCE_SQL,
-    tags=("analytics", "graph"),
     gate_priority=True,
 )
 def q_supplier_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -379,7 +375,6 @@ WHERE n * sxx - sx * sx <> 0
 @_register(
     "regression_surface",
     _REGRESSION_SQL,
-    tags=("agg", "stats"),
     gate_priority=True,
 )
 def q_regression_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -439,7 +434,6 @@ FROM counts WHERE cnt >= 3
 @_register(
     "map_funcs_surface",
     _MAP_FUNCS_SQL,
-    tags=("functions", "sql-surface"),
     gate_priority=True,
 )
 def q_map_funcs_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,7 +485,6 @@ FROM media, unnest(range(0, duration_ms, 750)) AS t(ts)
 @_register(
     "frame_sample_plan",
     _FRAME_SAMPLE_SQL,
-    tags=("multimodal",),
     gate_priority=True,
 )
 def q_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,7 +553,6 @@ GROUP BY d.status
 @_register(
     "scd2_point_in_time_join",
     _SCD2_PIT_SQL,
-    tags=("join", "etl"),
     bench=True,
     gate_priority=True,
 )
@@ -635,7 +627,6 @@ GROUP BY 1, 2
 @_register(
     "incremental_agg_merge",
     _INCR_AGG_SQL,
-    tags=("agg", "etl"),
     gate_priority=True,
 )
 def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,7 +683,6 @@ ORDER BY total_qty DESC, o.o_orderkey LIMIT 20
 @_register(
     "sql_surface_q18",
     _Q18_SQL,
-    tags=("sql", "join", "topk"),
     gate_priority=True,
 )
 def q_sql_surface_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,7 +721,6 @@ WHERE c_custkey NOT IN (
 @_register(
     "not_in_null_aware_antijoin",
     _NOT_IN_SQL,
-    tags=("sql", "join"),
     gate_priority=True,
 )
 def q_not_in_null_aware_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -75,7 +75,7 @@ SELECT node, COUNT(*) AS n_triangles FROM nodes GROUP BY node
 """
 
 
-@_register("triangle_count", _TRIANGLE_SQL, tags=("analytics", "graph"), bench=True)
+@_register("triangle_count", _TRIANGLE_SQL, bench=True)
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part triangle counts over the co-purchase graph (parts
     linked when they appear in >= 2 common orders — the >=2 support
@@ -149,7 +149,7 @@ FROM feats GROUP BY doc_id
 """
 
 
-@_register("feature_hashing", _FEATURE_HASH_SQL, tags=("text", "ml"))
+@_register("feature_hashing", _FEATURE_HASH_SQL)
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick bag-of-words: each doc becomes a 64-dim sparse
     count vector (parallel ``idxs``/``vals`` comma-joined STRINGS
@@ -207,7 +207,7 @@ WHERE FALSE
 """
 
 
-@_register("sketch_rollup_gate", _SKETCH_GATE_SQL, tags=("agg", "approx"))
+@_register("sketch_rollup_gate", _SKETCH_GATE_SQL)
 def q_sketch_rollup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Accuracy + mergeability gate for Datasketches HLL: per
     (event_type, day) sketches of user_id are hll_union_agg'd up to
@@ -300,7 +300,7 @@ GROUP BY win_day
 """
 
 
-@_register("sliding_distinct_users", _SLIDING_SQL, tags=("window", "agg"))
+@_register("sliding_distinct_users", _SLIDING_SQL)
 def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day distinct users per day. COUNT(DISTINCT) over a
     sliding frame does NOT decompose — a window-function RANGE frame
@@ -359,7 +359,7 @@ FROM h
 """
 
 
-@_register("table_checksum", _CHECKSUM_SQL, tags=("ops", "agg"))
+@_register("table_checksum", _CHECKSUM_SQL)
 def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive fingerprint of the orders table —
     ``operators.aggregates.table_fingerprint``. The canonical row
@@ -408,7 +408,7 @@ WHERE (m1 IS NULL OR m1 < spend) AND m2 <= spend
 """
 
 
-@_register("skyline_customers", _SKYLINE_SQL, tags=("analytics",))
+@_register("skyline_customers", _SKYLINE_SQL)
 def q_skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto frontier of customers: fewest orders for the most spend
     (not dominated by anyone with <= orders and >= spend, one
@@ -482,7 +482,7 @@ FROM j GROUP BY 1
 """
 
 
-@_register("table_diff", _TABLE_DIFF_SQL, tags=("ops",))
+@_register("table_diff", _TABLE_DIFF_SQL)
 def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation: classify every key across two table
     versions as added / removed / changed / unchanged and count each
@@ -567,7 +567,7 @@ GROUP BY d.event_type
 """
 
 
-@_register("mad_outliers", _MAD_SQL, tags=("analytics", "stats"))
+@_register("mad_outliers", _MAD_SQL)
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier counts per event type via median absolute
     deviation (|x - median| > 3 * 1.4826 * MAD). The z-score entry
@@ -630,7 +630,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("cohort_retention", _COHORT_SQL, tags=("analytics",))
+@_register("cohort_retention", _COHORT_SQL)
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention triangle: users grouped by first-active
     week, counted distinct in every later week they return
@@ -695,7 +695,7 @@ LIMIT 20
 """
 
 
-@_register("item_cosine_sim", _ITEM_COSINE_SQL, tags=("analytics", "ml"))
+@_register("item_cosine_sim", _ITEM_COSINE_SQL)
 def q_item_cosine_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 most-similar part pairs by co-occurrence cosine
     (co(a,b) / sqrt(n(a) * n(b))) — the item-item collaborative
@@ -775,7 +775,7 @@ GROUP BY 1, 2
 """
 
 
-@_register("value_histogram", _HISTOGRAM_SQL, tags=("analytics", "stats"))
+@_register("value_histogram", _HISTOGRAM_SQL)
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type 10-bin equi-width histogram of ``value`` over
     GLOBAL bounds (so bins are comparable across groups). The
@@ -865,9 +865,7 @@ GROUP BY split
 """
 
 
-@_register(
-    "embedding_curation_pipeline", _EMB_CURATION_SQL, tags=("vector", "etl")
-)
+@_register("embedding_curation_pipeline", _EMB_CURATION_SQL)
 def q_embedding_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end embedding-corpus curation, the vector twin of
     ``corpus_clean_pipeline``: LSH-bucketed near-dup drop (a vector
@@ -961,7 +959,7 @@ WHERE lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
 """
 
 
-@_register("trigram_search", _TRIGRAM_SQL, tags=("text", "index"))
+@_register("trigram_search", _TRIGRAM_SQL)
 def q_trigram_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring search through a character-trigram inverted index:
     docs whose normalized text contains the (fixed, deterministic)
@@ -1025,7 +1023,7 @@ GROUP BY d
 """
 
 
-@_register("benford_digit_check", _BENFORD_SQL, tags=("ops", "stats"))
+@_register("benford_digit_check", _BENFORD_SQL)
 def q_benford_digit_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-significant-digit profile of o_totalprice against the
     Benford expectation log10(1 + 1/d) — the classic forensic /
@@ -1076,7 +1074,7 @@ WHERE FALSE
 """
 
 
-@_register("stream_sketch_distinct", _STREAM_SKETCH_SQL, tags=("streaming", "approx"))
+@_register("stream_sketch_distinct", _STREAM_SKETCH_SQL)
 def q_stream_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct users per (hour, event_type) computed by a
     REAL Structured Streaming run — events staged as files, consumed
@@ -1093,27 +1091,15 @@ def q_stream_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     output mode + a far watermark keeps every window comparable to
     the batch twin, as in ``stream_windowed_counts``.
     """
-    import os
     import uuid
 
     from formula1_etl_analytics_project_spark.plans.catalog_ext import (
-        _stage_dir,
+        _event_stream,
     )
-    from formula1_etl_analytics_project_spark.schemas import TESTDATA_SCHEMAS
 
-    stage = _stage_dir(sf_dir, "stream", "events")
-    marker = os.path.join(stage, "_SUCCESS")
-    if not os.path.exists(marker):
-        read_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(stage)
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     agg = (
-        stream.withWatermark("ts", "10 years")
+        _event_stream(spark, sf_dir)
+        .withWatermark("ts", "10 years")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("approx_nd"))
     )
@@ -1176,7 +1162,7 @@ GROUP BY p.from_type, p.to_type
 """
 
 
-@_register("event_transitions", _TRANSITIONS_SQL, tags=("analytics", "sequence"))
+@_register("event_transitions", _TRANSITIONS_SQL)
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: P(next event type | current), with counts. The
@@ -1233,7 +1219,7 @@ FROM gaps GROUP BY event_type
 """
 
 
-@_register("inter_event_gaps", _GAPS_SQL, tags=("analytics", "sequence"))
+@_register("inter_event_gaps", _GAPS_SQL)
 def q_inter_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-next-event percentiles per event type (median and p95
     seconds until the same USER's next action) — the dwell-time
@@ -1302,7 +1288,7 @@ FROM seg GROUP BY segment
 """
 
 
-@_register("rfm_segments", _RFM_SQL, tags=("analytics",))
+@_register("rfm_segments", _RFM_SQL)
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation: recency (days since last order,
     anchored to the dataset's max date so the entry is deterministic),
@@ -1363,7 +1349,7 @@ FROM fp GROUP BY source
 """
 
 
-@_register("dup_rate_by_source", _DUP_RATE_SQL, tags=("text", "dedup", "ops"))
+@_register("dup_rate_by_source", _DUP_RATE_SQL)
 def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate rate per source — the corpus-health metric a
     curation pipeline reports after every ingest (a source whose
@@ -1418,7 +1404,7 @@ WHERE rn = 1
 """
 
 
-@_register("cusum_changepoint", _CUSUM_SQL, tags=("analytics", "timeseries"))
+@_register("cusum_changepoint", _CUSUM_SQL)
 def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint screen per event type: the day where the
     cumulative sum of (daily total - series mean) peaks in absolute
@@ -1489,7 +1475,7 @@ FROM grps WHERE n < 5
 """
 
 
-@_register("k_anonymity_check", _KANON_SQL, tags=("ops", "privacy"))
+@_register("k_anonymity_check", _KANON_SQL)
 def q_k_anonymity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over the quasi-identifier tuple (nation,
     account-balance band, market segment): every equivalence class
@@ -1541,7 +1527,7 @@ FROM stats
 """
 
 
-@_register("skew_report", _SKEW_REPORT_SQL, tags=("ops", "skew"))
+@_register("skew_report", _SKEW_REPORT_SQL)
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic for lineitem.l_orderkey: keys, rows,
     the hottest key's row count, the p99 per-key count, max/mean
@@ -1595,7 +1581,7 @@ FROM stats
 """
 
 
-@_register("degree_powerlaw", _DEGREE_SQL, tags=("analytics", "graph"))
+@_register("degree_powerlaw", _DEGREE_SQL)
 def q_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer order-degree distribution summary with the discrete
     power-law exponent MLE (alpha = 1 + n / sum ln(k / k_min),
@@ -1663,7 +1649,7 @@ FROM prof p JOIN overall o USING (event_type)
 """
 
 
-@_register("dow_seasonality", _SEASONALITY_SQL, tags=("analytics", "timeseries"))
+@_register("dow_seasonality", _SEASONALITY_SQL)
 def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonality profile per event type: mean daily
     value by ISO weekday and its ratio to the series' overall daily
@@ -1744,7 +1730,7 @@ FROM wide
 """
 
 
-@_register("ab_test_ztest", _AB_TEST_SQL, tags=("analytics", "stats"))
+@_register("ab_test_ztest", _AB_TEST_SQL)
 def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test over a deterministic experiment split
     (arm = user_id % 2; a real assignment would be the md5-bucket
@@ -1826,7 +1812,7 @@ FROM weekly
 """
 
 
-@_register("wow_growth", _WOW_SQL, tags=("analytics", "timeseries"))
+@_register("wow_growth", _WOW_SQL)
 def q_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week growth rate of total value per event type — the
     lag-ratio reporting shape (MoM/YoY are the same plan with a

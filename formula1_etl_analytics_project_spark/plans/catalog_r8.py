@@ -51,7 +51,7 @@ FROM rn WHERE r = 1
 """
 
 
-@_register("mode_event_type", _MODE_SQL, tags=("analytics", "window"))
+@_register("mode_event_type", _MODE_SQL)
 def q_mode_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Most frequent event type per user (the MODE aggregate) with a
     deterministic tie-break: higher count wins, lexicographically
@@ -106,7 +106,7 @@ FROM terms
 """
 
 
-@_register("chi2_independence", _CHI2_SQL, tags=("analytics", "stats"))
+@_register("chi2_independence", _CHI2_SQL)
 def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-squared independence test: is the event-type mix
     independent of the ISO day of week? Complements the two-proportion
@@ -163,7 +163,7 @@ FROM rev
 """
 
 
-@_register("nation_revenue_share", _SHARE_SQL, tags=("analytics", "window"))
+@_register("nation_revenue_share", _SHARE_SQL)
 def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratio-to-report: each nation's share of global order revenue.
     The reporting shape behind every "% of total" dashboard tile
@@ -217,7 +217,7 @@ GROUP BY doc_id
 """
 
 
-@_register("doc_entropy", _ENTROPY_SQL, tags=("text", "quality"))
+@_register("doc_entropy", _ENTROPY_SQL)
 def q_doc_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy of each document's unigram distribution - the
     low-entropy tail is boilerplate/keyword-stuffing a pretraining
@@ -276,7 +276,7 @@ WHERE n >= 10
 """
 
 
-@_register("rolling_zscore", _ROLLZ_SQL, tags=("analytics", "window", "stats"))
+@_register("rolling_zscore", _ROLLZ_SQL)
 def q_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score over each user's last 10 events - the online
     anomaly-detection twin of the static `zscore_outliers` entry.
@@ -349,7 +349,7 @@ HAVING SUM(dt) > 0
 """
 
 
-@_register("twap_user_value", _TWAP_SQL, tags=("analytics", "timeseries"))
+@_register("twap_user_value", _TWAP_SQL)
 def q_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value per user: each observation is held
     until the next one and weighted by its holding duration (the
@@ -412,7 +412,7 @@ GROUP BY COALESCE(channel, 'direct')
 """
 
 
-@_register("attribution_last_touch", _ATTRIB_SQL, tags=("analytics", "window"))
+@_register("attribution_last_touch", _ATTRIB_SQL)
 def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch marketing attribution: every purchase is credited to
     the user's most recent preceding non-purchase event type ('direct'
@@ -474,7 +474,7 @@ GROUP BY s.source, t.ts
 """
 
 
-@_register("kl_divergence_sources", _KL_SQL, tags=("text", "quality"))
+@_register("kl_divergence_sources", _KL_SQL)
 def q_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL(source || corpus) over unigram distributions - the drift /
     domain-shift score behind "is this crawl slice distributionally
@@ -528,7 +528,7 @@ GROUP BY o_orderpriority
 """
 
 
-@_register("exact_median_price", _MEDIAN_SQL, tags=("analytics", "stats"))
+@_register("exact_median_price", _MEDIAN_SQL)
 def q_exact_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median order price per priority via the two-middle-rows
     identity (odd n -> both selectors hit the same row, AVG of one
@@ -598,9 +598,7 @@ WHERE CAST(s.n_shared AS DOUBLE) / za.sz >= 0.5
 """
 
 
-@_register(
-    "containment_pairs", _CONTAIN_SQL, tags=("dedup", "text"), bench=True
-)
+@_register("containment_pairs", _CONTAIN_SQL, bench=True)
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed shingle CONTAINMENT |A n B| / |A| >= 0.5 - the
     asymmetric near-dup measure that catches a short document embedded
@@ -672,7 +670,7 @@ FROM pairs
 """
 
 
-@_register("sorted_neighborhood_pairs", _SNM_SQL, tags=("linkage", "dedup"))
+@_register("sorted_neighborhood_pairs", _SNM_SQL)
 def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood record linkage (window w = 3): sort the
     distinct normalized name vocabulary, compare each name only to its
@@ -736,7 +734,7 @@ FROM a
 """
 
 
-@_register("ewma_user_value", _EWMA_SQL, tags=("analytics", "timeseries"))
+@_register("ewma_user_value", _EWMA_SQL)
 def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially weighted moving average (alpha = 0.2) of each
     user's value series - the recursive smoother that window frames
@@ -805,9 +803,7 @@ LEFT JOIN (
 """
 
 
-@_register(
-    "hdf_token_prune", _HDF_PRUNE_SQL, tags=("text", "quality"), bench=True
-)
+@_register("hdf_token_prune", _HDF_PRUNE_SQL, bench=True)
 def q_hdf_token_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-frequency boilerplate pruning (the token-granular form of
     C4's boilerplate-line removal - this corpus has no line structure,
@@ -867,7 +863,7 @@ GROUP BY a.source, b.source
 """
 
 
-@_register("source_overlap_matrix", _OVERLAP_SQL, tags=("dedup", "quality"))
+@_register("source_overlap_matrix", _OVERLAP_SQL)
 def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which sources duplicate each other: for every source pair, the
     number of HEAD fingerprints (md5 of the first 80 chars - the cheap
@@ -930,7 +926,7 @@ FROM lineitem
 """
 
 
-@_register("data_contract_check", _CONTRACT_SQL, tags=("ops", "quality"))
+@_register("data_contract_check", _CONTRACT_SQL)
 def q_data_contract_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-contract gate (the engine-side twin of the
     reference's DB constraints, DDL Final.sql:91-135 - PK/NOT
@@ -1004,7 +1000,7 @@ LIMIT 20
 """
 
 
-@_register("sql_surface_q21", _Q21_SQL, tags=("sql", "join", "topk"))
+@_register("sql_surface_q21", _Q21_SQL)
 def q_sql_surface_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): the
     hardest decorrelation pattern in the suite - an EXISTS and a NOT
@@ -1042,7 +1038,7 @@ GROUP BY c_nationkey
 """
 
 
-@_register("sql_surface_q22", _Q22_SQL, tags=("sql", "join"))
+@_register("sql_surface_q22", _Q22_SQL)
 def q_sql_surface_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): an uncorrelated
     scalar subquery gates on the above-average balance, a correlated
@@ -1082,7 +1078,7 @@ FROM ranked
 """
 
 
-@_register("gini_spend", _GINI_SQL, tags=("analytics", "stats"))
+@_register("gini_spend", _GINI_SQL)
 def q_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of per-customer spend - the whale-dominance /
     inequality measure (for a training corpus the same query over
@@ -1155,9 +1151,7 @@ GROUP BY p.label
 """
 
 
-@_register(
-    "embedding_cluster_quality", _CLUSTER_QUALITY_SQL, tags=("similarity",)
-)
+@_register("embedding_cluster_quality", _CLUSTER_QUALITY_SQL)
 def q_embedding_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-cohesion report: per label, the mean cosine similarity
     of member vectors to the label centroid - the SemDeDup-style
@@ -1251,7 +1245,7 @@ FROM islands GROUP BY user_id
 """
 
 
-@_register("covered_time_per_user", _COVERED_SQL, tags=("analytics", "window"))
+@_register("covered_time_per_user", _COVERED_SQL)
 def q_covered_time_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-union length: each event opens a 5-minute attention
     window; overlapping windows merge, and the metric is the total

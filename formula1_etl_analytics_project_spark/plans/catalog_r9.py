@@ -52,7 +52,7 @@ ORDER BY n DESC, path LIMIT 20
 """
 
 
-@_register("top_event_paths", _PATHS_SQL, tags=("analytics", "sequence"))
+@_register("top_event_paths", _PATHS_SQL)
 def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top 20 three-step event-type paths within 30-minute sessions -
     the user-journey report (generalizes `event_transitions`' 1-step
@@ -139,7 +139,7 @@ GROUP BY n_name, CASE WHEN rn <= 3 THEN p_name ELSE 'OTHER' END
 """
 
 
-@_register("topn_with_other", _TOPN_OTHER_SQL, tags=("analytics", "window"))
+@_register("topn_with_other", _TOPN_OTHER_SQL)
 def q_topn_with_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 parts by revenue per nation with everything else rolled
     into an OTHER bucket - the dashboard long-tail pattern (a bare
@@ -203,7 +203,7 @@ GROUP BY u.l_partkey, m.unit_price
 """
 
 
-@_register("cheapest_supplier_per_part", _CHEAPEST_SQL, tags=("analytics",))
+@_register("cheapest_supplier_per_part", _CHEAPEST_SQL)
 def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cheapest supplier per part (TPC-H Q2's core) via lexicographic
     MIN over a (price, suppkey) struct - the AGGREGATION form of
@@ -267,7 +267,7 @@ FROM best
 """
 
 
-@_register("dedup_keep_best", _KEEP_BEST_SQL, tags=("dedup", "quality"))
+@_register("dedup_keep_best", _KEEP_BEST_SQL)
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-BEST dedup: among documents sharing an 80-char head
     fingerprint, keep the one a quality policy prefers - here longest
@@ -335,7 +335,7 @@ FROM carried WHERE is_event = 1
 """
 
 
-@_register("asof_join_tolerance", _ASOF_TOL_SQL, tags=("join", "timeseries"))
+@_register("asof_join_tolerance", _ASOF_TOL_SQL)
 def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join with a STALENESS BOUND: each event matches the
     latest same-user order at-or-before its timestamp, but only if

@@ -10,9 +10,8 @@ the sink write.
 
 Semantics faithfully reproduced (SURVEY.md section 7 hard parts):
   * keep-first dedup is deterministic: pandas ``drop_duplicates`` keeps
-    the first row in frame order, so every builder orders by the
-    reference's pre-dedup sort key with ``_row_id`` (file order) as the
-    tiebreaker (reference sorts at CompleteETL.py:22-37).
+    the first row in frame order, so every builder keeps the first row
+    per key in file order (``_row_id``).
   * age is year-subtraction, not true age (driver_etl.py:47-49).
   * invalid dates skip the row where the reference skipped
     (driver dob, CompleteETL.py:216-229) and null the value where it
@@ -64,7 +63,7 @@ def build_date_dim(wide: DataFrame) -> DataFrame:
 
 def build_location_dim(wide: DataFrame) -> DataFrame:
     """CompleteETL.py:25 / location_etl.py:31-38 (rename + key dedup)."""
-    deduped = dedup_keep_first(wide, ["circuitId"], ["circuitId", "_row_id"])
+    deduped = dedup_keep_first(wide, ["circuitId"], ["_row_id"])
     return deduped.select(
         F.col("circuitId").alias("locationId"),
         F.col("name_x").alias("name_loc"),
@@ -79,7 +78,7 @@ def build_location_dim(wide: DataFrame) -> DataFrame:
 
 def build_status_dim(wide: DataFrame) -> DataFrame:
     """status_etl.py:31."""
-    deduped = dedup_keep_first(wide, ["statusId"], ["statusId", "_row_id"])
+    deduped = dedup_keep_first(wide, ["statusId"], ["_row_id"])
     return deduped.select(
         "statusId", F.col("status").alias("statusDescription")
     ).filter(F.col("statusId").isNotNull())
@@ -88,7 +87,7 @@ def build_status_dim(wide: DataFrame) -> DataFrame:
 def build_driver(wide: DataFrame) -> DataFrame:
     """driver_etl.py:12-60: dedup driverId, invalid-dob rows skipped
     (F3), age = year subtraction (P4)."""
-    deduped = dedup_keep_first(wide, ["driverId"], ["driverId", "_row_id"])
+    deduped = dedup_keep_first(wide, ["driverId"], ["_row_id"])
     dob = parse_date("dob")
     return (
         deduped.filter(F.col("driverId").isNotNull() & dob.isNotNull())
@@ -110,7 +109,7 @@ def build_driver(wide: DataFrame) -> DataFrame:
 
 def build_team(wide: DataFrame) -> DataFrame:
     """team_etl.py:31-36."""
-    deduped = dedup_keep_first(wide, ["constructorId"], ["constructorId", "_row_id"])
+    deduped = dedup_keep_first(wide, ["constructorId"], ["_row_id"])
     return deduped.select(
         "constructorId",
         F.col("name").alias("name_team"),
@@ -122,7 +121,7 @@ def build_team(wide: DataFrame) -> DataFrame:
 
 def build_race(wide: DataFrame) -> DataFrame:
     """race_etl.py:14-37: hub table (raceId -> date, round, location)."""
-    deduped = dedup_keep_first(wide, ["raceId"], ["raceId", "_row_id"])
+    deduped = dedup_keep_first(wide, ["raceId"], ["_row_id"])
     return deduped.select(
         F.col("raceId").alias("race_id"),
         parse_date("date").alias("date"),
@@ -133,7 +132,7 @@ def build_race(wide: DataFrame) -> DataFrame:
 
 def build_time_dim(wide: DataFrame) -> DataFrame:
     """time_etl.py:30-69: C3 race-gap parsing; F4 both-null row skip."""
-    deduped = dedup_keep_first(wide, ["raceId"], ["raceId", "_row_id"])
+    deduped = dedup_keep_first(wide, ["raceId"], ["_row_id"])
     return (
         deduped.filter(
             F.col("raceId").isNotNull()
@@ -152,7 +151,7 @@ def build_time_dim(wide: DataFrame) -> DataFrame:
 def build_sprint(wide: DataFrame) -> DataFrame:
     """sprint_etl.py:11-69: F2 null-key filter; C1/C2 parses."""
     filtered = wide.filter(F.col("sprint_date").isNotNull())
-    deduped = dedup_keep_first(filtered, ["raceId"], ["raceId", "_row_id"])
+    deduped = dedup_keep_first(filtered, ["raceId"], ["_row_id"])
     return deduped.filter(F.col("raceId").isNotNull()).select(
         "raceId",
         parse_date("sprint_date").alias("sprint_date"),
@@ -166,7 +165,7 @@ _FP_COLS = ["fp1_date", "fp1_time", "fp2_date", "fp2_time", "fp3_date", "fp3_tim
 def build_free_practice(wide: DataFrame) -> DataFrame:
     """fpractice_etl.py:17-50: F1 all-null row drop, sort-then-dedup."""
     filtered = wide.na.drop(how="all", subset=_FP_COLS)
-    deduped = dedup_keep_first(filtered, ["raceId"], ["raceId", "_row_id"])
+    deduped = dedup_keep_first(filtered, ["raceId"], ["_row_id"])
     return deduped.filter(F.col("raceId").isNotNull()).select(
         "raceId",
         parse_date("fp1_date").alias("fp1_date"),
@@ -181,9 +180,7 @@ def build_free_practice(wide: DataFrame) -> DataFrame:
 def build_qualification(wide: DataFrame) -> DataFrame:
     """quali_etl.py:26-57: D3 composite first-seen dedup; F5 position
     default 0."""
-    deduped = dedup_keep_first(
-        wide, ["raceId", "driverId"], ["_row_id"]
-    )
+    deduped = dedup_keep_first(wide, ["raceId", "driverId"], ["_row_id"])
     return (
         deduped.filter(F.col("raceId").isNotNull() & F.col("driverId").isNotNull())
         .select(

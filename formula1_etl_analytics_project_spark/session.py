@@ -17,6 +17,13 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g: a fixed 48g heap
+    lets the local-mode JVM outgrow a small host's RAM."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{min(48 << 10, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "formula1-etl-analytics-spark",
     cpus: int | None = None,
@@ -43,7 +50,10 @@ def get_spark(
         # convert explicitly (sources.readers.read_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

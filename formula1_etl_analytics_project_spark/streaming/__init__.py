@@ -1,6 +1,6 @@
 from formula1_etl_analytics_project_spark.streaming.pipeline import (
     incremental_upsert_stream,
-    windowed_event_counts,
+    read_event_stream,
 )
 
-__all__ = ["windowed_event_counts", "incremental_upsert_stream"]
+__all__ = ["read_event_stream", "incremental_upsert_stream"]

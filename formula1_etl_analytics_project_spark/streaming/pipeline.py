@@ -4,9 +4,10 @@ The reference is batch-only (daily full reload), but its orphaned
 ``MERGE INTO`` experiment shows intended incremental load. Here both
 shapes are first-class:
 
-  * ``windowed_event_counts`` - watermarked tumbling-window aggregation
-    over an event stream (late data dropped past the watermark; state
-    bounded).
+  * ``read_event_stream`` - the file-source stream over events-shaped
+    parquet that the streaming catalog entries read. The watermarked
+    operators below (dedup, per-user state, stream-stream join) and the
+    catalog's tumbling-window aggregate run over it.
   * ``incremental_upsert_stream`` - ``foreachBatch`` merge of each
     micro-batch into the commit-log snapshot store via the same
     anti-join+union upsert the batch layer uses
@@ -43,32 +44,13 @@ from formula1_etl_analytics_project_spark.sources.sinks import (
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over events-shaped parquet. The testdata
     events file stores TIMESTAMP(NANOS) which file streaming cannot
-    read directly; callers stage a micro-second copy first (tests do),
-    or point this at any events-schema directory."""
+    read directly; callers stage a micro-second copy first (the catalog's
+    ``_event_stream`` and the tests do), or point this at any
+    events-schema directory."""
     return (
         spark.readStream.schema(TESTDATA_SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
-    )
-
-
-def windowed_event_counts(events: DataFrame) -> DataFrame:
-    """1-hour tumbling-window counts/sums per event_type with a 2-hour
-    watermark bounding state (and dropping data later than that)."""
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
     )
 
 

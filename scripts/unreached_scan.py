@@ -1,7 +1,8 @@
 """List public package functions and classes that no code outside their own
 definition uses: not the package, a script, perfbench, ``bench.py`` or
 ``__spark_entry__.py``. Names that only the tests use are listed apart.
-Then list the settable values that configure nothing (see below).
+Then list the settable values that configure nothing and the dataclass
+fields that nothing reads (see below).
 
 A use is a name in the code itself: an ``ast.Name``, the attribute of an
 ``ast.Attribute``, or a name imported with ``from ... import``. Docstrings,
@@ -23,6 +24,12 @@ either, else under "only tests set another value" with those test files. A
 call through ``*args`` or ``**kwargs`` counts as a second value. A call
 through a reference (``BUILDERS[name](wide)``) is not seen, and a function
 that no code calls by name counts as passing its defaults.
+
+Unread fields are the annotated fields of package dataclasses (catalog
+modules included) that no ``ast.Attribute`` load reads outside the class's
+own span, over the same file list. Again the match is by attribute name, so
+a common name (``name``) is read by any ``x.name``. A field that only the
+tests read is listed with those test files.
 
 Run from the repo root: ``python scripts/unreached_scan.py``.
 """
@@ -121,6 +128,43 @@ def _settable(trees, code_calls, test_calls) -> tuple[int, list[str], list[str]]
     return total, unset, test_set
 
 
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    for d in cls.decorator_list:
+        d = d.func if isinstance(d, ast.Call) else d
+        if getattr(d, "id", getattr(d, "attr", None)) == "dataclass":
+            return True
+    return False
+
+
+def _loads(trees: dict[Path, ast.Module]) -> dict[str, list[tuple[Path, int]]]:
+    """attribute name -> every (file, line) that reads it."""
+    loads = defaultdict(list)
+    for f, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                loads[node.attr].append((f, node.lineno))
+    return loads
+
+
+def _unread_fields(trees, test_trees) -> list[str]:
+    code_loads, test_loads = _loads(trees), _loads(test_trees)
+    unread = []
+    for mod in _files(PKG):
+        for cls in ast.walk(trees[mod]):
+            if not isinstance(cls, ast.ClassDef) or not _is_dataclass(cls):
+                continue
+            for stmt in cls.body:
+                if not (isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name)):
+                    continue
+                name = stmt.target.id
+                if _used_outside(code_loads[name], mod, cls):
+                    continue
+                line = f"{mod}:{stmt.lineno} {cls.name}.{name}"
+                tests = sorted({str(f) for f, _ in test_loads[name]})
+                unread.append(f"{line} (read by {', '.join(tests)})" if tests else line)
+    return unread
+
+
 def _used_outside(refs, mod: Path, node: ast.AST) -> bool:
     return any(not (f == mod and node.lineno <= i <= node.end_lineno) for f, i in refs)
 
@@ -147,6 +191,7 @@ def main() -> None:
         ("used only by tests", test_only),
         (f"settable values: {total} defaulted parameters; no caller sets another value", unset),
         ("settable values: only tests set another value", test_set),
+        ("fields nothing reads", _unread_fields(trees, test_trees)),
     ):
         print(f"{title} ({len(lines)}):")
         for line in lines:

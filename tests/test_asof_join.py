@@ -1,5 +1,6 @@
-"""operators.joins.asof_join: strategy equivalence, tie rule, and the
-no-fact-shuffle plan property of the array strategy."""
+"""operators.joins.asof_join: both compositions agree (each forced
+through the size-gate budget), the tie rule, and the no-fact-shuffle
+plan property of the array composition."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from formula1_etl_analytics_project_spark.operators import joins
 from formula1_etl_analytics_project_spark.operators.joins import asof_join
 
 
@@ -37,30 +39,39 @@ def _sides(spark):
 
 EXPECTED = {1: 100, 2: None, 3: 250, 4: 400, 5: None}
 
+# Size-gate budget that selects each composition: any estimate fits under
+# the first, none under the second. The sides are in-memory RDD scans,
+# which Catalyst sizes at spark.sql.defaultSizeInBytes (Long.MaxValue), so
+# the default budget would pick the union.
+BUDGET = {"array": float("inf"), "union": -1}
+PLAN_NODE = {"array": "BroadcastHashJoin", "union": "Window"}
+
 
 @pytest.mark.parametrize("strategy", ["array", "union"])
-def test_asof_semantics_and_tie_rule(spark, strategy):
+def test_asof_semantics_and_tie_rule(spark, monkeypatch, strategy):
+    monkeypatch.setattr(joins, "_BOUNDED_DIM_BYTES", BUDGET[strategy])
     left, right = _sides(spark)
     out = asof_join(
         left, right,
         left_on="user_id", right_on="k",
         left_time="ts", right_time="t",
         value_col="v", out_col="last_v",
-        strategy=strategy,
     )
     got = {r["event_id"]: r["last_v"] for r in out.collect()}
     assert got == EXPECTED, strategy
     assert set(out.columns) == {"event_id", "user_id", "ts", "last_v"}
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert PLAN_NODE[strategy] in plan, strategy
 
 
-def test_auto_falls_back_to_union_over_budget(spark):
+def test_auto_falls_back_to_union_over_budget(spark, monkeypatch):
+    monkeypatch.setattr(joins, "_BOUNDED_DIM_BYTES", 1)  # force the fallback
     left, right = _sides(spark)
     out = asof_join(
         left, right,
         left_on="user_id", right_on="k",
         left_time="ts", right_time="t",
         value_col="v", out_col="last_v",
-        strategy="auto", max_broadcast_bytes=1,  # force the fallback
     )
     got = {r["event_id"]: r["last_v"] for r in out.collect()}
     assert got == EXPECTED
@@ -68,16 +79,17 @@ def test_auto_falls_back_to_union_over_budget(spark):
     assert "Window" in plan and "BroadcastHashJoin" not in plan
 
 
-def test_array_strategy_never_shuffles_the_left_side(spark):
+def test_array_strategy_never_shuffles_the_left_side(spark, monkeypatch):
     """The 100 TB property: the left (fact) side reaches the result
     through a broadcast hash join only — every Exchange in the plan
     belongs to the right side's group-to-array aggregation."""
+    monkeypatch.setattr(joins, "_BOUNDED_DIM_BYTES", BUDGET["array"])
     left, right = _sides(spark)
     out = asof_join(
         left, right,
         left_on="user_id", right_on="k",
         left_time="ts", right_time="t",
-        value_col="v", strategy="array",
+        value_col="v",
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -87,13 +99,6 @@ def test_array_strategy_never_shuffles_the_left_side(spark):
     # broadcast build side)
     import re
 
-    joins = re.findall(r"BroadcastHashJoin.*", plan)
-    assert joins, plan[:1500]
+    bhj = re.findall(r"BroadcastHashJoin.*", plan)
+    assert bhj, plan[:1500]
 
-
-def test_invalid_strategy_raises(spark):
-    left, right = _sides(spark)
-    with pytest.raises(ValueError, match="strategy"):
-        asof_join(
-            left, right, "user_id", "k", "ts", "t", "v", strategy="nope"
-        )

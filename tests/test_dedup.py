@@ -107,13 +107,18 @@ def test_simhash64_banding_pigeonhole_exact(spark):
     brute-force all-pairs hamming<=2 over the same 64-bit signatures.
     Also pins the wide signature's integer packing: 64 distinct bits,
     sign bit legal."""
-    from formula1_etl_analytics_project_spark.operators.dedup import simhash64_wide
+    from formula1_etl_analytics_project_spark.operators.dedup import (
+        _word_digests,
+        simhash64_wide_from_digests,
+    )
     from formula1_etl_analytics_project_spark.sources.readers import read_table
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
     )
-    sig = docs.select("doc_id", simhash64_wide("text").alias("sig")).cache()
+    sig = docs.select(
+        "doc_id", simhash64_wide_from_digests(_word_digests("text")).alias("sig")
+    ).cache()
     # brute force: all-pairs on signatures (fine at this row count)
     brute = (
         sig.alias("l")

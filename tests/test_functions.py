@@ -1,6 +1,6 @@
 """Unit tests for the scalar expression library (SURVEY C1-C9):
-null-safety, malformed-value coercion, the '+ss.mmm' gap form, and
-native-vs-pandas-UDF equivalence."""
+null-safety, malformed-value coercion, the '+ss.mmm' gap form and the
+formatted C3 race time."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from formula1_etl_analytics_project_spark.functions.cleaning import (
     parse_date,
     parse_fastest_lap_us,
     parse_laptime_ms,
-    parse_race_time_pandas_udf,
     parse_race_time_seconds,
     parse_time,
 )
@@ -68,24 +67,26 @@ def test_format_seconds_fractional_carry(spark):
     assert out == ["00:01:00.000000", "01:00:00.000000", "01:30:00.000000"]
     out3 = _vals(spark, format_seconds(F.col("x"), 3), [59.99951, 119.9996])
     assert out3 == ["00:01:00.000", "00:02:00.000"]
-    # the pandas twin carries identically
-    df = spark.createDataFrame([("+59.9999996",)], ["x"])
-    r = df.select(
-        format_seconds(parse_race_time_seconds("x"), 6).alias("native"),
-        parse_race_time_pandas_udf("x").alias("udf"),
-    ).first()
-    assert r.native == r.udf == "00:01:00.000000"
+    # and through the C3 parse of a gap string
+    c3 = format_seconds(parse_race_time_seconds("x"), 6)
+    assert _vals(spark, c3, ["+59.9999996"]) == ["00:01:00.000000"]
 
 
-def test_pandas_udf_twin_matches_native(spark):
-    data = ["+5.478", "1:30:05.123", "0:00:59", "bad", None, "+12.0"]
-    df = spark.createDataFrame([(v,) for v in data], ["x"])
-    both = df.select(
-        format_seconds(parse_race_time_seconds("x"), 6).alias("native"),
-        parse_race_time_pandas_udf("x").alias("udf"),
-    ).collect()
-    for r in both:
-        assert r.native == r.udf, (r.native, r.udf)
+def test_race_time_formats_gap_and_clock_strings(spark):
+    """C3 end to end: parse, then format at microsecond precision."""
+    out = _vals(
+        spark,
+        format_seconds(parse_race_time_seconds("x"), 6),
+        ["+5.478", "1:30:05.123", "0:00:59", "bad", None, "+12.0"],
+    )
+    assert out == [
+        "00:00:05.478000",
+        "01:30:05.123000",
+        "00:00:59.000000",
+        None,
+        None,
+        "00:00:12.000000",
+    ]
 
 
 def test_laptime_precision(spark):

@@ -46,20 +46,19 @@ def test_star_join_broadcasts_dimensions(spark):
     assert plan.count("BroadcastHashJoin") >= 3
 
 
-def test_size_gate_refuses_hint_on_growing_dim(spark):
+def test_size_gate_refuses_hint_on_growing_dim(spark, monkeypatch):
     """customer/part/supplier grow with sf; broadcast_if_small must pin
     the hint only under its size-estimate gate and return the side
     UNTOUCHED above it (AQE then owns the strategy at scale)."""
-    from formula1_etl_analytics_project_spark.operators.joins import (
-        broadcast_if_small,
-    )
+    from formula1_etl_analytics_project_spark.operators import joins
     from formula1_etl_analytics_project_spark.sources.readers import read_table
 
     customer = read_table(spark, SF, "customer")
-    hinted = broadcast_if_small(customer)  # tiny at sf0.001 -> pinned
+    hinted = joins.broadcast_if_small(customer)  # tiny at sf0.001 -> pinned
     assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
     # simulated 100 TB: estimate exceeds the gate -> identity, no hint
-    assert broadcast_if_small(customer, max_bytes=1) is customer
+    monkeypatch.setattr(joins, "_BOUNDED_DIM_BYTES", 1)
+    assert joins.broadcast_if_small(customer) is customer
 
 
 def test_size_gate_memoizes_stats_decision(spark):
@@ -71,7 +70,7 @@ def test_size_gate_memoizes_stats_decision(spark):
     from formula1_etl_analytics_project_spark.operators import joins
     from formula1_etl_analytics_project_spark.sources.readers import read_table
 
-    joins.clear_size_gate_cache()
+    joins._SIZE_CACHE.clear()
     customer = read_table(spark, SF, "customer")
     joins.broadcast_if_small(customer)
     key = (id(customer.sparkSession), customer.semanticHash())
@@ -79,20 +78,18 @@ def test_size_gate_memoizes_stats_decision(spark):
     joins._SIZE_CACHE[key] = 1 << 60  # pretend the table is huge
     fresh = read_table(spark, SF, "customer")
     assert joins.broadcast_if_small(fresh) is fresh  # cache hit -> no hint
-    joins.clear_size_gate_cache()
+    joins._SIZE_CACHE.clear()
     hinted = joins.broadcast_if_small(fresh)  # cache cleared -> re-evaluates
     assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
 
 
-def test_star_join_survives_unhinted_growing_dim(spark):
+def test_star_join_survives_unhinted_growing_dim(spark, monkeypatch):
     """The star join must still execute - bounded dims broadcast, the
     scale-growing customer side falling back to a shuffle join - when
     the gate refuses customer's hint (what happens at real scale)."""
     from pyspark.sql import functions as F
 
-    from formula1_etl_analytics_project_spark.operators.joins import (
-        broadcast_if_small,
-    )
+    from formula1_etl_analytics_project_spark.operators import joins
     from formula1_etl_analytics_project_spark.sources.readers import read_table
 
     li = read_table(spark, SF, "lineitem")
@@ -100,13 +97,14 @@ def test_star_join_survives_unhinted_growing_dim(spark):
     customer = read_table(spark, SF, "customer")
     nation = read_table(spark, SF, "nation")
     region = read_table(spark, SF, "region")
+    monkeypatch.setattr(joins, "_BOUNDED_DIM_BYTES", 1)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .join(
-                broadcast_if_small(customer, max_bytes=1),
+                joins.broadcast_if_small(customer),
                 F.col("o_custkey") == F.col("c_custkey"),
             )
             .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
